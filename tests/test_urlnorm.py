@@ -187,6 +187,9 @@ def test_drop_url_dups_narrow_matches_marks_and_keeps_payloads_out_of_exchange(s
         if ") Exchange" in line:
             block = "\n".join(lines[i : i + 3])
             assert "html" not in block, f"payload in exchange:\n{block}"
+
+
+def test_url_dup_marks_null_ts_never_beats_dated_crawl(spark):
     """An undated capture (NULL warc_ts) must not survive over the earliest
     DATED crawl: ascending sort puts NULL first unless NULLS LAST (r04
     review)."""

@@ -10,11 +10,14 @@ Local sandbox run (same code path, local master):
     python tools/run_pipeline.py --input <pages_parquet_dir> \
         --output /tmp/wdq_out --metrics /tmp/wdq_metrics --cpus 8
 
-Flow (BASELINE.json:6/14): read pages → validate (enrich → dedup marks →
+Flow (BASELINE.json:6/14): read pages (WARC/WET: parse each segment once
+into a persisted projection → drop recrawl captures) → validate (enrich,
+sealed in its own cache, after which the parse is released → dedup marks →
 rules → scrub → decide) → write results partitioned by warc_ts date (or
-url-host) with a manifest snapshot → append per-partition rule metrics →
-on --resume, partitions already recorded in the output manifest are skipped
-(checkpoint-resume contract).
+url-host) with a manifest snapshot → read this run's written partitions
+back and append per-partition rule metrics (and, with --url-sketches,
+distinct-url sketches) from them → on --resume, partitions already
+recorded in the output manifest are skipped (checkpoint-resume contract).
 """
 
 from __future__ import annotations
@@ -78,15 +81,33 @@ def main(argv: list[str] | None = None) -> int:
     args = ap.parse_args(argv)
 
     from wikidataquality_spark.deploy import ensure_shipped
-    from wikidataquality_spark.io.catalog import resume_filter, write_partitioned
-    from wikidataquality_spark.metrics import partition_column, rule_metrics
-    from wikidataquality_spark.pipeline import results, validate
     from wikidataquality_spark.session import get_spark
 
     spark = get_spark(cpus=args.cpus, app_name="wdq_pipeline")
     ensure_shipped(spark)
+    # frames this call persists (the WARC parse, resume fingerprints,
+    # validate()'s enrich cache), released on every way out: a caller that
+    # runs main() repeatedly in one session must not inherit them — a later
+    # call over the same input path would be served this call's cached rows
+    cached: list = []
+    try:
+        return _run(spark, args, cached)
+    finally:
+        for df in cached:
+            df.unpersist()
+
+
+def _run(spark, args: argparse.Namespace, cached: list) -> int:
+    from wikidataquality_spark.io.catalog import (
+        read_run,
+        resume_filter,
+        write_partitioned,
+    )
+    from wikidataquality_spark.metrics import partition_column, rule_metrics
+    from wikidataquality_spark.pipeline import results, validate
 
     t0 = time.perf_counter()
+    parsed = None
     if args.input_format in ("warc", "wet"):
         from wikidataquality_spark.io.warc import (
             read_warc,
@@ -96,7 +117,13 @@ def main(argv: list[str] | None = None) -> int:
         from wikidataquality_spark.operators.dedup import drop_url_dups_narrow
 
         project = warc_to_documents if args.input_format == "warc" else wet_to_documents
-        pages = project(read_warc(spark, args.input))
+        # one parse per call: the recrawl drop below reads its input twice
+        # (narrow drop-key side + fat anti-join side), and the emptiness
+        # probe and validate()'s enrich seal each evaluate the plan again —
+        # without the persist every one of them decompresses and parses
+        # every segment. Released as soon as the enrich seal has run.
+        parsed = project(read_warc(spark, args.input)).persist()
+        cached.append(parsed)
         # a real crawl captures the same url repeatedly (recrawls, http/https
         # and www variants) — but the DAG's dedup anchors key on url, so two
         # rows SHARING one url can never flag each other, and the per-url
@@ -107,7 +134,7 @@ def main(argv: list[str] | None = None) -> int:
         # broadcastable) drop-key set (r04 ADVICE). Parquet inputs are
         # assumed already url-unique (the datagen/Iceberg contract), which
         # is why this lives on the ingest path only.
-        pages = drop_url_dups_narrow(pages)
+        pages = drop_url_dups_narrow(parsed)
     else:
         pages = spark.read.parquet(args.input)
     pages = partition_column(pages, by=args.partition_by)
@@ -179,6 +206,8 @@ def main(argv: list[str] | None = None) -> int:
     # the whole input before validation — at corpus scale that scan is a
     # second 100 TB read. The docs total comes back from the write manifest
     # (validate() annotates every input row, so written rows == input rows).
+    # On the WARC/WET path the probe's broadcast drop-key side reads every
+    # parsed record, so it is the action that fills the parse cache.
     if pages.isEmpty():
         print(json.dumps({"status": "nothing_to_do", "input": args.input}))
         return 0
@@ -188,14 +217,31 @@ def main(argv: list[str] | None = None) -> int:
         from wikidataquality_spark.pipeline import PipelineConfig
 
         cfg = PipelineConfig(normalize_text=True)
-    validated = validate(pages, config=cfg, dedup_state=dedup_state)
+    validated = validate(
+        pages, config=cfg, dedup_state=dedup_state, persist_registry=cached
+    )
+    if parsed is not None:
+        # validate() has sealed its enrich cache, so the write below reads
+        # that instead of the parse. The resume fingerprints are the parse's
+        # one remaining consumer (dup_marks reads them twice): seal them
+        # from the parse cache too, or a resumed run would re-parse every
+        # segment for its completed partitions.
+        if dedup_state is not None:
+            dedup_state = dedup_state.persist()
+            cached.append(dedup_state)
+            dedup_state.write.format("noop").mode("overwrite").save()
+        parsed.unpersist()
     out = validated.select(*results(validated).columns, "partition")
     entry = write_partitioned(
         out, args.output, partition_col="partition", run_id=args.run_id,
         input_snapshot=args.input, config_fingerprint=cfg_fp,
     )
     n_in = entry["rows"]
-    metrics = rule_metrics(validated, by=args.partition_by)
+    # rule metrics (and url sketches) aggregate the partitions this run just
+    # wrote: a column-pruned read of url/warc_ts/violations, instead of
+    # re-running validated's dedup shuffles and rules from the enrich cache
+    written = read_run(spark, args.output, entry["run_id"])
+    metrics = rule_metrics(written, by=args.partition_by)
     write_partitioned(
         metrics, args.metrics, partition_col="partition", run_id=entry["run_id"],
         input_snapshot=args.input,
@@ -214,7 +260,7 @@ def main(argv: list[str] | None = None) -> int:
                 "dirs accumulate one-per-run and are never overwritten; "
                 "pass a fresh --run-id"
             )
-        distinct_url_sketches(validated, by=args.partition_by).write.mode(
+        distinct_url_sketches(written, by=args.partition_by).write.mode(
             "errorifexists"
         ).parquet(sketch_dir)
     dt = time.perf_counter() - t0

@@ -66,16 +66,6 @@ def rule_metrics(validated: DataFrame, by: str = "date") -> DataFrame:
     )
 
 
-def keep_metrics(validated: DataFrame, by: str = "date") -> DataFrame:
-    """Per-partition keep/drop counts (the headline filter rate)."""
-    df = partition_column(validated, by)
-    return df.groupBy("partition").agg(
-        F.count(F.when(F.col("keep"), 1)).alias("kept"),
-        F.count(F.when(~F.col("keep"), 1)).alias("dropped"),
-        F.count("*").alias("total"),
-    )
-
-
 def distinct_url_sketches(validated: DataFrame, by: str = "date") -> DataFrame:
     """Per-partition mergeable distinct-url sketches (~4 KB binary each,
     operators/distinct_sketch): the metrics-table artifact that answers

@@ -24,7 +24,6 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from wikidataquality_spark.operators.dedup import dup_marks
 from wikidataquality_spark.operators.enrich import enriched
@@ -174,7 +173,3 @@ def results(validated: DataFrame) -> DataFrame:
         "violations",
         "violated_rules",
     )
-
-
-def kept_documents(validated: DataFrame) -> DataFrame:
-    return validated.filter(F.col("keep")).select("url", "warc_ts", "scrubbed_text")
