@@ -121,11 +121,11 @@ def test_neardup_clusters_over_minhash_pairs(spark, sf001_dir):
     collisions at sf0.01, cluster them, and check (a) every edge endpoint
     pair shares a component, (b) exactly one survivor per cluster, (c) the
     survivor is the component min, (d) sizes sum to the node count."""
-    from wikidataquality_spark.operators.dedup import band_keys, minhash_udf
+    from wikidataquality_spark.operators.dedup import band_keys_sql, minhash_udf
 
     docs = spark.read.parquet(f"{sf001_dir}/documents.parquet")
-    bands = docs.select(
-        "doc_id", F.explode(band_keys(minhash_udf(F.col("text")))).alias("bk")
+    bands = docs.select("doc_id", minhash_udf(F.col("text")).alias("sig")).selectExpr(
+        "doc_id", f"explode({band_keys_sql('sig')}) AS bk"
     )
     pairs = (
         bands.alias("a")

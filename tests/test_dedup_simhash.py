@@ -167,6 +167,47 @@ def test_contentless_text_exempt_from_near_dup(spark):
     assert fp.filter((F.col("url") == "u2") & (F.col("kind") != STATE_BAND_KIND)).count() == 1
 
 
+_NEAR_A = "the quick brown fox jumps over the lazy dog again " * 3
+_SIG_PARITY_ROWS = [
+    ("u1", None),
+    ("u2", "\u00a0\u00a0"),  # NBSP-only: passes rlike('\\S'), zero tokens
+    ("u3", "\x1c"),  # separator-only: Python split() whitespace, not Java \s
+    ("u4", "an exact duplicate document body about river banks"),
+    ("u5", "an exact duplicate document body about river banks"),
+    ("u6", _NEAR_A),
+    ("u7", _NEAR_A.replace("lazy", "idle", 1)),  # near-dup of u6
+    ("u8", "completely different content about spark shuffles and planners"),
+]
+
+
+@pytest.mark.parametrize("op", ["dup_marks", "dup_fingerprints"])
+def test_signature_column_matches_udf_path(spark, op):
+    """The two ways of supplying signatures give the same rows: a
+    precomputed column (sig_col — what the fused enrich stage hands
+    validate()'s dup_marks) and the operator's own minhash_udf pass (what
+    curate() and the state writers use), over every exemption case."""
+    import wikidataquality_spark.operators.dedup as D
+
+    df = spark.createDataFrame(_SIG_PARITY_ROWS, "url string, text string")
+    with_sig = df.withColumn("sig", D.minhash_udf(F.col("text")))
+    fn = getattr(D, op)
+    cols = (
+        ["url", "is_exact_dup", "is_near_dup"]
+        if op == "dup_marks"
+        else ["url", "kind", "k1", "k2"]
+    )
+
+    def rows(out):
+        return sorted(tuple(r) for r in out.select(*cols).collect())
+
+    via_udf = rows(fn(df))
+    assert rows(fn(with_sig, sig_col="sig")) == via_udf
+    if op == "dup_marks":  # premise: the corpus exercises both flags
+        flags = {r[0]: r[1:] for r in via_udf}
+        assert flags["u5"] == (True, True) and flags["u7"] == (False, True)
+        assert flags["u2"] == flags["u3"] == (False, False)
+
+
 def test_short_doc_word_order_distinguishes(spark):
     """Sub-SHINGLE_K docs collapse to one shingle; the combiner must be
     position-sensitive — a plain token-hash sum made 'river bank' and

@@ -234,6 +234,42 @@ def test_pq_screened_path_keeps_vectors_out_of_exchanges(spark, planted):
             assert "_unit" not in block and "_nvec" not in block, block
 
 
+def test_sdc_score_exact_beside_null_code_row(spark):
+    """A NULL-code row in the same Arrow batch as a valid pair must not
+    touch the valid pair's score. pandas reads a long column holding a NULL
+    as float64, which rounds m=32 packs above 2^53 and corrupts their low
+    codes; the NULL packs therefore enter the UDF as 0."""
+    from wikidataquality_spark.operators.semdedup import _sdc_cos_packed
+
+    m, k = 32, 16
+    rng = np.random.default_rng(5)
+    tabs = rng.uniform(-1.0, 1.0, size=(m, k * k)).tolist()
+    ca = [int(x) for x in rng.integers(0, k, size=m)]
+    cb = [int(x) for x in rng.integers(0, k, size=m)]
+    ca[0], ca[15], cb[0], cb[15] = 1, 7, 3, 5  # odd low code, pack > 2^53
+
+    def pack(codes):
+        return [
+            sum(c << (4 * (j - g)) for j, c in enumerate(codes[g : g + 16], g))
+            for g in (0, 16)
+        ]
+
+    pa, pb = pack(ca), pack(cb)
+    assert abs(pa[0]) > 2**53 and abs(pb[0]) > 2**53
+    replay = 0.0
+    for j in range(m):
+        replay += tabs[j][ca[j] * k + cb[j]]
+    df = spark.createDataFrame(
+        [(0, None, None, None, None), (1, *pa, *pb)],
+        "i int, a0 long, a1 long, b0 long, b1 long",
+    ).coalesce(1)  # one task, one Arrow batch
+    sdc = _sdc_cos_packed(
+        [F.col("a0"), F.col("a1")], [F.col("b0"), F.col("b1")], tabs, k
+    )
+    got = {r["i"]: r["s"] for r in df.select("i", sdc.alias("s")).collect()}
+    assert got[1] == replay
+
+
 def test_dense_cell_split_bounds_pairs_and_undermarks_safely(spark):
     """The hard cell-size bound (r04 VERDICT #1): with max_cell_rows=8 and
     exact counting (cell_count_sample=1), a 24-member dense cell splits into

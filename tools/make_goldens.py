@@ -52,7 +52,7 @@ def freeze_signature_fixtures(spark) -> None:
     from pyspark.sql import functions as F
 
     from wikidataquality_spark.operators.dedup import (
-        band_keys,
+        band_keys_sql,
         minhash_udf,
         simhash_band_keys,
         simhash_udf,
@@ -62,7 +62,7 @@ def freeze_signature_fixtures(spark) -> None:
     docs = spark.read.parquet(os.path.join(SF001_DIR, "documents.parquet"))
     sigs = docs.select("doc_id", minhash_udf(F.col("text")).alias("_sig"))
     _freeze(
-        sigs.select("doc_id", F.explode(band_keys("_sig")).alias("band_key")),
+        sigs.selectExpr("doc_id", f"explode({band_keys_sql('_sig')}) AS band_key"),
         "minhash_bands_sf001.parquet",
     )
     # full signatures for the verify stage's oracle (component agreement —

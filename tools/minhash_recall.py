@@ -77,7 +77,7 @@ def main() -> int:
         sigs.append(_minhash_sig(base, a, b))
     n = len(shingle_sets)
 
-    # band buckets exactly as band_keys() groups them: (band index, row tuple)
+    # band buckets exactly as band_keys_sql() groups them: (band index, row tuple)
     buckets: dict[tuple, set[int]] = {}
     for i, sig in enumerate(sigs):
         for bd in range(MINHASH_BANDS):

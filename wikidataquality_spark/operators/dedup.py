@@ -232,26 +232,24 @@ def minhash_udf(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
         yield minhash_sig_series(texts, a, b, vocab)
 
 
-def band_keys(sig_col: str | Column = "minhash_sig") -> Column:
-    """B band keys per signature: xxhash64(band_index, signature slice)."""
-    sig = F.col(sig_col) if isinstance(sig_col, str) else sig_col
-    keys = [
-        F.xxhash64(F.lit(i), F.slice(sig, i * MINHASH_ROWS + 1, MINHASH_ROWS))
-        for i in range(MINHASH_BANDS)
-    ]
-    return F.array(*keys)
-
-
 def band_keys_sql(sig_name: str) -> str:
-    """SQL-string twin of band_keys (bit-identical: int literals hash like
-    F.lit(int)). String composition avoids ~3 py4j round trips per band per
-    plan construction — driver-serial time (rules/model.CheckExpr)."""
+    """B band keys per signature as a SQL array expression:
+    xxhash64(band_index, signature slice). String composition avoids ~3 py4j
+    round trips per band per plan construction — driver-serial time
+    (rules/model.CheckExpr)."""
     qsig = sql_ident(sig_name)
     keys = ", ".join(
         f"xxhash64({i}, slice({qsig}, {i * MINHASH_ROWS + 1}, {MINHASH_ROWS}))"
         for i in range(MINHASH_BANDS)
     )
     return f"array({keys})"
+
+
+# One row per band key of `_sig`. Explode of the CASE: NULL-signature
+# (token-less) rows emit no band rows without a filter on the UDF output,
+# which would re-extract the UDF into a second ArrowEvalPython stage (filter
+# + projection each evaluate it) — the CASE keeps ONE consumer.
+_EXPLODE_BANDS = f"explode(CASE WHEN _sig IS NOT NULL THEN {band_keys_sql('_sig')} END)"
 
 
 def sig_match_count(a: Column, b: Column) -> Column:
@@ -265,18 +263,82 @@ def sig_match_count(a: Column, b: Column) -> Column:
     )
 
 
+def _keyed(
+    df: DataFrame, text_col: str, id_col: str, sig_col: str | None
+) -> DataFrame:
+    """The narrow keyed projection every MinHash flag and fingerprint reads:
+    (id, _h, _h2, _sig) over non-NULL text. _h/_h2 are the two independently
+    seeded 64-bit text hashes of the exact window (the leading literal in
+    xxhash64(1, text) changes the seed of the text fold); _sig is `sig_col`
+    when the caller already carries signatures (the fused enrich stage —
+    then no python stage runs here at all), else one minhash_udf pass.
+
+    NULL text is exempt (unknown content is not duplicate content):
+    xxhash64(NULL) is a CONSTANT and band keys of a NULL signature collapse
+    to xxhash64(band_i), so without the filter every extraction-failure doc
+    would flag as a dup of unrelated pages. Token-less text keeps its row
+    (byte-IDENTICAL whitespace pages ARE legitimately exact dups) but has a
+    NULL _sig, so it emits no band rows: the near exemption is defined by
+    the tokenizer itself (a regex gate diverged on unicode whitespace)."""
+    qtext = sql_ident(text_col)
+    sig = F.col(sig_col) if sig_col is not None else minhash_udf(F.col(text_col))
+    return df.where(f"{qtext} IS NOT NULL").select(
+        F.col(id_col),
+        F.expr(f"xxhash64({qtext})").alias("_h"),
+        F.expr(f"xxhash64(1, {qtext})").alias("_h2"),
+        sig.alias("_sig"),
+    )
+
+
+def _band_candidates(
+    sigs: DataFrame, id_col: str, state: DataFrame | None = None
+) -> DataFrame:
+    """The band window: (id, _keep_id) for every batch row that shares an
+    LSH band bucket with a row it does not survive. `sigs` carries (id,
+    _sig); each signature explodes to B (band key, id) rows, and
+    min(id) OVER (PARTITION BY _band_key) picks the bucket's survivor — ONE
+    narrow exchange, no groupBy + self-join.
+
+    `state` band rows (dup_fingerprints schema) join the same buckets and
+    sort first: a bucket holding ANY state row flags every batch row in it
+    (the already-written copy survives); otherwise the min id within the
+    batch survives. The state flag piggybacks on the same window
+    partitioning — no extra shuffle. Rows of such a bucket may carry
+    id == _keep_id (the batch min); they are candidates all the same."""
+    qid = sql_ident(id_col)
+    bands = sigs.selectExpr(qid, f"{_EXPLODE_BANDS} AS _band_key", "FALSE AS _from_state")
+    if state is not None:
+        bands = bands.unionByName(
+            state.filter(F.col("kind") == STATE_BAND_KIND).select(
+                F.col(id_col),
+                F.col("k1").alias("_band_key"),
+                F.lit(True).alias("_from_state"),
+            )
+        )
+    return (
+        bands.selectExpr(
+            qid,
+            "_from_state",
+            f"min({qid}) OVER (PARTITION BY _band_key) AS _keep_id",
+            "max(CASE WHEN _from_state THEN 1 ELSE 0 END)"
+            " OVER (PARTITION BY _band_key) AS _has_state",
+        )
+        .filter(f"(_has_state = 1 OR {qid} != _keep_id) AND (NOT _from_state)")
+        .select(id_col, "_keep_id")
+    )
+
+
 def minhash_dedup(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "url",
     verify: bool = True,
-    verify_min_eq: int = MINHASH_VERIFY_MIN_EQ,
 ) -> DataFrame:
     """Drop near-duplicates: a row is dropped when an LSH band bucket
     contains a row with a smaller id (deterministic min-id survivor per
     bucket) AND — with verify=True, the default — the pair's signature
-    component agreement confirms the similarity (≥ verify_min_eq of H=128
-    components equal; see MINHASH_VERIFY_MIN_EQ's derivation).
+    component agreement confirms the similarity (≥ MINHASH_VERIFY_MIN_EQ of
+    H=128 components equal; see its derivation).
 
     Why verify is default-ON for THIS operator (r04 VERDICT #2): dropping is
     unrecoverable, and the measured planted sweep showed band collisions at
@@ -289,40 +351,29 @@ def minhash_dedup(
     band keys only — verified flags against state would need a
     signature-bearing state kind, the documented v3 upgrade path.
 
-    Plan shape: one pandas-UDF projection (signatures), one explode (B
-    rows/doc, key+id only), min(id) OVER (PARTITION BY band_key) — ONE
-    narrow exchange, single UDF consumer (r04 review) — then, for verify,
-    candidate PAIRS (id, keep_id) re-fetch their signatures through a
-    broadcast-semi-joined re-run of the UDF over candidate rows only
-    (candidates are the dup-ish fraction of the corpus, so the second UDF
-    pass touches few docs and both sig joins broadcast; a corpus that is
-    MOSTLY duplicates should pass verify=False — collision-only semantics,
-    zero extra cost — or budget for candidate-scale shuffles). Greedy
-    min-anchor caveat shared with simhash_dedup: verification is against
-    the bucket's anchor specifically, so a chain A<B<C where C resembles B
-    but not A keeps C when A anchors every shared bucket — collision-only
-    dedup dropped C on B's bucket alone.
+    Plan shape: one pandas-UDF projection (signatures), the band window
+    shared with dup_marks (_band_candidates) — ONE narrow exchange, single
+    UDF consumer (r04 review) — then, for verify, candidate PAIRS
+    (id, keep_id) re-fetch their signatures through a broadcast-semi-joined
+    re-run of the UDF over candidate rows only (candidates are the dup-ish
+    fraction of the corpus, so the second UDF pass touches few docs and both
+    sig joins broadcast; a corpus that is MOSTLY duplicates should pass
+    verify=False — collision-only semantics, zero extra cost — or budget for
+    candidate-scale shuffles). Greedy min-anchor caveat shared with
+    simhash_dedup: verification is against the bucket's anchor
+    specifically, so a chain A<B<C where C resembles B but not A keeps C
+    when A anchors every shared bucket — collision-only dedup dropped C on
+    B's bucket alone.
     """
     # contentless docs (NULL or token-less text) are exempt: the rlike is a
-    # cheap sound pre-filter, the NULL-signature filter is the tokenizer-
-    # defined authority — see has_dedupable_content
+    # cheap sound pre-filter, the NULL-signature band explode is the
+    # tokenizer-defined authority — see has_dedupable_content
     sigs = df.filter(has_dedupable_content(text_col)).select(
         F.col(id_col), minhash_udf(F.col(text_col)).alias("_sig")
     )
-    # NULL-signature (token-less) rows drop out via explode-of-NULL — a
-    # filter on the UDF output would re-extract the UDF into a second
-    # ArrowEvalPython stage (filter + projection each evaluate it); the
-    # CASE keeps ONE consumer and explode skips NULL arrays
-    bands = sigs.select(
-        id_col,
-        F.explode(
-            F.when(F.col("_sig").isNotNull(), band_keys(F.col("_sig")))
-        ).alias("_band_key"),
-    )
     cand = (
-        bands.withColumn("_keep_id", F.min(id_col).over(W.partitionBy("_band_key")))
+        _band_candidates(sigs, id_col)
         .filter(F.col(id_col) != F.col("_keep_id"))
-        .select(id_col, "_keep_id")
         .distinct()
     )
     if not verify:
@@ -355,7 +406,8 @@ def minhash_dedup(
             "_keep_id",
         )
         .filter(
-            sig_match_count(F.col("_sig_a"), F.col("_sig_b")) >= F.lit(verify_min_eq)
+            sig_match_count(F.col("_sig_a"), F.col("_sig_b"))
+            >= F.lit(MINHASH_VERIFY_MIN_EQ)
         )
         .select(id_col)
         .distinct()
@@ -367,22 +419,20 @@ def dup_marks(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "url",
-    broadcast_flags: bool = True,
     sig_col: str | None = None,
     state: DataFrame | None = None,
 ) -> DataFrame:
     """Non-destructive variant: annotate rows with is_exact_dup / is_near_dup
     flags so the rule layer can emit violation records instead of dropping.
 
-    Shuffle hygiene: both flag computations run on a NARROW projection
-    (id + 16-byte hash / 1KB signature) — document bodies never enter a
-    shuffle. When the caller already carries minhash signatures (the fused
-    enrich stage emits them — pass sig_col), NO python stage runs here at
-    all: the keyed projection is pure JVM expressions over the cached frame.
+    Shuffle hygiene: both flag computations run on the narrow keyed
+    projection (_keyed: id + 16-byte hash + 1KB signature) — document bodies
+    never enter a shuffle. When the caller already carries minhash
+    signatures (the fused enrich stage emits them — pass sig_col), NO python
+    stage runs here at all.
 
-    Plan shape: one shuffle for the exact window, one for the band window,
-    one small distinct; the near flag uses min(id) OVER (PARTITION BY bucket)
-    instead of groupBy+self-join (one exchange fewer, no join).
+    Plan shape: one shuffle for the exact window, one for the band window
+    (_band_candidates, shared with minhash_dedup), one small distinct.
 
     `state` (optional) makes the operator INCREMENTAL: a fingerprint table of
     previously-processed documents (schema of `dup_fingerprints`: id, kind
@@ -398,48 +448,26 @@ def dup_marks(
     every batch id — streaming/windows.py enforces this), and degrade to
     written-copy-wins otherwise (partition resume). State rows whose id
     collides with a batch id are dropped first, so a retried batch
-    (exactly-once resume) never flags itself."""
+    (exactly-once resume) never flags itself.
+
+    The flag rows rejoin the input through a broadcast. They are SPARSE:
+    only rows that ARE duplicates enter it — a row absent from the flag set
+    is non-dup by construction (left join + false fill). The dup set is a
+    small fraction of a typical corpus, so the driver-side broadcast build
+    (the one serial step of the whole dedup stage — measured ~1.5s for a
+    dense 200k-row build) shrinks with the dup rate."""
     qid = sql_ident(id_col)
-    qtext = sql_ident(text_col)
     # SQL-string plan construction (one selectExpr per step instead of a py4j
     # round trip per sub-expression) — dup_marks cost ~0.35s of driver-serial
     # plan-build time per invocation the Column way (rules/model.CheckExpr).
-    # NULL text is exempt from both flag paths (unknown content is not
-    # duplicate content): xxhash64(NULL) is a CONSTANT and band keys of a
-    # NULL signature collapse to xxhash64(band_i), so without the filter
-    # every extraction-failure doc would flag as a dup of unrelated pages —
-    # and since every rule is NULL-inapplicable, those spurious flags would
-    # be the sole keep/drop decider for exactly those docs.
-    # The NEAR path additionally exempts token-less text (r04 review):
-    # byte-DIFFERENT contentless docs must not near-dup each other, but
-    # byte-IDENTICAL whitespace pages ARE legitimately exact dups, so the
-    # exact window keeps the NULL-only exemption. The near gate is
-    # `_sig IS NOT NULL` — the signature UDF emits NULL for token-less
-    # text, so the exemption is defined by the tokenizer itself (a regex
-    # gate diverged on unicode whitespace).
-    if sig_col is not None:
-        qsig = sql_ident(sig_col)
-        keyed = df.where(f"{qtext} IS NOT NULL").selectExpr(
-            qid,
-            f"xxhash64({qtext}) AS _h",
-            f"xxhash64(1, {qtext}) AS _h2",
-            f"{qsig} AS _sig",
-        )
-    else:
-        keyed = df.filter(F.col(text_col).isNotNull()).select(
-            F.col(id_col),
-            F.xxhash64(text_col).alias("_h"),
-            F.xxhash64(F.lit(1), F.col(text_col)).alias("_h2"),
-            minhash_udf(F.col(text_col)).alias("_sig"),
-        )
+    keyed = _keyed(df, text_col, id_col, sig_col)
     if state is not None:
         state = state.join(keyed.select(id_col), id_col, "left_anti")
 
-    # exact identity = BOTH independently-seeded 64-bit hashes equal (the
-    # leading literal in xxhash64(1, text) changes the seed of the text
-    # fold): false-positive probability ~2⁻¹²⁸ per pair — negligible at
-    # 10¹² docs, where a single 64-bit key yields ~10⁴ real collisions and
-    # each one silently drops a unique document.
+    # exact identity = BOTH independently-seeded 64-bit hashes equal:
+    # false-positive probability ~2⁻¹²⁸ per pair — negligible at 10¹² docs,
+    # where a single 64-bit key yields ~10⁴ real collisions and each one
+    # silently drops a unique document.
     exact_in = keyed.selectExpr(qid, "_h", "_h2", "FALSE AS _from_state")
     if state is not None:
         exact_in = exact_in.unionByName(
@@ -473,49 +501,12 @@ def dup_marks(
         .groupBy(id_col)
         .agg(F.expr("bool_and(_inst_dup)").alias("is_exact_dup"))
     )
-
-    bands = keyed.selectExpr(
-        qid,
-        # explode of the CASE: NULL-signature (token-less) rows emit no
-        # band rows — same single-UDF-consumer rationale as minhash_dedup
-        f"explode(CASE WHEN _sig IS NOT NULL THEN {band_keys_sql('_sig')} END)"
-        " AS _band_key",
-        "FALSE AS _from_state",
-    )
-    if state is not None:
-        bands = bands.unionByName(
-            state.filter(F.col("kind") == STATE_BAND_KIND).select(
-                F.col(id_col),
-                F.col("k1").alias("_band_key"),
-                F.lit(True).alias("_from_state"),
-            )
-        )
-    # same state precedence as the exact window: a bucket containing ANY
-    # state row flags every batch row in it (the written copy survives);
-    # otherwise min-id within the batch. bool_or piggybacks on the same
-    # window partitioning — no extra shuffle.
     near = (
-        bands.selectExpr(
-            qid,
-            "_from_state",
-            f"min({qid}) OVER (PARTITION BY _band_key) AS _keep_id",
-            "max(CASE WHEN _from_state THEN 1 ELSE 0 END)"
-            " OVER (PARTITION BY _band_key) AS _has_state",
-        )
-        .filter(f"(_has_state = 1 OR {qid} != _keep_id) AND (NOT _from_state)")
+        _band_candidates(keyed, id_col, state)
         .select(id_col)
         .distinct()
         .selectExpr(qid, "TRUE AS is_near_dup")
     )
-    # SPARSE flags: only rows that ARE duplicates enter the broadcast — a row
-    # absent from the flag set is non-dup by construction (left join + false
-    # fill below). The dup set is a small fraction of the corpus, so the
-    # driver-side broadcast build (the one serial step of the whole dedup
-    # stage — measured ~1.5s for a dense 200k-row build) shrinks with the dup
-    # rate, and the broadcast path stays feasible far deeper into the
-    # 10^12-doc regime. Beyond that, broadcast_flags=False selects the
-    # sort-merge rejoin riding the bucketed-by-id table layout (both sides
-    # bucket-pruned, zero shuffle).
     flags = (
         exact
         .join(near, id_col, "left")
@@ -526,9 +517,7 @@ def dup_marks(
         )
         .filter("is_exact_dup OR is_near_dup")
     )
-    if broadcast_flags:
-        flags = F.broadcast(flags)
-    out = df.join(flags, id_col, "left")
+    out = df.join(F.broadcast(flags), id_col, "left")
     return out.withColumns(
         {
             "is_exact_dup": F.expr("coalesce(is_exact_dup, FALSE)"),
@@ -548,32 +537,17 @@ def dup_fingerprints(
     k2 = xxhash64(1, text) — the independent second hash of the exact
     window) plus one band-kind row per LSH band key (k2 = 0). ~24 bytes ×
     (1 + B) rows per document — the only thing a later batch needs to dedup
-    against this one; document bodies never persist into state."""
-    sig_expr = (
-        F.col(sig_col) if sig_col is not None else minhash_udf(F.col(text_col))
+    against this one; document bodies never persist into state. Built from
+    dup_marks' own keyed projection, so NULL-text docs emit no fingerprints
+    and token-less docs no BAND fingerprints — state and batch stay
+    aligned by construction."""
+    qid = sql_ident(id_col)
+    keyed = _keyed(df, text_col, id_col, sig_col)
+    exact = keyed.selectExpr(
+        qid, f"'{STATE_EXACT_KIND}' AS kind", "_h AS k1", "_h2 AS k2"
     )
-    # NULL-text docs emit no fingerprints, and token-less docs (NULL
-    # signature) emit no BAND fingerprints — mirroring dup_marks' exemptions
-    # exactly so state and batch stay aligned
-    keyed = df.filter(F.col(text_col).isNotNull()).select(
-        F.col(id_col),
-        F.xxhash64(text_col).alias("_h"),
-        F.xxhash64(F.lit(1), F.col(text_col)).alias("_h2"),
-        sig_expr.alias("_sig"),
-    )
-    exact = keyed.select(
-        id_col,
-        F.lit(STATE_EXACT_KIND).alias("kind"),
-        F.col("_h").alias("k1"),
-        F.col("_h2").alias("k2"),
-    )
-    band = keyed.select(
-        id_col,
-        F.lit(STATE_BAND_KIND).alias("kind"),
-        F.explode(
-            F.when(F.col("_sig").isNotNull(), band_keys(F.col("_sig")))
-        ).alias("k1"),
-        F.lit(0).cast("long").alias("k2"),
+    band = keyed.selectExpr(
+        qid, f"'{STATE_BAND_KIND}' AS kind", f"{_EXPLODE_BANDS} AS k1", "0L AS k2"
     )
     return exact.unionByName(band)
 
@@ -835,7 +809,6 @@ def drop_url_dups_narrow(
     df: DataFrame,
     url_col: str = "url",
     ts_col: str = "warc_ts",
-    broadcast_drop_keys: bool = True,
 ) -> DataFrame:
     """Recrawl-dedup for FAT frames (rows carrying html payloads): drop the
     rows url_dup_marks would flag, without the payloads ever entering the
@@ -845,15 +818,11 @@ def drop_url_dups_narrow(
     making the ingest path's first exchange corpus-sized (r04 ADVICE).
 
     Shape: marks are computed on a ~24 B (url, ts) projection; the fat frame
-    then LEFT-ANTI joins the DROP-key set, broadcast by default (the hint is
-    needed: a fresh aggregate has no stats, so the planner picks a
-    sort-merge join that would shuffle the fat side — verified live). The
-    drop side is recrawl duplicates only, a small fraction of any real
-    crawl batch, so the fat side never exchanges at all. For a pathological
-    corpus whose dup-key set exceeds executor memory, pass
-    broadcast_drop_keys=False: the fallback sort-merge anti join costs one
-    fat shuffle — exactly what the old direct-window formulation always
-    cost, never more.
+    then LEFT-ANTI joins the broadcast DROP-key set (the hint is needed: a
+    fresh aggregate has no stats, so the planner picks a sort-merge join
+    that would shuffle the fat side — verified live). The drop side is
+    recrawl duplicates only, a small fraction of any real crawl batch, so
+    the fat side never exchanges at all.
 
     Tie semantics (vs url_dup_marks' arbitrary-survivor caveat): a key whose
     captures are FULLY tied on (canonical, ts, url) appears as both survivor
@@ -871,12 +840,10 @@ def drop_url_dups_narrow(
         .filter(F.col("_all_dup") == 1)
         .select(F.col(url_col).alias("_du"), F.col(ts_col).alias("_dt"))
     )
-    if broadcast_drop_keys:
-        drop_keys = F.broadcast(drop_keys)
     cond = F.col(url_col).eqNullSafe(F.col("_du")) & F.col(ts_col).eqNullSafe(
         F.col("_dt")
     )
-    return df.join(drop_keys, cond, "left_anti")
+    return df.join(F.broadcast(drop_keys), cond, "left_anti")
 
 
 def host_of(url_col: str | Column = "url") -> Column:

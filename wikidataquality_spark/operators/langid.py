@@ -5,24 +5,20 @@ Parity: recasts the TypeChecker "classifier membership" family
 P31/P279 class-hierarchy walk, membership is a model's label. The OneOf rule
 (ref≈Checker/OneOfChecker.php) then checks lang_pred ∈ allowed.
 
-Implementation: Iterator-of-Series pandas UDF — the model is constructed ONCE
-per Python worker (outside the batch loop), then applied to every Arrow batch
-(the fastText idiom from SURVEY.md §2A#8). The model here is a deterministic,
-dependency-free stand-in: per-language function-word hit rates + a CJK
-character-ratio channel. A real fastText .bin drops into _load_model() with
-the same interface.
+Implementation: the model runs inside the fused enrich pandas UDF
+(operators/enrich.py), constructed ONCE per Python worker (outside the batch
+loop), then applied to every Arrow batch (the fastText idiom from SURVEY.md
+§2A#8). The model here is a deterministic, dependency-free stand-in:
+per-language function-word hit rates + a CJK character-ratio channel. A real
+fastText .bin drops into _load_model() with the same interface.
 """
 
 from __future__ import annotations
 
 import re
-from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from wikidataquality_spark.datagen import WORDLISTS
 
@@ -33,13 +29,6 @@ from wikidataquality_spark.operators.tokenize import CJK_RE as _CJK_RANGE
 _CJK_RE = re.compile(_CJK_RANGE)
 
 MODEL_VERSION = "1"
-
-LANGID_RESULT_TYPE = T.StructType(
-    [
-        T.StructField("lang_pred", T.StringType(), True),
-        T.StructField("lang_conf", T.DoubleType(), True),
-    ]
-)
 
 class _MarkerModel:
     """Deterministic stand-in for a fastText langid model.
@@ -93,23 +82,3 @@ class _MarkerModel:
 
 def _load_model() -> _MarkerModel:
     return _MarkerModel()
-
-
-@F.pandas_udf(LANGID_RESULT_TYPE)
-def langid_udf(batches: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
-    model = _load_model()  # once per Python worker, amortized over all batches
-    for texts in batches:
-        yield model.predict(texts)
-
-
-def with_langid(df, text_col: str = "text"):
-    """Append lang_pred + lang_conf columns (one UDF call, struct-expanded)."""
-    res = langid_udf(F.col(text_col))
-    return df.withColumn("_lid", res).select(
-        "*", F.col("_lid.lang_pred").alias("lang_pred"), F.col("_lid.lang_conf").alias("lang_conf")
-    ).drop("_lid")
-
-
-def langid_pred(text_col: str | Column = "text") -> Column:
-    col = F.col(text_col) if isinstance(text_col, str) else text_col
-    return langid_udf(col)["lang_pred"]

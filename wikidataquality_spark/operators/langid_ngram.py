@@ -116,19 +116,6 @@ def langid_ngram_udf(batches: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
         yield model.predict(texts)
 
 
-def with_ngram_langid(df, text_col: str = "text"):
-    res = langid_ngram_udf(F.col(text_col))
-    return (
-        df.withColumn("_nl", res)
-        .select(
-            "*",
-            F.col("_nl.lang_pred").alias("lang_pred_ngram"),
-            F.col("_nl.lang_conf").alias("lang_conf_ngram"),
-        )
-        .drop("_nl")
-    )
-
-
 def ngram_langid(text_col: str | Column = "text") -> Column:
     col = F.col(text_col) if isinstance(text_col, str) else text_col
     return langid_ngram_udf(col)

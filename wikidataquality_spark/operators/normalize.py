@@ -162,12 +162,6 @@ def _repair_series(texts: pd.Series) -> pd.Series:
     return out
 
 
-@F.pandas_udf(T.StringType())
-def repair_mojibake_udf(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
-    for texts in batches:
-        yield _repair_series(texts)
-
-
 # Python re accepts the same \uXXXX escapes as Java — one inventory, three
 # engine spellings (Java/RE2/Python).
 import re as _re

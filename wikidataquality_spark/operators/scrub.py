@@ -48,10 +48,6 @@ def scrub_column(
     return col
 
 
-def with_scrubbed(df, text_col: str = "text", out_col: str = "scrubbed_text"):
-    return df.withColumn(out_col, scrub_column(text_col))
-
-
 def pii_hit_count(text: str | Column = "text") -> Column:
     """How many PII spans a document contains (metrics/violation scoring) —
     once-per-span semantics: a span matching two patterns (an IPv4 inside

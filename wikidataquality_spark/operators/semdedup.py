@@ -172,30 +172,28 @@ def _sdc_cos_packed(
     vectorized gather runs the same j-sequential float64 sums
     (bit-identical to the oracle's left-to-right literals; never np.sum's
     pairwise reduction) at numpy speed, and the whole expression is one
-    py4j call. NULL packed codes surface as NaN inputs and yield NULL —
-    the caller's bypass arm admits those rows to exact verify either way."""
+    py4j call. NULL packs enter the UDF as 0: one NULL in an Arrow batch
+    would make pandas read the whole long column as float64, rounding every
+    pack in the batch to 53 bits and corrupting its low codes. The score of
+    a NULL-code row is never read — the caller's bypass arm admits those
+    rows to exact verify."""
     m = len(tabs)
     tab_np = [[float(x) for x in t] for t in tabs]
     n_packs = len(pa)
+    pa = [F.coalesce(c, F.lit(0).cast("long")) for c in pa]
+    pb = [F.coalesce(c, F.lit(0).cast("long")) for c in pb]
 
     def _compute(a_cols: list, b_cols: list) -> pd.Series:
         T3 = np.asarray(tab_np, dtype=np.float64)  # (m, k·k)
-        cols = list(a_cols) + list(b_cols)
-        na = None
-        for c in cols:
-            cna = c.isna()
-            na = cna if na is None else (na | cna)
-        A = [c.fillna(0).to_numpy(dtype=np.int64) for c in a_cols]
-        B = [c.fillna(0).to_numpy(dtype=np.int64) for c in b_cols]
-        acc = np.zeros(len(cols[0]), dtype=np.float64)
+        A = [c.to_numpy(dtype=np.int64) for c in a_cols]
+        B = [c.to_numpy(dtype=np.int64) for c in b_cols]
+        acc = np.zeros(len(A[0]), dtype=np.float64)
         for j in range(m):
             g, off = divmod(j, 16)
             ia = (A[g] >> (4 * off)) & 15
             ib = (B[g] >> (4 * off)) & 15
             acc = acc + T3[j, ia * k + ib]
-        out = pd.Series(acc, index=cols[0].index, dtype="float64")
-        out[na] = None
-        return out
+        return pd.Series(acc, index=a_cols[0].index, dtype="float64")
 
     # fixed arities: the type-hint UDF machinery rejects *args signatures
     if n_packs == 1:

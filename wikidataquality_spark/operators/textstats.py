@@ -22,11 +22,6 @@ from wikidataquality_spark.operators.heuristics import (
 )
 
 
-def token_count(text: Column) -> Column:
-    """Whitespace token count."""
-    return F.size(words_col(text))
-
-
 # DuckDB spelling of the BPE pre-tokenizer families below (\s spelled out —
 # RE2 and Java agree on these five ASCII whitespace chars + space, which is
 # all the synthetic corpus contains). The ONE shared constant for every

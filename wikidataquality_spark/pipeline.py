@@ -21,7 +21,7 @@ Output schema (FIXTURES.md "expected outputs"):
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
 
@@ -59,7 +59,6 @@ PIPELINE_RULES: tuple[Rule, ...] = (
 @dataclass
 class PipelineConfig:
     rules: tuple[Rule, ...] = PIPELINE_RULES
-    allowed_langs: tuple[str, ...] = ALLOWED_LANGS
     id_col: str = "url"
     # Persist the narrow post-UDF projection: the dedup stage consumes the
     # pipeline twice (flag computation + rejoin), and without a persist the
@@ -67,15 +66,11 @@ class PipelineConfig:
     # cluster scale the equivalent is materializing the stage boundary to
     # Iceberg (which the resume story wants anyway).
     persist_intermediate: bool = True
-    # Drop the fat html column once text is extracted (column pruning by
-    # construction — html must never travel through the dedup shuffles).
-    drop_html: bool = True
     # OPT-IN ftfy-class pre-clean (mojibake repair → NFC → control strip)
     # fused into the enrich pass, BEFORE any stat/model/fingerprint. Default
     # False: the golden fixtures pin byte-identical extracted/scrubbed text,
     # and normalization is a corpus-semantics decision, not a bug fix.
     normalize_text: bool = False
-    extra: dict = field(default_factory=dict)
 
 
 def validate(
@@ -117,13 +112,13 @@ def validate(
         "distinct_line_ratio_stat", "dup_line_char_ratio_stat",
         "alpha_ratio_stat", "has_blockword", "has_pii_email", "minhash_sig",
     ]
+    # The fat html column goes once text is extracted (column pruning by
+    # construction — html must never travel through the dedup shuffles).
     df = pages.withColumn(
         "_enriched", enriched("html", normalize=cfg.normalize_text)
     ).selectExpr(
         "*", *[f"_enriched.{c} AS {c}" for c in enrich_cols]
-    ).drop("_enriched")
-    if cfg.drop_html:
-        df = df.drop("html")
+    ).drop("_enriched", "html")
     if cfg.persist_intermediate:
         # Eager materialization: the dedup stage fans out into several
         # consumers (flag branch, broadcast build, rejoin) that Spark launches

@@ -31,13 +31,6 @@ def rule_check_column(rule: Rule) -> Column:
     return F.expr(rule_check_expr(rule).struct)
 
 
-def violations_column(rules: Sequence[Rule]) -> Column:
-    """All CheckResult structs for the enabled per-row rules, as one array."""
-    return F.expr(
-        "array(" + ", ".join(rule_check_expr(r).struct for r in rules) + ")"
-    )
-
-
 def apply_rules(
     df: DataFrame,
     rules: Sequence[Rule],

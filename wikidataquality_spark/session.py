@@ -38,6 +38,18 @@ _DEFAULTS = {
 }
 
 
+def _default_driver_mem() -> str:
+    """min(24g, half the host's memory): local mode runs every executor
+    thread inside the driver JVM, and a heap sized past the host gets the
+    JVM OOM-killed mid-job instead of spilling."""
+    try:
+        with open("/proc/meminfo") as f:
+            kb = next(int(ln.split()[1]) for ln in f if ln.startswith("MemTotal:"))
+    except OSError:  # no procfs: not Linux
+        return "24g"
+    return f"{min(24 * 1024, kb // 2048)}m"
+
+
 def get_spark(
     cpus: int | None = None,
     shuffle_partitions: int | None = None,
@@ -81,7 +93,10 @@ def get_spark(
         SparkSession.builder.master(master or f"local[{cpus}]")
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_mem(),
+        )
     )
     for k, v in _DEFAULTS.items():
         builder = builder.config(k, v)
