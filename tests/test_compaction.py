@@ -119,9 +119,11 @@ def test_heal_never_touches_a_live_owners_dirs(spark, tmp_path):
     """A LIVE compactor is mid-swap whenever its .old exists: healing it
     would rename the old data back under the owner and crash its
     os.rename(scratch, part_dir) with ENOTEMPTY (r04 ADVICE). _heal must
-    leave every live-pid dir alone — .old (even with the live partition
-    missing, i.e. exactly the mid-swap window) AND scratch."""
+    leave every live owner's dir alone — .old while its partition lock is
+    held (even with the live partition missing, i.e. exactly the mid-swap
+    window) AND a live pid's scratch."""
     from wikidataquality_spark.io.compaction import _heal
+    from wikidataquality_spark.io.locking import exclusive_lock
 
     out = str(tmp_path / "t5")
     _fragmented_dataset(spark, out)
@@ -131,12 +133,31 @@ def test_heal_never_touches_a_live_owners_dirs(spark, tmp_path):
     os.rename(part, old)  # simulate: owner is between its two renames
     scratch = os.path.join(out, f"_compact_{live_pid}_2025-01-02")
     os.makedirs(scratch)
-    _heal(out, "partition")
+    # the owner holds the partition lock for its whole swap
+    with exclusive_lock(os.path.join(out, "_lock_2025-01-01")):
+        _heal(out, "partition")
     assert os.path.isdir(old) and not os.path.exists(part)  # not resurrected
     assert os.path.isdir(scratch)  # not reaped
     # finish the owner's swap by hand — dataset is whole again
     os.rename(old, part)
     os.rmdir(scratch)
+    assert spark.read.parquet(out).count() == 400
+
+
+def test_heal_restores_old_dir_of_a_recycled_pid(spark, tmp_path):
+    """A crashed swap's .old whose pid now belongs to an unrelated live
+    process (here: us) must still be healed — its partition lock is free,
+    so no swap is in flight, and a pid check alone would hide the
+    partition forever."""
+    from wikidataquality_spark.io.compaction import _heal
+
+    out = str(tmp_path / "t6")
+    _fragmented_dataset(spark, out)
+    part = os.path.join(out, "partition=2025-01-01")
+    old = os.path.join(out, f"_compact_{os.getpid()}_2025-01-01.old")
+    os.rename(part, old)
+    _heal(out, "partition")
+    assert os.path.isdir(part) and not os.path.exists(old)
     assert spark.read.parquet(out).count() == 400
 
 

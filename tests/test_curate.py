@@ -8,6 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from wikidataquality_spark.curate import CurateConfig, curate
+from wikidataquality_spark.operators.barrier import owned_caches
 
 
 @pytest.fixture(scope="module")
@@ -20,12 +21,10 @@ def docs(spark):
 
 
 def _run(docs, cfg):
-    registry: list = []
-    curated, funnel = curate(docs, cfg, persist_registry=registry)
-    c = curated.collect()
-    f = {r["stage"]: r["n"] for r in funnel.collect()}
-    for df in registry:
-        df.unpersist()
+    with owned_caches() as owner:
+        curated, funnel = curate(docs, cfg, persist_registry=owner)
+        c = curated.collect()
+        f = {r["stage"]: r["n"] for r in funnel.collect()}
     return c, f
 
 
@@ -98,7 +97,7 @@ def test_dsir_topk_selection(docs):
 
 def test_rates_and_dsir_exclusive(docs):
     with pytest.raises(ValueError, match="mutually exclusive"):
-        curate(docs, CurateConfig(rates={"a": 0.1}, dsir_k=5))
+        curate(docs, CurateConfig(rates={"a": 0.1}, dsir_k=5), persist_registry=[])
 
 
 def test_pack_columns_consistent(docs):

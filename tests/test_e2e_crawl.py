@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 
 from wikidataquality_spark.curate import CurateConfig, curate, results_to_documents
 from wikidataquality_spark.io.warc import build_warc, build_warc_record
+from wikidataquality_spark.operators.barrier import owned_caches
 
 
 def test_crawl_segment_to_training_blocks(spark, tmp_path):
@@ -52,14 +53,12 @@ def test_crawl_segment_to_training_blocks(spark, tmp_path):
     assert docs.select("doc_id").distinct().count() == n_kept
     assert docs.filter(F.col("source").isNull()).count() == 0
 
-    registry: list = []
-    curated, funnel = curate(
-        docs, CurateConfig(seq_len=64, drop_buckets=()), persist_registry=registry
-    )
-    rows = curated.collect()
-    stages = {r["stage"]: r["n"] for r in funnel.collect()}
-    for df in registry:
-        df.unpersist()
+    with owned_caches() as owner:
+        curated, funnel = curate(
+            docs, CurateConfig(seq_len=64, drop_buckets=()), persist_registry=owner
+        )
+        rows = curated.collect()
+        stages = {r["stage"]: r["n"] for r in funnel.collect()}
     assert sum(stages.values()) == n_kept  # funnel conservation end-to-end
     assert stages.get("kept", 0) == len(rows) > 0
     # packed training blocks exist with exact token accounting

@@ -106,9 +106,8 @@ def test_hot_keys_is_a_sound_superset(spark):
 
 
 def test_sketch_backed_salting_spreads_the_hot_host(spark):
-    """use_sketch=True must salt exactly like the exact-count path on a
-    skewed corpus: the hot host's rows spread over many partitions, rows
-    are preserved."""
+    """Sketch-backed salting on a skewed corpus: the hot host's rows spread
+    over many partitions, rows are preserved."""
     from wikidataquality_spark.operators.dedup import (
         host_of,
         repartition_by_host_salted,
@@ -118,7 +117,7 @@ def test_sketch_backed_salting_spreads_the_hot_host(spark):
         (f"https://cold-{i % 20}.example/p/{i}",) for i in range(200)
     ]
     df = spark.createDataFrame(rows, "url string")
-    out = repartition_by_host_salted(df, n_partitions=8, hot_fraction=0.5, use_sketch=True)
+    out = repartition_by_host_salted(df, n_partitions=8, hot_fraction=0.5)
     assert out.count() == 800
     hot_parts = (
         out.filter(host_of("url") == "hot.example")

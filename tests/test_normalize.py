@@ -154,12 +154,13 @@ def test_series_twin_matches_column(spark):
 
 
 def test_pipeline_normalize_opt_in(spark):
-    """Pipeline opt-in: normalize_text=True repairs a planted-mojibake page
+    """Pipeline opt-in: normalize=True repairs a planted-mojibake page
     before stats/fingerprints; the default leaves bytes untouched (golden
     byte-identity contract)."""
     from datetime import datetime
 
-    from wikidataquality_spark.pipeline import PipelineConfig, validate
+    from wikidataquality_spark.operators.barrier import owned_caches
+    from wikidataquality_spark.pipeline import validate
 
     moji_text = "â€œthe quick brown fox jumps over the lazy dogâ€\x9d " * 3
     html = ("<html><body><main>" + moji_text + "</main></body></html>").encode("utf-8")
@@ -167,10 +168,13 @@ def test_pipeline_normalize_opt_in(spark):
         [("https://ex.com/a", datetime(2024, 1, 1), html, None, "en")],
         "url string, warc_ts timestamp, html binary, text string, lang string",
     )
-    cfg_off = PipelineConfig(persist_intermediate=False)
-    cfg_on = PipelineConfig(persist_intermediate=False, normalize_text=True)
-    off = validate(pages, cfg_off).select("text_extracted").collect()[0][0]
-    on = validate(pages, cfg_on).select("text_extracted").collect()[0][0]
+    with owned_caches() as owner:
+        off = validate(pages, persist_registry=owner).select("text_extracted").collect()[0][0]
+        on = (
+            validate(pages, normalize=True, persist_registry=owner)
+            .select("text_extracted")
+            .collect()[0][0]
+        )
     assert "â€œ" in off and "â€" in off
     assert "â€" not in on and "“the quick brown fox" in on
     assert on == _repair_one(off)

@@ -10,6 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from wikidataquality_spark.datagen import fixture_pages_path, generate_pages
+from wikidataquality_spark.operators.barrier import owned_caches
 from wikidataquality_spark.pipeline import results, validate
 
 FIXTURE = os.path.join(os.path.dirname(__file__), "fixtures", "golden_labels.parquet")
@@ -21,9 +22,10 @@ def validated(spark):
     path = fixture_pages_path(
         GOLDEN_N, GOLDEN_SEED
     )
-    v = validate(spark.read.parquet(path))
-    v.cache()
-    return v
+    with owned_caches() as owner:
+        v = validate(spark.read.parquet(path), persist_registry=owner)
+        owner.append(v.cache())
+        yield v
 
 
 @pytest.fixture(scope="module")
@@ -155,8 +157,9 @@ def test_validate_empty_input(spark):
     empty = spark.createDataFrame(
         [], "url string, warc_ts timestamp, html binary, text string, lang string"
     )
-    out = results(validate(empty))
-    assert out.count() == 0
+    with owned_caches() as owner:
+        out = results(validate(empty, persist_registry=owner))
+        assert out.count() == 0
     assert "keep" in out.columns and "scrubbed_text" in out.columns
 
 
@@ -169,19 +172,17 @@ def test_pipeline_plan_shape(spark):
     from wikidataquality_spark.pipeline import results, validate
 
     pages = spark.createDataFrame(generate_pages(50, seed=3))
-    out = results(validate(pages))  # default config: enrich persisted+sealed
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    try:
-        # every consumer branch (exact window, near-dup bands, final result)
-        # must read the sealed cache: the only ArrowEvalPython occurrences
-        # allowed are INSIDE InMemoryRelation definitions (the cached plan's
-        # stored child), never as a live node a consumer re-executes
-        lines = plan.splitlines()
-        for i, line in enumerate(lines):
-            if "ArrowEvalPython" in line:
-                context = "\n".join(lines[max(0, i - 4) : i])
-                assert "InMemoryRelation" in context, plan
-        assert "InMemoryTableScan" in plan
-        assert "BroadcastHashJoin" in plan
-    finally:
-        spark.catalog.clearCache()
+    with owned_caches() as owner:
+        out = results(validate(pages, persist_registry=owner))  # enrich sealed
+        plan = out._jdf.queryExecution().executedPlan().toString()
+    # every consumer branch (exact window, near-dup bands, final result)
+    # must read the sealed cache: the only ArrowEvalPython occurrences
+    # allowed are INSIDE InMemoryRelation definitions (the cached plan's
+    # stored child), never as a live node a consumer re-executes
+    lines = plan.splitlines()
+    for i, line in enumerate(lines):
+        if "ArrowEvalPython" in line:
+            context = "\n".join(lines[max(0, i - 4) : i])
+            assert "InMemoryRelation" in context, plan
+    assert "InMemoryTableScan" in plan
+    assert "BroadcastHashJoin" in plan

@@ -1,6 +1,7 @@
 """Product quantization: encode parity with the DuckDB twin (exact integer
-codes), ADC distance parity (exact doubles), top-k agreement, recall vs
-brute force, edge vectors, and the zero-shuffle plan gate."""
+codes, adversarial vectors and float32 storage included), ADC distance
+parity (exact doubles), top-k agreement, recall vs brute force, edge
+vectors, and the zero-shuffle plan gate."""
 
 from __future__ import annotations
 
@@ -15,7 +16,7 @@ from wikidataquality_spark.operators.pq import (
     adc_lut,
     load_pq_codebooks,
     pq_adc_topk,
-    pq_encode,
+    pq_encode_arrow,
     pq_encode_sql,
 )
 
@@ -35,10 +36,35 @@ def test_artifact_contract(art):
     assert all(len(c) == 8 for sub in art["codebooks"] for c in sub)
 
 
+def _codes(df) -> dict:
+    """vec_id -> pq_code list (None for a NULL code) of pq_encode_arrow."""
+    return {
+        r["vec_id"]: None if r["pq_code"] is None else list(r["pq_code"])
+        for r in df.collect()
+    }
+
+
+def _duckdb_codes(df, art) -> dict:
+    """vec_id -> pq_encode_sql's code list (None for NULL) over df's rows."""
+    rows = df.collect()
+    con = duckdb.connect()
+    con.register(
+        "emb",
+        pd.DataFrame(
+            {"vec_id": [r["vec_id"] for r in rows], "embedding": [r["embedding"] for r in rows]}
+        ),
+    )
+    want = con.execute(f"SELECT vec_id, {pq_encode_sql(art)} AS code FROM emb").df()
+    return {
+        vid: None if code is None or (isinstance(code, float) and pd.isna(code)) else list(code)
+        for vid, code in zip(want["vec_id"], want["code"], strict=True)
+    }
+
+
 def test_encode_matches_duckdb_twin_exactly(spark, sf001_dir, art):
     emb = spark.read.parquet(f"{sf001_dir}/embeddings.parquet")
     got = (
-        pq_encode(emb, art)
+        pq_encode_arrow(emb, art)
         .select("vec_id", F.col("pq_code").cast("array<int>").alias("pq_code"))
         .toPandas()
         .sort_values("vec_id")
@@ -57,11 +83,32 @@ def test_encode_matches_duckdb_twin_exactly(spark, sf001_dir, art):
     assert len(np.unique(flat)) > 4
 
 
+def test_arrow_encode_matches_duckdb_twin_on_adversarial_rows(spark, art):
+    """Exact duplicate subvectors force first-minimal argmin ties, plus the
+    degenerate guard (NULL / ragged / NaN / ±Inf / NULL-element rows), in
+    double and in the float32 storage type the real tables carry."""
+    rng = np.random.default_rng(23)
+    rows = [(i, [float(x) for x in rng.standard_normal(64)]) for i in range(120)]
+    rows += [
+        (200, [0.0] * 64),
+        (201, [1.0] * 64),
+        (300, None),
+        (301, [1.0] * 63),  # ragged
+        (302, [float("nan")] + [1.0] * 63),
+        (303, [float("inf")] + [1.0] * 63),
+        (304, [None] + [1.0] * 63),  # NULL element
+    ]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    for typ in ("double", "float"):
+        typed = df.selectExpr("vec_id", f"CAST(embedding AS array<{typ}>) AS embedding")
+        assert _codes(pq_encode_arrow(typed, art)) == _duckdb_codes(typed, art), typ
+
+
 def test_adc_distance_matches_duckdb_twin_exactly(spark, sf001_dir, art):
     emb = spark.read.parquet(f"{sf001_dir}/embeddings.parquet")
     lut = adc_lut(QUERY, art)
     got = (
-        pq_adc_topk(pq_encode(emb, art), QUERY, art, k_results=20)
+        pq_adc_topk(pq_encode_arrow(emb, art), QUERY, art, k_results=20)
         .toPandas()
         .reset_index(drop=True)
     )
@@ -141,11 +188,12 @@ def test_null_and_ragged_vectors_encode_null(spark, art):
         [(1, [0.5] * 64), (2, None), (3, [0.5] * 10)],
         "vec_id long, embedding array<float>",
     )
-    out = {r["vec_id"]: r["pq_code"] for r in pq_encode(df, art).collect()}
+    out = _codes(pq_encode_arrow(df, art))
     assert out[1] is not None and len(out[1]) == 8
     assert out[2] is None and out[3] is None
+    assert out == _duckdb_codes(df, art)
     # NULL codes never reach the ADC scan
-    assert pq_adc_topk(pq_encode(df, art), QUERY, art).count() == 1
+    assert pq_adc_topk(pq_encode_arrow(df, art), QUERY, art).count() == 1
 
 
 def test_degenerate_vectors_encode_null_and_adc_survives(spark, art):
@@ -165,80 +213,25 @@ def test_degenerate_vectors_encode_null_and_adc_survives(spark, art):
         (7, [0.25] * 64),
     ]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    out = {r["vec_id"]: r["pq_code"] for r in pq_encode(df, art).collect()}
+    out = _codes(pq_encode_arrow(df, art))
     assert out[1] is not None and out[7] is not None
     for bad in (2, 3, 4, 5, 6):
         assert out[bad] is None, (bad, out[bad])
     # the poisoned corpus scans to completion and ranks only the clean rows
-    got = pq_adc_topk(pq_encode(df, art), QUERY, art, k_results=10).collect()
+    got = pq_adc_topk(pq_encode_arrow(df, art), QUERY, art, k_results=10).collect()
     assert sorted(r["vec_id"] for r in got) == [1, 7]
     # twin parity on the degenerate guard itself
-    import duckdb as _duck
-
-    con = _duck.connect()
-    pdf = pd.DataFrame(
-        {"vec_id": [r[0] for r in rows], "embedding": [r[1] for r in rows]}
-    )
-    con.register("emb", pdf)
-    want = con.execute(
-        f"SELECT vec_id, {pq_encode_sql(art)} AS code FROM emb ORDER BY vec_id"
-    ).df()
-    for vid, code in zip(want["vec_id"], want["code"], strict=True):
-        spark_code = out[vid]
-        if spark_code is None:
-            assert code is None or (isinstance(code, float) and pd.isna(code)), vid
-        else:
-            assert list(spark_code) == list(code), vid
+    assert out == _duckdb_codes(df, art)
 
 
 def test_encode_plan_is_pure_projection_and_topk_takeordered(spark, sf001_dir, art):
     emb = spark.read.parquet(f"{sf001_dir}/embeddings.parquet")
     enc_plan = (
-        pq_encode(emb, art)._jdf.queryExecution().executedPlan().toString()
+        pq_encode_arrow(emb, art)._jdf.queryExecution().executedPlan().toString()
     )
     assert "Exchange" not in enc_plan
-    assert "ArrowEvalPython" not in enc_plan and "BatchEvalPython" not in enc_plan
     topk_plan = (
-        pq_adc_topk(pq_encode(emb, art), QUERY, art)
+        pq_adc_topk(pq_encode_arrow(emb, art), QUERY, art)
         ._jdf.queryExecution().executedPlan().toString()
     )
     assert "TakeOrderedAndProject" in topk_plan
-
-def test_arrow_encode_bit_identical_to_jvm_encode(spark, art):
-    """pq_encode_arrow is the corpus-scale encoder (the JVM expression form
-    interprets beyond the codegen method limit); its codes must equal
-    pq_encode's EXACTLY — including first-minimal argmin ties, float32→
-    double casts, and the degenerate guard (NULL / ragged / NaN / ±Inf /
-    NULL-element rows)."""
-    import numpy as np
-
-    from wikidataquality_spark.operators.pq import pq_encode_arrow
-
-    rng = np.random.default_rng(23)
-    rows = []
-    for i in range(120):
-        rows.append((i, [float(x) for x in rng.standard_normal(64)]))
-    # adversarial: exact duplicate subvectors force argmin ties
-    rows.append((200, [0.0] * 64))
-    rows.append((201, [1.0] * 64))
-    rows.append((300, None))
-    rows.append((301, [1.0] * 63))            # ragged
-    rows.append((302, [float("nan")] + [1.0] * 63))
-    rows.append((303, [float("inf")] + [1.0] * 63))
-    rows.append((304, [None] + [1.0] * 63))   # NULL element
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    a = {r["vec_id"]: r["pq_code"] for r in pq_encode(df, art).collect()}
-    b = {r["vec_id"]: r["pq_code"] for r in pq_encode_arrow(df, art).collect()}
-    assert set(a) == set(b)
-    for vid in a:
-        av = None if a[vid] is None else list(a[vid])
-        bv = None if b[vid] is None else list(b[vid])
-        assert av == bv, (vid, av, bv)
-    # and against the float32 storage type the real tables carry
-    f32 = df.selectExpr("vec_id", "CAST(embedding AS array<float>) AS embedding")
-    a32 = {r["vec_id"]: r["pq_code"] for r in pq_encode(f32, art).collect()}
-    b32 = {r["vec_id"]: r["pq_code"] for r in pq_encode_arrow(f32, art).collect()}
-    for vid in a32:
-        av = None if a32[vid] is None else list(a32[vid])
-        bv = None if b32[vid] is None else list(b32[vid])
-        assert av == bv, vid

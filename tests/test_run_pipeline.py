@@ -131,6 +131,7 @@ def _direct_metrics(spark, warc_dir: str, by: str, done: set[str] | None = None)
         drop_url_dups_narrow,
         dup_fingerprints,
     )
+    from wikidataquality_spark.operators.barrier import owned_caches
     from wikidataquality_spark.operators.extract import extracted_text
     from wikidataquality_spark.pipeline import validate
 
@@ -146,13 +147,9 @@ def _direct_metrics(spark, warc_dir: str, by: str, done: set[str] | None = None)
             text_col="text_extracted",
         )
         pages = pages.filter(part.isNull() | ~part.isin(sorted(done)))
-    registry: list = []
-    try:
-        validated = validate(pages, dedup_state=state, persist_registry=registry)
+    with owned_caches() as owner:
+        validated = validate(pages, dedup_state=state, persist_registry=owner)
         return sorted(map(tuple, rule_metrics(validated, by=by).collect()), key=repr)
-    finally:
-        for df in registry:
-            df.unpersist()
 
 
 def _written_metrics(spark, met_dir: str, run_id: str):

@@ -120,19 +120,18 @@ def test_curated_corpus_exports_end_to_end(spark):
     """Composition: curate (BPE pieces + pack assignment) → vocab → ids →
     shards, reconstruction holding on a real curated corpus slice."""
     from wikidataquality_spark.curate import CurateConfig, curate
+    from wikidataquality_spark.operators.barrier import owned_caches
 
     docs = (
         spark.read.parquet("/root/testdata/sf0.001/documents.parquet").limit(60)
     )
-    registry: list = []
-    curated, _f = curate(
-        docs, CurateConfig(seq_len=64, drop_buckets=()), persist_registry=registry
-    )
-    vocab = {r["piece"]: r["token_id"] for r in vocab_table(curated).collect()}
-    encoded = encode_token_ids(curated, vocab)
-    shards = export_token_shards(encoded, seq_len=64).collect()
-    for df in registry:
-        df.unpersist()
+    with owned_caches() as owner:
+        curated, _f = curate(
+            docs, CurateConfig(seq_len=64, drop_buckets=()), persist_registry=owner
+        )
+        vocab = {r["piece"]: r["token_id"] for r in vocab_table(curated).collect()}
+        encoded = encode_token_ids(curated, vocab)
+        shards = export_token_shards(encoded, seq_len=64).collect()
     total_real = sum(r["n_real_tokens"] for r in shards)
     total_ids = encoded.select(F.sum(F.size("token_ids"))).first()[0]
     assert total_real == total_ids > 0  # every token lands exactly once

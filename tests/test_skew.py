@@ -16,14 +16,10 @@ def skewed(spark):
     return spark.createDataFrame(hot + cold, "row_id long, url string").cache()
 
 
-@pytest.mark.parametrize("use_sketch", [True, False])
-def test_hot_host_spreads_across_partitions(spark, skewed, use_sketch):
-    """Both detection paths: the Misra-Gries sketch default (shuffle bounded
-    by P*(k+1) rows at ANY host cardinality — r04 VERDICT flipped it to
-    default) and the exact per-host count opt-out."""
-    out = repartition_by_host_salted(
-        skewed, n_partitions=8, hot_fraction=0.5, use_sketch=use_sketch
-    )
+def test_hot_host_spreads_across_partitions(spark, skewed):
+    """The Misra-Gries hot-host detection (shuffle bounded by P*(k+1) rows
+    at ANY host cardinality) finds the hot host and salts it."""
+    out = repartition_by_host_salted(skewed, n_partitions=8, hot_fraction=0.5)
     per_part = (
         out.filter(host_of("url") == "hot.example.com")
         .withColumn("pid", F.spark_partition_id())
@@ -37,11 +33,8 @@ def test_hot_host_spreads_across_partitions(spark, skewed, use_sketch):
     assert max(r["count"] for r in rows) < 900
 
 
-@pytest.mark.parametrize("use_sketch", [True, False])
-def test_cold_hosts_stay_unsalted_and_colocated(spark, skewed, use_sketch):
-    out = repartition_by_host_salted(
-        skewed, n_partitions=8, hot_fraction=0.5, use_sketch=use_sketch
-    )
+def test_cold_hosts_stay_unsalted_and_colocated(spark, skewed):
+    out = repartition_by_host_salted(skewed, n_partitions=8, hot_fraction=0.5)
     parts = (
         out.filter(host_of("url") != "hot.example.com")
         .withColumn("pid", F.spark_partition_id())
@@ -52,11 +45,8 @@ def test_cold_hosts_stay_unsalted_and_colocated(spark, skewed, use_sketch):
     assert all(r["n_parts"] == 1 for r in parts.collect())
 
 
-@pytest.mark.parametrize("use_sketch", [True, False])
-def test_salting_preserves_rows(spark, skewed, use_sketch):
-    out = repartition_by_host_salted(
-        skewed, n_partitions=8, hot_fraction=0.5, use_sketch=use_sketch
-    )
+def test_salting_preserves_rows(spark, skewed):
+    out = repartition_by_host_salted(skewed, n_partitions=8, hot_fraction=0.5)
     assert sorted(r["row_id"] for r in out.collect()) == sorted(
         r["row_id"] for r in skewed.collect()
     )

@@ -283,6 +283,7 @@ def test_incremental_validate_kill_and_resume(spark, tmp_path):
     import shutil
 
     from wikidataquality_spark.datagen import write_pages_parquet
+    from wikidataquality_spark.operators.barrier import owned_caches
     from wikidataquality_spark.pipeline import results, validate
     from wikidataquality_spark.streaming.windows import incremental_validate
 
@@ -325,20 +326,18 @@ def test_incremental_validate_kill_and_resume(spark, tmp_path):
     assert s.select("url").distinct().count() == 200
     assert s.select("_epoch").distinct().count() == 3
 
-    persisted: list = []
-    b = results(validate(spark.read.parquet(corpus), persist_registry=persisted))
-    mism = (
-        s.alias("s")
-        .join(b.alias("b"), "url")
-        .filter(
-            ~F.col("s.keep").eqNullSafe(F.col("b.keep"))
-            | ~F.col("s.scrubbed_text").eqNullSafe(F.col("b.scrubbed_text"))
-            | ~F.col("s.violated_rules").eqNullSafe(F.col("b.violated_rules"))
+    with owned_caches() as owner:
+        b = results(validate(spark.read.parquet(corpus), persist_registry=owner))
+        mism = (
+            s.alias("s")
+            .join(b.alias("b"), "url")
+            .filter(
+                ~F.col("s.keep").eqNullSafe(F.col("b.keep"))
+                | ~F.col("s.scrubbed_text").eqNullSafe(F.col("b.scrubbed_text"))
+                | ~F.col("s.violated_rules").eqNullSafe(F.col("b.violated_rules"))
+            )
+            .count()
         )
-        .count()
-    )
-    for cached in persisted:
-        cached.unpersist()
     assert mism == 0
 
 

@@ -66,6 +66,7 @@ def main(argv: list[str] | None = None) -> int:
 
     from wikidataquality_spark.curate import CurateConfig, curate
     from wikidataquality_spark.deploy import ensure_shipped
+    from wikidataquality_spark.operators.barrier import owned_caches
     from wikidataquality_spark.session import get_spark
 
     spark = get_spark(cpus=args.cpus, app_name="wdq_curate")
@@ -103,14 +104,15 @@ def main(argv: list[str] | None = None) -> int:
         dsir_k=args.dsir_k,
         pack=not args.no_pack,
         seq_len=args.seq_len,
-        extra={"funnel_by": args.funnel_by} if args.funnel_by else {},
+        funnel_by=args.funnel_by,
     )
     if args.export_shards and args.no_pack:
         raise ValueError("--export-shards needs the packing stage (drop --no-pack)")
     t0 = time.perf_counter()
-    registry: list = []
-    curated, funnel = curate(docs, cfg, persist_registry=registry)
-    curated.write.mode("overwrite").parquet(args.output)
+    with owned_caches() as owner:
+        curated, funnel = curate(docs, cfg, persist_registry=owner)
+        curated.write.mode("overwrite").parquet(args.output)
+        rows = funnel.collect()
     n_shard_blocks = None
     if args.export_shards:
         from wikidataquality_spark.operators.shards import (
@@ -170,9 +172,6 @@ def main(argv: list[str] | None = None) -> int:
                 fh,
                 indent=1,
             )
-    rows = funnel.collect()
-    for df in registry:
-        df.unpersist()
     if args.funnel_by:
         stages: dict[str, int] = {}
         detail: dict[str, dict[str, int]] = {}

@@ -19,6 +19,7 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from wikidataquality_spark.datagen import fixture_pages_path  # noqa: E402
+from wikidataquality_spark.operators.barrier import owned_caches  # noqa: E402
 from wikidataquality_spark.pipeline import results, validate  # noqa: E402
 from wikidataquality_spark.session import get_spark  # noqa: E402
 
@@ -128,12 +129,13 @@ def freeze_langid_truth() -> None:
 def main() -> None:
     spark = get_spark(cpus=8)
     pages = spark.read.parquet(pages_path())
-    r = results(validate(pages)).select(
-        "url", "keep", "violated_rules", "scrubbed_text", "lang_pred"
-    )
+    with owned_caches() as owner:
+        r = results(validate(pages, persist_registry=owner)).select(
+            "url", "keep", "violated_rules", "scrubbed_text", "lang_pred"
+        )
+        pdf = r.toPandas()  # one action; count/kept come from the collected frame
     os.makedirs(FIXTURE_DIR, exist_ok=True)
     out = os.path.join(FIXTURE_DIR, "golden_labels.parquet")
-    pdf = r.toPandas()  # one action; count/kept come from the collected frame
     pdf.to_parquet(out, index=False)
     print(f"golden frozen: {out} ({len(pdf)} rows, {int(pdf['keep'].sum())} kept)")
     freeze_signature_fixtures(spark)

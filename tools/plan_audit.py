@@ -244,7 +244,16 @@ def signals(plan: str) -> dict[str, bool]:
 
 
 def main() -> int:
-    from wikidataquality_spark.plans.driver_queries import QUERIES
+    from wikidataquality_spark.operators.barrier import owned_caches
+    from wikidataquality_spark.plans.driver_queries import (
+        QUERIES,
+        golden_confusion_plan,
+    )
+
+    # queries that checkpoint their result before releasing the pipeline
+    # cache return a bare 'Scan ExistingRDD' plan; the lazy frame they
+    # checkpoint is graded instead
+    LAZY_PLANS = {"qf_golden_confusion": golden_confusion_plan}
 
     # maxMetadataStringLength: explain() truncates metadata values at 100
     # chars by default — a WIDE table's unpruned ReadSchema would lose its
@@ -268,10 +277,14 @@ def main() -> int:
         ]
         if name not in ARROW_EXEMPT and "arrow_le1" not in must:
             must.append("arrow_le1")
-        df = QUERIES[name](spark, SF)
         buf = io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            df.explain("formatted")
+        with owned_caches() as owner:
+            if name in LAZY_PLANS:
+                df = LAZY_PLANS[name](spark, owner)
+            else:
+                df = QUERIES[name](spark, SF)
+            with contextlib.redirect_stdout(buf):
+                df.explain("formatted")
         sig = signals(buf.getvalue())
         ok = all(sig[m] for m in must) and name not in missing
         if name not in missing and not ok:

@@ -11,13 +11,15 @@ Local sandbox run (same code path, local master):
         --output /tmp/wdq_out --metrics /tmp/wdq_metrics --cpus 8
 
 Flow (BASELINE.json:6/14): read pages (WARC/WET: parse each segment once
-into a persisted projection → drop recrawl captures) → validate (enrich,
+into a sealed projection → drop recrawl captures) → validate (enrich,
 sealed in its own cache, after which the parse is released → dedup marks →
 rules → scrub → decide) → write results partitioned by warc_ts date (or
 url-host) with a manifest snapshot → read this run's written partitions
 back and append per-partition rule metrics (and, with --url-sketches,
 distinct-url sketches) from them → on --resume, partitions already
 recorded in the output manifest are skipped (checkpoint-resume contract).
+Every sealed frame is released by the call's end at the latest
+(operators/barrier.owned_caches).
 """
 
 from __future__ import annotations
@@ -60,8 +62,9 @@ def main(argv: list[str] | None = None) -> int:
         default=0,
         metavar="N_PARTITIONS",
         help="pre-spread skewed url-hosts over N partitions before validation "
-        "(hash-partition by host with per-url salting for hosts above 5%% of "
-        "rows — BASELINE's explicit-skew mandate; 0 = off)",
+        "(hash-partition by host with per-url salting for hosts a Misra-Gries "
+        "heavy-hitter pass finds above 5%% of rows — BASELINE's explicit-skew "
+        "mandate; 0 = off)",
     )
     ap.add_argument(
         "--url-sketches",
@@ -81,156 +84,146 @@ def main(argv: list[str] | None = None) -> int:
     args = ap.parse_args(argv)
 
     from wikidataquality_spark.deploy import ensure_shipped
+    from wikidataquality_spark.operators.barrier import owned_caches
     from wikidataquality_spark.session import get_spark
 
     spark = get_spark(cpus=args.cpus, app_name="wdq_pipeline")
     ensure_shipped(spark)
-    # frames this call persists (the WARC parse, resume fingerprints,
-    # validate()'s enrich cache), released on every way out: a caller that
-    # runs main() repeatedly in one session must not inherit them — a later
-    # call over the same input path would be served this call's cached rows
-    cached: list = []
-    try:
-        return _run(spark, args, cached)
-    finally:
-        for df in cached:
-            df.unpersist()
+    # frames this call seals (the WARC parse, resume fingerprints,
+    # validate()'s enrich cache) are released on every way out: a caller
+    # that runs main() repeatedly in one session must not inherit them — a
+    # later call over the same input path would be served this call's rows
+    with owned_caches() as owner:
+        return _run(spark, args, owner)
 
 
-def _run(spark, args: argparse.Namespace, cached: list) -> int:
+def _run(spark, args: argparse.Namespace, owner: list) -> int:
     from wikidataquality_spark.io.catalog import (
         read_run,
         resume_filter,
         write_partitioned,
     )
     from wikidataquality_spark.metrics import partition_column, rule_metrics
+    from wikidataquality_spark.operators.barrier import owned_caches, seal
     from wikidataquality_spark.pipeline import results, validate
 
     t0 = time.perf_counter()
-    parsed = None
-    if args.input_format in ("warc", "wet"):
-        from wikidataquality_spark.io.warc import (
-            read_warc,
-            warc_to_documents,
-            wet_to_documents,
-        )
-        from wikidataquality_spark.operators.dedup import drop_url_dups_narrow
-
-        project = warc_to_documents if args.input_format == "warc" else wet_to_documents
-        # one parse per call: the recrawl drop below reads its input twice
-        # (narrow drop-key side + fat anti-join side), and the emptiness
-        # probe and validate()'s enrich seal each evaluate the plan again —
-        # without the persist every one of them decompresses and parses
-        # every segment. Released as soon as the enrich seal has run.
-        parsed = project(read_warc(spark, args.input)).persist()
-        cached.append(parsed)
-        # a real crawl captures the same url repeatedly (recrawls, http/https
-        # and www variants) — but the DAG's dedup anchors key on url, so two
-        # rows SHARING one url can never flag each other, and the per-url
-        # byte-identity invariant (B:15) breaks. Earliest capture per
-        # canonical url survives (first-crawl-wins); the NARROW variant keeps
-        # the decoded html payloads out of the dedup exchange — marks run on
-        # a (url, ts) projection and the fat frame anti-joins the (small,
-        # broadcastable) drop-key set (r04 ADVICE). Parquet inputs are
-        # assumed already url-unique (the datagen/Iceberg contract), which
-        # is why this lives on the ingest path only.
-        pages = drop_url_dups_narrow(parsed)
-    else:
-        pages = spark.read.parquet(args.input)
-    pages = partition_column(pages, by=args.partition_by)
-    dedup_state = None
-    # byte-semantics fingerprint: recorded with every run, checked on
-    # resume. Mixing --normalize and default partitions in ONE dataset
-    # gives partition-dependent bytes and resume-state fingerprints that
-    # no longer describe what the prior run wrote — refuse loudly.
-    cfg_fp = {"normalize": bool(args.normalize)}
-    if args.resume:
-        from wikidataquality_spark.io.catalog import read_manifest
-
-        for run in read_manifest(args.output).get("runs", []):
-            prior = run.get("config_fingerprint")
-            if prior is not None and prior != cfg_fp:
-                raise ValueError(
-                    f"resume config mismatch: prior run {run['run_id']} wrote "
-                    f"partitions with {prior}, this invocation is {cfg_fp} — "
-                    "a resumed dataset must keep one text semantics; rerun "
-                    "with matching flags or use a fresh --output"
-                )
-    if args.resume:
-        # Cross-partition dedup must still see the documents a previous run
-        # already validated: without state, a resumed run deduplicates only
-        # the REMAINING partitions and keeps documents an uninterrupted run
-        # would have flagged. Fingerprints are recomputed from the completed
-        # partitions' input rows (one narrow url+text pass — a 10^12-doc
-        # deployment appends dup_fingerprints to an Iceberg state table at
-        # write time and reads it back here instead). Semantics are the
-        # documented incremental ones (dup_marks state=): at least one copy
-        # of every text survives; a dup pair straddling the resume boundary
-        # keeps the already-written copy even when the unwritten one has the
-        # smaller url.
-        from pyspark.sql import functions as F
-
-        from wikidataquality_spark.io.catalog import completed_partitions
-        from wikidataquality_spark.operators.dedup import dup_fingerprints
-
-        done = completed_partitions(args.output)
-        if done:
-            prior = pages.filter(F.col("partition").isin(sorted(done)))
-            # fingerprint the SAME bytes the pipeline dedups on: validate()
-            # keys dup_marks on text_extracted (extract(html)), not the raw
-            # text column — raw-text fingerprints would hash differently
-            # whenever text != extract(html) (and would fingerprint docs
-            # whose extraction failed, which the batch side dedup-exempts)
-            from wikidataquality_spark.operators.extract import extracted_text
-
-            prior_text = extracted_text("html")
-            if args.normalize:
-                # a normalized run dedups normalized bytes — resume
-                # fingerprints must hash the SAME bytes or nothing matches
-                from wikidataquality_spark.operators.normalize import (
-                    normalize_text,
-                )
-
-                prior_text = normalize_text(prior_text)
-            dedup_state = dup_fingerprints(
-                prior.withColumn("text_extracted", prior_text),
-                text_col="text_extracted",
+    # the parse has no reader once validate() has sealed its enrich cache
+    # (dup_marks reads that and the sealed resume state), so it is released
+    # when this inner block exits, before the write; the resume state and
+    # the enrich cache belong to the call-wide owner
+    with owned_caches() as parse_owner:
+        if args.input_format in ("warc", "wet"):
+            from wikidataquality_spark.io.warc import (
+                read_warc,
+                warc_to_documents,
+                wet_to_documents,
             )
-        pages = resume_filter(pages, args.output)
-    if args.salt_hot:
-        from wikidataquality_spark.operators.dedup import repartition_by_host_salted
+            from wikidataquality_spark.operators.dedup import drop_url_dups_narrow
 
-        pages = repartition_by_host_salted(pages, args.salt_hot)
+            project = warc_to_documents if args.input_format == "warc" else wet_to_documents
+            # one parse per call: the recrawl drop below reads its input twice
+            # (narrow drop-key side + fat anti-join side), and the emptiness
+            # probe, the resume fingerprints and validate()'s enrich seal each
+            # evaluate the plan again — without the seal every one of them
+            # decompresses and parses every segment.
+            parsed = seal(project(read_warc(spark, args.input)), parse_owner)
+            # a real crawl captures the same url repeatedly (recrawls, http/https
+            # and www variants) — but the DAG's dedup anchors key on url, so two
+            # rows SHARING one url can never flag each other, and the per-url
+            # byte-identity invariant (B:15) breaks. Earliest capture per
+            # canonical url survives (first-crawl-wins); the NARROW variant keeps
+            # the decoded html payloads out of the dedup exchange — marks run on
+            # a (url, ts) projection and the fat frame anti-joins the (small,
+            # broadcastable) drop-key set (r04 ADVICE). Parquet inputs are
+            # assumed already url-unique (the datagen/Iceberg contract), which
+            # is why this lives on the ingest path only.
+            pages = drop_url_dups_narrow(parsed)
+        else:
+            pages = spark.read.parquet(args.input)
+        pages = partition_column(pages, by=args.partition_by)
+        dedup_state = None
+        # byte-semantics fingerprint: recorded with every run, checked on
+        # resume. Mixing --normalize and default partitions in ONE dataset
+        # gives partition-dependent bytes and resume-state fingerprints that
+        # no longer describe what the prior run wrote — refuse loudly.
+        cfg_fp = {"normalize": bool(args.normalize)}
+        if args.resume:
+            from wikidataquality_spark.io.catalog import read_manifest
 
-    # limit-1 probe, not count(): a full count() here cost one EXTRA scan of
-    # the whole input before validation — at corpus scale that scan is a
-    # second 100 TB read. The docs total comes back from the write manifest
-    # (validate() annotates every input row, so written rows == input rows).
-    # On the WARC/WET path the probe's broadcast drop-key side reads every
-    # parsed record, so it is the action that fills the parse cache.
-    if pages.isEmpty():
-        print(json.dumps({"status": "nothing_to_do", "input": args.input}))
-        return 0
+            for run in read_manifest(args.output).get("runs", []):
+                prior = run.get("config_fingerprint")
+                if prior is not None and prior != cfg_fp:
+                    raise ValueError(
+                        f"resume config mismatch: prior run {run['run_id']} wrote "
+                        f"partitions with {prior}, this invocation is {cfg_fp} — "
+                        "a resumed dataset must keep one text semantics; rerun "
+                        "with matching flags or use a fresh --output"
+                    )
+        if args.resume:
+            # Cross-partition dedup must still see the documents a previous run
+            # already validated: without state, a resumed run deduplicates only
+            # the REMAINING partitions and keeps documents an uninterrupted run
+            # would have flagged. Fingerprints are recomputed from the completed
+            # partitions' input rows (one narrow url+text pass — a 10^12-doc
+            # deployment appends dup_fingerprints to an Iceberg state table at
+            # write time and reads it back here instead). Semantics are the
+            # documented incremental ones (dup_marks state=): at least one copy
+            # of every text survives; a dup pair straddling the resume boundary
+            # keeps the already-written copy even when the unwritten one has the
+            # smaller url.
+            from pyspark.sql import functions as F
 
-    cfg = None
-    if args.normalize:
-        from wikidataquality_spark.pipeline import PipelineConfig
+            from wikidataquality_spark.io.catalog import completed_partitions
+            from wikidataquality_spark.operators.dedup import dup_fingerprints
 
-        cfg = PipelineConfig(normalize_text=True)
-    validated = validate(
-        pages, config=cfg, dedup_state=dedup_state, persist_registry=cached
-    )
-    if parsed is not None:
-        # validate() has sealed its enrich cache, so the write below reads
-        # that instead of the parse. The resume fingerprints are the parse's
-        # one remaining consumer (dup_marks reads them twice): seal them
-        # from the parse cache too, or a resumed run would re-parse every
-        # segment for its completed partitions.
+            done = completed_partitions(args.output)
+            if done:
+                prior = pages.filter(F.col("partition").isin(sorted(done)))
+                # fingerprint the SAME bytes the pipeline dedups on: validate()
+                # keys dup_marks on text_extracted (extract(html)), not the raw
+                # text column — raw-text fingerprints would hash differently
+                # whenever text != extract(html) (and would fingerprint docs
+                # whose extraction failed, which the batch side dedup-exempts)
+                from wikidataquality_spark.operators.extract import extracted_text
+
+                prior_text = extracted_text("html")
+                if args.normalize:
+                    # a normalized run dedups normalized bytes — resume
+                    # fingerprints must hash the SAME bytes or nothing matches
+                    from wikidataquality_spark.operators.normalize import (
+                        normalize_text,
+                    )
+
+                    prior_text = normalize_text(prior_text)
+                dedup_state = dup_fingerprints(
+                    prior.withColumn("text_extracted", prior_text),
+                    text_col="text_extracted",
+                )
+            pages = resume_filter(pages, args.output)
+        if args.salt_hot:
+            from wikidataquality_spark.operators.dedup import repartition_by_host_salted
+
+            pages = repartition_by_host_salted(pages, args.salt_hot)
+
+        # limit-1 probe, not count(): a full count() here cost one EXTRA scan of
+        # the whole input before validation — at corpus scale that scan is a
+        # second 100 TB read. The docs total comes back from the write manifest
+        # (validate() annotates every input row, so written rows == input rows).
+        if pages.isEmpty():
+            print(json.dumps({"status": "nothing_to_do", "input": args.input}))
+            return 0
         if dedup_state is not None:
-            dedup_state = dedup_state.persist()
-            cached.append(dedup_state)
-            dedup_state.write.format("noop").mode("overwrite").save()
-        parsed.unpersist()
+            # sealed: dup_marks reads the state twice, and each read would
+            # otherwise re-extract and re-sign every completed document
+            dedup_state = seal(dedup_state, owner)
+
+        validated = validate(
+            pages,
+            normalize=args.normalize,
+            dedup_state=dedup_state,
+            persist_registry=owner,
+        )
     out = validated.select(*results(validated).columns, "partition")
     entry = write_partitioned(
         out, args.output, partition_col="partition", run_id=args.run_id,

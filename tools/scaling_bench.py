@@ -41,6 +41,7 @@ WORKER = r"""
 import json, os, sys, time
 sys.path.insert(0, {repo!r})
 from wikidataquality_spark.session import get_spark
+from wikidataquality_spark.operators.barrier import owned_caches
 from wikidataquality_spark.pipeline import validate, results
 from pyspark.sql import functions as F
 
@@ -61,12 +62,14 @@ n = pages.count()
 
 
 def one_run():
-    t0 = time.perf_counter()
-    out = validate(pages)
-    kept = results(out).filter("keep").count()
-    dt = time.perf_counter() - t0
-    # drop the pipeline's persisted intermediate so every timed run
-    # recomputes the full DAG from the scan; then force a full GC (untimed)
+    with owned_caches() as owner:
+        t0 = time.perf_counter()
+        out = validate(pages, persist_registry=owner)
+        kept = results(out).filter("keep").count()
+        dt = time.perf_counter() - t0
+    # the block released the pipeline's sealed intermediate and the reset
+    # below drops anything else cached, so every timed run recomputes the
+    # full DAG from the scan; then force a full GC (untimed)
     # so heap state from run k never bleeds into run k+1's timing — resident
     # JVMs otherwise accumulate old-gen churn across runs. System.gc() only
     # reaches THIS (driver) JVM: complete coverage under local[N] (driver and

@@ -35,20 +35,27 @@ corpus-curation stages and the summary is the attrition funnel.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
+from functools import reduce
+from operator import and_
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-STAGES = (
-    "eligibility",
-    "urlfilter",
-    "quality",
-    "dedup",
-    "frozen",
-    "decontaminate",
-    "select",
-    "kept",
+from wikidataquality_spark.operators.barrier import seal
+
+# The cascade in attribution order: (stage, the flag column that drops a doc
+# there). A doc counts against its FIRST true flag; a doc with none is
+# 'kept'. The funnel's reason, DSIR's survivor filter and the curated
+# projection are all built from this one tuple.
+CASCADE = (
+    ("eligibility", "_ineligible"),
+    ("urlfilter", "_url_drop"),
+    ("quality", "_quality_drop"),
+    ("dedup", "_dup_drop"),
+    ("frozen", "_frozen_drop"),
+    ("decontaminate", "_contam_drop"),
+    ("select", "_select_drop"),
 )
 
 
@@ -63,7 +70,6 @@ class CurateConfig:
     # granularity the domain list can't express; runs in the SAME urlfilter
     # stage (one funnel attribution), fail-closed on unverifiable rows
     path_rules: DataFrame | None = None
-    url_col: str = "url"
     drop_buckets: tuple[str, ...] = ("tail",)  # CCNet buckets to drop
     dedup: bool = True
     # frozen-corpus cross-batch dedup (r04 VERDICT #3 — bloom.py existed but
@@ -75,7 +81,6 @@ class CurateConfig:
     # a few-GB bit table instead of a second corpus scan per batch.
     frozen_corpus: DataFrame | None = None
     frozen_fp_rate: float = 0.01
-    frozen_n_keys: int | None = None  # corpus-manifest count; None = one count()
     benchmark: DataFrame | None = None  # eval-set docs (text col) to decontaminate against
     # selection: at most one of —
     rates: dict[str, float] | None = None  # stratified per-source keep rates
@@ -93,7 +98,10 @@ class CurateConfig:
     text_col: str = "text"
     lang_col: str = "lang"
     source_col: str = "source"
-    extra: dict = field(default_factory=dict)
+    # a lineage dimension for the funnel (per-source/per-lang attrition —
+    # the rule-metrics-per-partition ethos applied to curation); None keeps
+    # the compact (stage, n) shape
+    funnel_by: str | None = None
 
 
 def results_to_documents(results: DataFrame) -> DataFrame:
@@ -127,7 +135,8 @@ def results_to_documents(results: DataFrame) -> DataFrame:
 def curate(
     docs: DataFrame,
     cfg: CurateConfig | None = None,
-    persist_registry: list | None = None,
+    *,
+    persist_registry: list,
 ) -> tuple[DataFrame, DataFrame]:
     """Returns (curated, funnel).
 
@@ -136,12 +145,15 @@ def curate(
     each stage under first-failing-stage attribution, plus the final
     'kept' row; rows sum to the input count.
 
-    The flagged frame is sealed with the house persist + noop-write barrier
-    (same rationale and `persist_registry` ownership contract as
-    pipeline.validate): the funnel aggregation, the curated filter, and the
-    DSIR top-k are separate consumers that would otherwise each recompute
-    the enrich/normalize/dedup work. At 10¹²-doc scale the equivalent is
-    writing the flagged frame to a stage table."""
+    The flagged frame is sealed (operators/barrier.py): the funnel
+    aggregation, the curated filter, and the DSIR top-k are separate
+    consumers that would otherwise each recompute the enrich/normalize/
+    dedup work. At 10¹²-doc scale the equivalent is writing the flagged
+    frame to a stage table. With cfg.pack the BPE-encoded curated frame is
+    sealed too. `persist_registry` is the owner list of an
+    `operators.barrier.owned_caches` block; both seals go into it, and the
+    caller's block releases them once its own actions on `curated` and
+    `funnel` are done."""
     cfg = cfg or CurateConfig()
     if cfg.rates is not None and cfg.dsir_k is not None:
         raise ValueError("rates and dsir_k are mutually exclusive selection modes")
@@ -161,10 +173,8 @@ def curate(
 
     # --- stage flags (no actions yet) ----------------------------------
     flagged = docs.withColumn(
-        "_eligible",
-        F.col(id_c).isNotNull()
-        & F.col(text_c).isNotNull()
-        & (F.length(text_c) > 0),
+        "_ineligible",
+        F.col(id_c).isNull() | F.col(text_c).isNull() | (F.length(text_c) == 0),
     )
 
     if cfg.blocklist is not None or cfg.path_rules is not None:
@@ -186,7 +196,7 @@ def curate(
             # the operator's documented id-keyed contract)
             marks = (
                 domain_blocklist_marks(
-                    flagged, cfg.blocklist, url_col=cfg.url_col, id_col=id_c
+                    flagged, cfg.blocklist, id_col=id_c
                 )
                 .select(id_c, "blocked")
                 .dropDuplicates([id_c])
@@ -201,7 +211,7 @@ def curate(
 
             pmarks = (
                 path_blocklist_marks(
-                    url_base, cfg.path_rules, url_col=cfg.url_col, id_col=id_c
+                    url_base, cfg.path_rules, id_col=id_c
                 )
                 .select(id_c, "path_blocked")
                 .dropDuplicates([id_c])
@@ -247,7 +257,6 @@ def curate(
             text_col=text_c,
             id_col=id_c,
             fp_rate=cfg.frozen_fp_rate,
-            n_keys_hint=cfg.frozen_n_keys,
         )
         fmarks = fmarks.select(id_c, "in_corpus_maybe").dropDuplicates([id_c])
         scored = scored.join(fmarks, id_c, "left")
@@ -280,10 +289,7 @@ def curate(
     # Seal the heavy flags (UDF enrich + dedup shuffles + gram join) before
     # the multi-consumer tail: selection, funnel agg, and curated filter
     # all read the cache instead of racing to recompute the DAG.
-    scored = scored.persist()
-    scored.write.format("noop").mode("overwrite").save()
-    if persist_registry is not None:
-        persist_registry.append(scored)
+    scored = seal(scored, persist_registry)
 
     if cfg.rates is not None:
         from wikidataquality_spark.operators.sampling import stratified_sample_marks
@@ -304,12 +310,7 @@ def curate(
         # already-dropped docs would waste the budget on rows the filter
         # removes. The k-row result broadcasts back as a flag.
         survivors = scored.filter(
-            F.col("_eligible")
-            & ~F.col("_url_drop")
-            & ~F.col("_quality_drop")
-            & ~F.col("_dup_drop")
-            & ~F.col("_frozen_drop")
-            & ~F.col("_contam_drop")
+            reduce(and_, [~F.col(flag) for stage, flag in CASCADE if stage != "select"])
         )
         picked = dsir_gumbel_topk(
             survivors, cfg.dsir_k, id_col=id_c, text_col=text_c
@@ -322,35 +323,19 @@ def curate(
         scored = scored.withColumn("_select_drop", F.lit(False))
 
     # --- funnel: ONE aggregation, first-failing-stage attribution -------
-    reason = (
-        F.when(~F.col("_eligible"), F.lit("eligibility"))
-        .when(F.col("_url_drop"), F.lit("urlfilter"))
-        .when(F.col("_quality_drop"), F.lit("quality"))
-        .when(F.col("_dup_drop"), F.lit("dedup"))
-        .when(F.col("_frozen_drop"), F.lit("frozen"))
-        .when(F.col("_contam_drop"), F.lit("decontaminate"))
-        .when(F.col("_select_drop"), F.lit("select"))
-        .otherwise(F.lit("kept"))
-    )
-    scored = scored.withColumn("_stage", reason)
-    # funnel_by adds a lineage dimension (per-source/per-lang attrition —
-    # the rule-metrics-per-partition ethos applied to curation); the
-    # default stays the compact (stage, n) shape
-    fb = cfg.extra.get("funnel_by")
-    group_cols = ([F.col(fb)] if fb else []) + [F.col("_stage").alias("stage")]
+    (stage0, flag0), *rest = CASCADE
+    reason = F.when(F.col(flag0), F.lit(stage0))
+    for stage, flag in rest:
+        reason = reason.when(F.col(flag), F.lit(stage))
+    scored = scored.withColumn("_stage", reason.otherwise(F.lit("kept")))
+    group_cols = ([F.col(cfg.funnel_by)] if cfg.funnel_by else []) + [
+        F.col("_stage").alias("stage")
+    ]
     funnel = scored.groupBy(*group_cols).agg(F.count(F.lit(1)).alias("n"))
 
     # --- curated output: ONE filter (+ optional tokenize/pack) ----------
     curated = scored.filter(F.col("_stage") == "kept").drop(
-        "_eligible",
-        "_url_drop",
-        "_quality_drop",
-        "_dup_drop",
-        "_frozen_drop",
-        "_contam_drop",
-        "_select_drop",
-        "_stage",
-        "_ql6",
+        *[flag for _, flag in CASCADE], "_stage", "_ql6"
     )
     if cfg.pack:
         from wikidataquality_spark.operators.bpe import load_bpe, with_bpe_tokens
@@ -359,10 +344,7 @@ def curate(
         curated = with_bpe_tokens(curated, art=load_bpe(), text_col=text_c)
         # both consumers below (the pack window's narrow projection and the
         # re-attach join's wide side) would re-run the encode UDF — seal it
-        curated = curated.persist()
-        curated.write.format("noop").mode("overwrite").save()
-        if persist_registry is not None:
-            persist_registry.append(curated)
+        curated = seal(curated, persist_registry)
         packed = pack_sequences(
             curated,
             seq_len=cfg.seq_len,

@@ -20,10 +20,11 @@ no partition lock, by design) changes that listing, the commit ABORTS, the
 scratch is discarded, and the partition is reported skipped — compaction
 retries on its next run; writer data is never lost. Crash safety: the
 two-rename swap has a window where the live dir is absent; every
-compact_dataset run begins by HEALING — an orphaned `*.old` whose live
-partition is missing renames back into place, and scratch/`*.old` dirs
-whose owning pid is dead are reaped. Same single-host semantics as the
-rest of io/locking.py; an object-store/Iceberg deployment replaces
+compact_dataset run begins by HEALING — a `*.old` whose partition lock
+is free is a crash orphan: it renames back into place when its live
+partition is missing and is reaped otherwise; scratch dirs whose owning
+pid is dead are reaped. Same single-host semantics as the rest of
+io/locking.py; an object-store/Iceberg deployment replaces
 stage+validate+swap with a RewriteDataFiles commit, which validates
 exactly the same way. Manifests are untouched: compaction changes file
 layout, never rows, so resume state and row counts stay valid.
@@ -120,20 +121,22 @@ def _pid_alive(pid: int) -> bool:
 
 def _heal(table_dir: str, partition_col: str) -> None:
     """Crash recovery, run before every compaction pass:
-      - `_compact_<pid>_<part>.old` from a DEAD owner with NO live partition
-        dir = a swap that died between its two renames → rename the old data
-        back into place (the partition becomes visible again; nothing lost);
-      - other scratch/`.old` dirs whose owning pid is dead → reaped (a
-        successful swap rmtree's its own `.old`; leftovers are crash orphans).
+      - `_compact_<pid>_<part>.old` whose `_lock_<part>` nobody holds = a
+        swap that died between its two renames (no live partition dir) →
+        rename the old data back into place (the partition becomes visible
+        again; nothing lost), or one that died before its rmtree → reaped;
+      - scratch dirs whose owning pid is dead → reaped (staging runs
+        unlocked, so only the pid can tell an orphan from a live stage).
 
-    A LIVE owner's dirs are never touched: a concurrent compactor is ALWAYS
-    inside its two-rename swap window at some instant, and healing its `.old`
-    mid-swap would rename the old data back under it, making its
-    os.rename(scratch, part_dir) fail ENOTEMPTY and crash the run mid-commit
-    (r04 ADVICE). The dead-owner branches additionally run under the same
-    per-partition `_lock_<part>` the swap holds, so a heal can never
-    interleave with a racing swap that took the lock between our liveness
-    check and our rename."""
+    Why the lock decides `.old`: a `.old` dir exists only while its owner
+    holds `_lock_<part>` — both swap renames and the rmtree run under it —
+    and flock locks die with their process. A free lock therefore means a
+    crashed owner, even when its pid has since been recycled by an unrelated
+    process (a pid check would hide that partition forever). A held lock
+    means a compactor is mid-swap: healing its `.old` would rename the old
+    data back under it, making its os.rename(scratch, part_dir) fail
+    ENOTEMPTY and crash the run mid-commit (r04 ADVICE). A recycled pid can
+    only delay a scratch reap, and readers never see scratch dirs."""
     if not os.path.isdir(table_dir):
         return
     for name in os.listdir(table_dir):
@@ -146,13 +149,17 @@ def _heal(table_dir: str, partition_col: str) -> None:
             part = base.split("_", 3)[3]
         except (IndexError, ValueError):
             continue
-        if _pid_alive(pid):
-            continue  # live owner — mid-operation, not an orphan
+        is_old = name.endswith(".old")
+        if not is_old and _pid_alive(pid):
+            continue  # live owner still staging
         live = os.path.join(table_dir, f"{partition_col}={part}")
-        with exclusive_lock(os.path.join(table_dir, f"_lock_{part}")):
-            if not os.path.exists(full):
-                continue  # another healer won the race under its lock turn
-            if name.endswith(".old") and not os.path.exists(live):
+        lock = os.path.join(table_dir, f"_lock_{part}")
+        # a heal never waits behind a swap: a held lock on an `.old` means
+        # its owner is mid-swap
+        with exclusive_lock(lock, blocking=not is_old) as held:
+            if not held or not os.path.exists(full):
+                continue  # live swap, or another healer won the race
+            if is_old and not os.path.exists(live):
                 os.rename(full, live)  # heal the vanished partition
             else:
                 shutil.rmtree(full, ignore_errors=True)

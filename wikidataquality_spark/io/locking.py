@@ -51,16 +51,24 @@ def user_cache_root(name: str) -> str:
 
 
 @contextmanager
-def exclusive_lock(lock_path: str):
+def exclusive_lock(lock_path: str, blocking: bool = True):
     """Exclusive advisory flock held for the with-block. The lock file is
     created 0o600 (a pre-squatted file owned by another uid fails loudly at
-    open() rather than silently sharing a world-writable lock)."""
+    open() rather than silently sharing a world-writable lock).
+
+    Yields whether the lock is held: always True when `blocking`; with
+    blocking=False, False when another open of the file holds it (the
+    block then runs unlocked and must not touch what the lock guards)."""
     os.makedirs(os.path.dirname(lock_path) or ".", exist_ok=True)
     fd = os.open(lock_path, os.O_WRONLY | os.O_CREAT, 0o600)
     try:
-        fcntl.flock(fd, fcntl.LOCK_EX)
         try:
-            yield
+            fcntl.flock(fd, fcntl.LOCK_EX | (0 if blocking else fcntl.LOCK_NB))
+        except BlockingIOError:
+            yield False
+            return
+        try:
+            yield True
         finally:
             fcntl.flock(fd, fcntl.LOCK_UN)
     finally:

@@ -183,19 +183,16 @@ def cross_corpus_dedup_marks(
     text_col: str = "text",
     id_col: str = "doc_id",
     fp_rate: float = 0.01,
-    n_keys_hint: int | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """Convenience composition: build the filter over the corpus's exact
     text keys, probe the batch. Returns (marks, bloom) so callers persist
     the filter table and reuse it across batches — rebuilding it per batch
     would re-pay the corpus scan the filter exists to avoid.
 
-    Sizing needs n_keys up front (the filter's ONE structural parameter);
-    pass `n_keys_hint` from the corpus manifest when known, else this pays
-    one count() action — acceptable for a build that runs once per frozen
-    corpus, not per batch."""
-    n = n_keys_hint if n_keys_hint is not None else corpus.count()
-    m_bits, k = bloom_size(max(n, 1), fp_rate)
+    Sizing needs n_keys up front (the filter's ONE structural parameter),
+    so this pays one count() of the corpus — acceptable for a build that
+    runs once per frozen corpus, not per batch."""
+    m_bits, k = bloom_size(max(corpus.count(), 1), fp_rate)
     bloom = build_bloom(corpus, F.col(text_col), m_bits, k)
     marks = bloom_member_marks(batch, bloom, F.col(text_col), m_bits, k, id_col)
     return marks, bloom

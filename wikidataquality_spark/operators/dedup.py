@@ -861,41 +861,23 @@ def repartition_by_host_salted(
     url_col: str = "url",
     hot_fraction: float = 0.05,
     n_salts: int = 16,
-    use_sketch: bool = True,
 ) -> DataFrame:
     """Hash-partition by url-host, salting hosts that exceed hot_fraction of
     rows so no partition is dominated by one domain (explicit-salting mandate
     of BASELINE.json:6; AQE skew-join remains on as the safety net).
 
-    The DEFAULT hot-host detection is the Misra–Gries heavy-hitter pass
-    (operators/heavyhitters.py) — the production-scale path: its shuffle is
-    ≤ P·(k+1) rows regardless of how many DISTINCT hosts the crawl has, and
-    its guarantee is one-sided the safe way: every truly hot host is
-    salted, warm hosts may be over-salted harmlessly (a few extra salt
-    groups — partitioning semantics are unchanged either way, so the
-    scale-safe path is the right default; r04 VERDICT flagged the old
-    exact-count default, whose per-host groupBy shuffles one row per
-    distinct host, ~10⁹ on a full crawl). use_sketch=False swaps in that
-    exact per-host count — exact hot-set membership at the threshold edge,
-    for corpora whose host cardinality is known small. Either way the set
-    is tiny and broadcast inside the `isin` literal."""
-    host = host_of(url_col)
-    if use_sketch:
-        from wikidataquality_spark.operators.heavyhitters import hot_keys
+    Hot hosts come from the Misra–Gries heavy-hitter pass
+    (operators/heavyhitters.py): its shuffle is ≤ P·(k+1) rows regardless
+    of how many DISTINCT hosts the crawl has (an exact per-host groupBy
+    shuffles one row per distinct host, ~10⁹ on a full crawl — r04
+    VERDICT), and its guarantee is one-sided the safe way: every truly hot
+    host is salted, warm hosts may be over-salted harmlessly (a few extra
+    salt groups — partitioning semantics are unchanged). The set is tiny
+    and broadcast inside the `isin` literal."""
+    from wikidataquality_spark.operators.heavyhitters import hot_keys
 
-        hot = hot_keys(df.select(host.alias("host")), "host", hot_fraction)
-    else:
-        per_host = df.groupBy(host.alias("host")).count().persist()
-        try:
-            total = per_host.agg(F.sum("count")).first()[0] or 0
-            hot = [
-                r["host"]
-                for r in per_host.filter(
-                    F.col("count") > hot_fraction * total
-                ).collect()
-            ]  # only the (tiny) hot set ever reaches the driver
-        finally:
-            per_host.unpersist()
+    host = host_of(url_col)
+    hot = hot_keys(df.select(host.alias("host")), "host", hot_fraction)
     # NULL host (unparseable URL — host_of's own defence case) can itself be
     # the hottest "host": a crawl with 10% malformed URLs puts them ALL in
     # one (NULL, 0) partition unless salted. isin() is NULL for NULL input

@@ -13,9 +13,9 @@ stored and scored.
 
 Spark-first shape, same discipline as the IVF assign fix (r03 VERDICT #1):
 
-  - encoding is m static argmin folds over LITERAL codebook banks — one
-    codegen'd projection, NO Exchange, NO Window, no Python. The codebook
-    is a train-once versioned artifact (models/pq_codebooks_v1.json,
+  - encoding is m argmins over LITERAL codebook banks in one vectorized
+    Arrow pass — a projection, NO Exchange, NO Window. The codebook is a
+    train-once versioned artifact (models/pq_codebooks_v1.json,
     tools/train_pq.py), so the DuckDB oracle inlines identical constants
     and the integer codes are gated bit-for-bit;
   - ADC scan: the query's subvector-to-centroid distance table (m×k
@@ -106,101 +106,43 @@ def train_pq_codebooks(
     return out
 
 
-def _sub(vec: Column, j: int, dsub: int) -> Column:
-    return F.slice(vec, j * dsub + 1, dsub)
-
-
-def _sq_dist(a: Column, lit_c: list[float]) -> Column:
-    """Squared L2 distance to a literal centroid, accumulated left-to-right
-    in element order — bit-identical to the DuckDB twin's list_aggregate
-    sum AND to the zip_with/aggregate fold this replaces. SCALAR element_at
-    algebra, not a HOF fold: the fold allocated a zipped struct array and
-    ran lambda machinery per element, and with m·k of these per row the
-    encode measured 18s per 5000 rows at m=32/k=16 (r05 session) — the
-    unrolled form is plain codegen arithmetic."""
-    return _sq_dist_at(a, 0, lit_c)
-
-
-def _sq_dist_at(vec: Column, offset: int, lit_c: list[float]) -> Column:
-    """_sq_dist against vec[offset : offset+len(lit_c)] without materializing
-    the slice: element_at over a SLICE expression re-evaluates the slice per
-    term, so the encode indexes the full vector directly."""
+def _sq_dist(vec: Column, lit_c: list[float]) -> Column:
+    """Squared L2 distance to a literal vector, accumulated left-to-right
+    in element order — bit-identical to the DuckDB twins' list_aggregate
+    sums. SCALAR element_at algebra, not a HOF fold: a zip_with/aggregate
+    fold allocates a zipped struct array and runs lambda machinery per
+    element (r05 session) — the unrolled form is plain codegen arithmetic."""
     acc: Column = F.lit(0.0)
     for d, v in enumerate(lit_c):
-        x = F.element_at(vec, offset + d + 1).cast("double")
+        x = F.element_at(vec, d + 1).cast("double")
         acc = acc + (x - F.lit(float(v))) * (x - F.lit(float(v)))
     return acc
 
 
-def pq_encode(
+def pq_encode_arrow(
     df: DataFrame, art: dict, vcol: str = "embedding", out: str = "pq_code"
 ) -> DataFrame:
     """Append `out`: array<int> of length m — per-subspace argmin centroid
     ids (0-based). NULL, wrong-length, or degenerate vectors (any NULL /
     NaN / ±Inf element) encode to NULL (the caller exempts them, the house
     dedup convention). The degenerate guard is what keeps the downstream
-    ADC scan TOTAL: a NaN distance makes every strict-< comparison false,
-    the argmin fold would return its -1 seed, and `element_at(lut, 0)`
-    aborts the whole job with INVALID_INDEX_OF_ZERO under ANSI — one bad
-    crawled embedding must not kill a 100 TB scan. ZERO shuffle, zero
-    Python."""
-    m, k, dim = art["m"], art["k"], art["dim"]
-    dsub = dim // m
-    vec = F.col(vcol)
-    codes = []
-    for j in range(m):
-        dists = F.array(
-            *[
-                _sq_dist_at(vec, j * dsub, art["codebooks"][j][c])
-                for c in range(k)
-            ]
-        )
-        # first-minimal argmin via array_position(arr, array_min(arr)):
-        # first occurrence on ties — exactly DuckDB's
-        # list_indexof(l, list_min(l)) in the twin, and exactly the old
-        # strict-< struct fold this replaces (the fold was HOF machinery
-        # per candidate; array_min/array_position are plain codegen).
-        # array_position is 1-based; codes are 0-based.
-        codes.append(
-            (F.array_position(dists, F.array_min(dists)) - 1).cast("int")
-        )
-    # x.isNull() first: it is never NULL itself, so `exists` is TRUE/FALSE
-    # (never NULL) and the ~ below cannot leak a NULL condition
-    degenerate = F.exists(
-        vec,
-        lambda x: x.isNull()
-        | F.isnan(x.cast("double"))
-        | (F.abs(x.cast("double")) == F.lit(float("inf"))),
-    )
-    code_arr = F.when(
-        vec.isNotNull() & (F.size(vec) == dim) & ~degenerate, F.array(*codes)
-    )
-    return df.withColumn(out, code_arr)
+    ADC scan TOTAL: one bad crawled embedding must not kill a 100 TB scan.
+    ZERO shuffle.
 
-
-def pq_encode_arrow(
-    df: DataFrame, art: dict, vcol: str = "embedding", out: str = "pq_code"
-) -> DataFrame:
-    """BIT-IDENTICAL Arrow/numpy twin of pq_encode for corpus-scale
-    encodes. The JVM expression form is a ~1024-term projection that
-    exceeds the whole-stage-codegen method limit, so Spark evaluates it
-    INTERPRETED — measured ~1 ms/row (r05 session), which at corpus scale
-    is the dominant cost of anything built on codes. This form runs one
-    vectorized numpy pass per Arrow batch (~100× cheaper) and preserves
-    exact decision parity with pq_encode/pq_encode_sql:
+    One vectorized numpy pass per Arrow batch: a JVM expression form (m·k
+    unrolled distance sums) exceeds the whole-stage-codegen method limit,
+    so Spark evaluated it INTERPRETED — measured ~1 ms/row (r05 session),
+    ~100× this form. Exact decision parity with the DuckDB twin
+    pq_encode_sql:
       - distances accumulate SEQUENTIALLY over dimensions (a python d-loop
         of row×centroid-vectorized steps — never np.sum, whose pairwise
-        reduction rounds differently), matching the JVM/SQL left-to-right
-        sums term for term in float64;
-      - np.argmin is first-minimal, matching the strict-< / list_indexof
-        tie policy;
+        reduction rounds differently), matching the SQL left-to-right sums
+        term for term in float64;
+      - np.argmin is first-minimal, matching list_indexof's tie policy;
       - the degenerate guard matches: NULL / wrong-length vectors and any
         non-finite element (Arrow hands NULL elements of float lists as
-        NaN, which the JVM guard also rejects) encode to NULL.
-    Parity is gated in tests/test_pq.py against both the JVM form and the
-    DuckDB twin. Choose by context: pq_encode keeps the zero-Python plan
-    the encode-plan gate pins (fine at fixture scale and for plan audits);
-    this one is the scan-path encoder."""
+        NaN, which the SQL guard also rejects) encode to NULL.
+    Parity is gated in tests/test_pq.py against the DuckDB twin."""
     m, k, dim = art["m"], art["k"], art["dim"]
     dsub = dim // m
     cb = [[[float(x) for x in c] for c in sub] for sub in art["codebooks"]]
@@ -308,8 +250,6 @@ def pq_adc_rerank_topk(
     touched for only n_candidates rows: the shortlist (≤ C ids) broadcasts
     into a BroadcastHashJoin against the vector table, so the 100 TB float
     column is point-read, never scanned, never shuffled."""
-    # arrow encoder: this is the corpus-scan path (see pq_encode_arrow's
-    # contract note — the JVM form interprets beyond the codegen limit)
     shortlist = pq_adc_topk(
         pq_encode_arrow(embeddings, art), query, art, n_candidates, id_col
     ).select(id_col)
@@ -338,8 +278,8 @@ def _list_sql(vals: list[float]) -> str:
 def pq_encode_sql(art: dict, vcol: str = "embedding") -> str:
     """SQL expression: the m-int code list for `vcol` (NULL when NULL,
     wrong length, or any element is NULL/NaN/±Inf — the same degenerate
-    guard as pq_encode). list_indexof(l, list_min(l)) is the first-minimal
-    argmin, matching the Spark fold's strict-< tie policy."""
+    guard as pq_encode_arrow). list_indexof(l, list_min(l)) is the
+    first-minimal argmin, matching np.argmin's tie policy."""
     m, k, dim = art["m"], art["k"], art["dim"]
     dsub = dim // m
     parts = []

@@ -21,10 +21,9 @@ Output schema (FIXTURES.md "expected outputs"):
 
 from __future__ import annotations
 
-from dataclasses import dataclass
-
 from pyspark.sql import DataFrame
 
+from wikidataquality_spark.operators.barrier import seal
 from wikidataquality_spark.operators.dedup import dup_marks
 from wikidataquality_spark.operators.enrich import enriched
 from wikidataquality_spark.operators.scrub import scrub_column
@@ -56,32 +55,23 @@ PIPELINE_RULES: tuple[Rule, ...] = (
     Rule("format.pii_email", "flag", {"column": "has_pii_email"}, severity="soft"),
 )
 
-@dataclass
-class PipelineConfig:
-    rules: tuple[Rule, ...] = PIPELINE_RULES
-    id_col: str = "url"
-    # Persist the narrow post-UDF projection: the dedup stage consumes the
-    # pipeline twice (flag computation + rejoin), and without a persist the
-    # whole extract/langid/perplexity chain re-executes per consumer. At
-    # cluster scale the equivalent is materializing the stage boundary to
-    # Iceberg (which the resume story wants anyway).
-    persist_intermediate: bool = True
-    # OPT-IN ftfy-class pre-clean (mojibake repair → NFC → control strip)
-    # fused into the enrich pass, BEFORE any stat/model/fingerprint. Default
-    # False: the golden fixtures pin byte-identical extracted/scrubbed text,
-    # and normalization is a corpus-semantics decision, not a bug fix.
-    normalize_text: bool = False
-
 
 def validate(
     pages: DataFrame,
-    config: PipelineConfig | None = None,
+    *,
+    normalize: bool = False,
     dedup_state: DataFrame | None = None,
-    persist_registry: list | None = None,
+    persist_registry: list,
 ) -> DataFrame:
     """Full validation DAG over a pages DataFrame
     (url, warc_ts, html, text, lang). Returns every input row annotated with
     stats, model scores, dup flags, violations, keep, scrubbed_text.
+
+    `normalize`: OPT-IN ftfy-class pre-clean (mojibake repair → NFC →
+    control strip) fused into the enrich pass, BEFORE any stat/model/
+    fingerprint. Default off: the golden fixtures pin byte-identical
+    extracted/scrubbed text, and normalization is a corpus-semantics
+    decision, not a bug fix.
 
     `dedup_state`: optional fingerprint table of previously-validated
     documents (operators.dedup.dup_fingerprints schema) — makes the dedup
@@ -89,14 +79,11 @@ def validate(
     state has seen, without re-reading any body (the EvaluateConstraintReport
     incremental re-check recast; used by streaming.incremental_validate).
 
-    `persist_registry`: optional list the internally persisted intermediate
-    is appended to, so a caller that invokes validate() repeatedly in one
-    session (a foreachBatch micro-batch loop — one epoch per call) can
-    unpersist it when its actions are done instead of leaking one cached
-    dataset per epoch. One-shot callers may ignore it: the cache dies with
-    the session."""
-    cfg = config or PipelineConfig()
-
+    `persist_registry`: the owner list of an `operators.barrier.owned_caches`
+    block. validate() seals exactly one frame into it, the enrich output,
+    appended last; the caller's block releases it once the caller's actions
+    are done, so repeated calls in one session (one foreachBatch epoch per
+    call) never accumulate cached intermediates."""
     # Stages 1+2 — fused: extract + langid + perplexity + every heuristic
     # stat + the regex conditions, all in ONE pandas-UDF pass (one
     # ArrowEvalPython node; operators/enrich.py documents why fusing beats
@@ -115,25 +102,14 @@ def validate(
     # The fat html column goes once text is extracted (column pruning by
     # construction — html must never travel through the dedup shuffles).
     df = pages.withColumn(
-        "_enriched", enriched("html", normalize=cfg.normalize_text)
+        "_enriched", enriched("html", normalize=normalize)
     ).selectExpr(
         "*", *[f"_enriched.{c} AS {c}" for c in enrich_cols]
     ).drop("_enriched", "html")
-    if cfg.persist_intermediate:
-        # Eager materialization: the dedup stage fans out into several
-        # consumers (flag branch, broadcast build, rejoin) that Spark launches
-        # CONCURRENTLY (broadcast exchanges run on separate scheduler
-        # threads). Against a cold cache each consumer races to compute the
-        # whole UDF+stats plan — event logs showed 4 identical 12s stages
-        # running side by side. The cache is sealed with a NOOP-format write:
-        # it computes every partition (populating the cache) without the
-        # count()'s extra aggregation stage or its driver-side result collect
-        # — nothing flows back to the driver but task-completion events
-        # (r03 VERDICT #6).
-        df = df.persist()
-        df.write.format("noop").mode("overwrite").save()
-        if persist_registry is not None:
-            persist_registry.append(df)
+    # Sealed (operators/barrier.py): the dedup stage fans out into several
+    # consumers (flag branch, broadcast build, rejoin) that would otherwise
+    # each race to compute the whole UDF+stats plan.
+    df = seal(df, persist_registry)
 
     # Stage 3 — cross-row dedup marks (the shuffle stages). Signatures come
     # from the fused enrich pass (sig_col), so this stage is pure JVM: no
@@ -141,13 +117,13 @@ def validate(
     df = dup_marks(
         df,
         text_col="text_extracted",
-        id_col=cfg.id_col,
+        id_col="url",
         sig_col="minhash_sig",
         state=dedup_state,
     )
 
     # Stage 4 — rule checks → violations array → keep decision (codegen).
-    df = apply_rules(df, list(cfg.rules))
+    df = apply_rules(df, list(PIPELINE_RULES))
 
     # Stage 5 — scrub (codegen regex chain; byte-deterministic).
     df = df.withColumn("scrubbed_text", scrub_column("text_extracted"))

@@ -198,6 +198,7 @@ def incremental_validate(
     from pyspark.sql import functions as SF
     from pyspark.sql import types as ST
 
+    from wikidataquality_spark.operators.barrier import owned_caches
     from wikidataquality_spark.operators.dedup import dup_fingerprints
     from wikidataquality_spark.pipeline import results, validate
 
@@ -299,19 +300,15 @@ def incremental_validate(
                         "out-of-order batches break the incremental == batch "
                         "dedup contract; feed batches in ascending url ranges"
                     )
-        # track the pipeline's internal persist so THIS epoch's cache can be
-        # released once both writes land — a long-running stream otherwise
-        # leaks one cached intermediate per epoch until storage-memory
-        # eviction starts thrashing the live batch. The release sits in a
-        # finally: a failed sink write would otherwise leak the cache, and a
-        # RETRIED epoch persists a fresh copy per attempt — repeated retries
-        # would accumulate exactly the sealed caches this mechanism exists
-        # to prevent.
-        persisted: list = []
-        try:
-            validated = validate(
-                batch_df, dedup_state=state, persist_registry=persisted
-            )
+        # THIS epoch's enrich cache is released once both writes land — a
+        # long-running stream otherwise leaks one cached intermediate per
+        # epoch until storage-memory eviction starts thrashing the live
+        # batch. owned_caches releases on every way out: a failed sink write
+        # would otherwise leak the cache, and a RETRIED epoch seals a fresh
+        # copy per attempt — repeated retries would accumulate exactly the
+        # caches this exists to prevent.
+        with owned_caches() as owner:
+            validated = validate(batch_df, dedup_state=state, persist_registry=owner)
             out = results(validated).withColumn("_epoch", SF.lit(epoch_id))
             (
                 out.write.mode("overwrite")
@@ -320,18 +317,16 @@ def incremental_validate(
                 .parquet(sink_dir)
             )
             if state_dir is not None:
-                # fingerprints come off the CACHED pre-dedup intermediate
-                # (persisted[0]: enrich output with url / text_extracted /
-                # minhash_sig — the EXACT inputs dup_marks keyed on): rows
-                # and values are identical to the validated frame (the
-                # pipeline is scrub-not-drop), but reading the cache skips
-                # replaying the dup_marks window/join shuffles that column
-                # pruning cannot eliminate — previously paid once per epoch
-                # on the fingerprint write (r04 review). Falls back to
-                # `validated` if the pipeline config disabled the persist.
-                fp_src = persisted[0] if persisted else validated
+                # fingerprints come off validate()'s sealed enrich cache
+                # (owner[-1]: url / text_extracted / minhash_sig — the EXACT
+                # inputs dup_marks keyed on): rows and values are identical
+                # to the validated frame (the pipeline is scrub-not-drop),
+                # but reading the cache skips replaying the dup_marks
+                # window/join shuffles that column pruning cannot eliminate
+                # — previously paid once per epoch on the fingerprint write
+                # (r04 review).
                 fp = dup_fingerprints(
-                    fp_src,
+                    owner[-1],
                     text_col="text_extracted",
                     id_col="url",
                     sig_col="minhash_sig",
@@ -342,9 +337,6 @@ def incremental_validate(
                     .partitionBy("_epoch")
                     .parquet(state_dir)
                 )
-        finally:
-            for cached in persisted:
-                cached.unpersist()
 
     return (
         pages_stream.writeStream.foreachBatch(_process)
