@@ -131,9 +131,12 @@ def test_run_pipeline_cli_end_to_end(spark, tmp_path):
     rows = read_run(spark, out_dir, "r1").count()
     assert rows == 200
 
+    manifests = (read_manifest(out_dir), read_manifest(met_dir))
     rc2, res2 = run(["--input", corpus, "--output", out_dir, "--metrics", met_dir,
                      "--resume"])
     assert rc2 == 0 and res2["status"] == "nothing_to_do"
+    # nothing to do appends no run to either manifest
+    assert (read_manifest(out_dir), read_manifest(met_dir)) == manifests
 
 
 def test_csv_failfast_on_corrupt_rows(spark, tmp_path):

@@ -186,3 +186,46 @@ def test_pipeline_plan_shape(spark):
             assert "InMemoryRelation" in context, plan
     assert "InMemoryTableScan" in plan
     assert "BroadcastHashJoin" in plan
+
+
+def _plan_nodes(plan) -> list[str]:
+    """Node names of a JVM logical plan, not descending into an
+    InMemoryRelation's stored plan (children() excludes inner children)."""
+    names = [plan.nodeName()]
+    kids = plan.children()
+    for i in range(kids.size()):
+        names += _plan_nodes(kids.apply(i))
+    return names
+
+
+@pytest.mark.parametrize("with_state", [False, True])
+def test_emptiness_and_partition_listing_read_only_the_enrich_seal(spark, with_state):
+    """run_pipeline's emptiness check and write_partitioned's partition
+    listing are evaluated over validate()'s output without a cache of
+    their own: both must prune to the sealed enrich frame. dup_marks' flag
+    left join is eliminated (the flags are unique per url and none of
+    their columns is read) — if it ever stops being eliminable, the listing
+    silently re-runs dedup before the write runs it again."""
+    from wikidataquality_spark.datagen import generate_pages
+    from wikidataquality_spark.metrics import partition_column
+    from wikidataquality_spark.operators.dedup import dup_fingerprints
+    from wikidataquality_spark.operators.extract import extracted_text
+
+    pages = partition_column(spark.createDataFrame(generate_pages(60, seed=5)))
+    state = None
+    if with_state:
+        prior = spark.createDataFrame(generate_pages(30, seed=6))
+        state = dup_fingerprints(
+            prior.withColumn("text_extracted", extracted_text("html")),
+            text_col="text_extracted",
+        )
+    with owned_caches() as owner:
+        validated = validate(pages, dedup_state=state, persist_registry=owner)
+        for probe in (
+            validated.select().limit(1),
+            validated.select("partition").groupBy("partition").count(),
+        ):
+            nodes = _plan_nodes(probe._jdf.queryExecution().optimizedPlan())
+            assert nodes[-1] == "InMemoryRelation", nodes
+            assert nodes.count("InMemoryRelation") == 1, nodes
+            assert not [n for n in nodes if "Join" in n or "Window" in n], nodes

@@ -163,13 +163,26 @@ def _written_metrics(spark, met_dir: str, run_id: str):
     return sorted(map(tuple, df.collect()), key=repr)
 
 
+def _manifest_matches_written_rows(spark, out_dir: str, run_id: str) -> None:
+    """The manifest's per-partition row_counts (the listing) equal the rows
+    read back from the partitions the run wrote (the write): the two are
+    separate evaluations of the validated frame."""
+    from wikidataquality_spark.io.catalog import read_manifest, read_run
+
+    entry = next(r for r in read_manifest(out_dir)["runs"] if r["run_id"] == run_id)
+    written = read_run(spark, out_dir, run_id)
+    counted = written.groupBy(F.col("partition").cast("string")).count().collect()
+    assert entry["row_counts"] == {str(p): n for p, n in counted}
+
+
 @pytest.mark.parametrize("by", ["date", "host"])
 def test_written_metrics_equal_direct_rule_metrics(spark, tmp_path, by):
     """The metrics table run_pipeline writes (aggregated from the partitions
     the run just wrote) equals rule_metrics(validate(pages)) computed
     directly — with a NULL-warc_ts page and an unparseable-host page (the
     NULL partition read_run's "None" arm returns), on a first run and on a
-    --resume run that skips the completed partitions."""
+    --resume run that skips the completed partitions. On both runs the
+    manifest's row_counts equal the rows the run wrote."""
     from wikidataquality_spark.io.catalog import completed_partitions
 
     odd = [
@@ -191,6 +204,7 @@ def test_written_metrics_equal_direct_rule_metrics(spark, tmp_path, by):
             "--partition-by", by]
 
     _run(["--input", str(first), "--run-id", "m1", *base])
+    _manifest_matches_written_rows(spark, out, "m1")
     got1 = _written_metrics(spark, met, "m1")
     assert got1 == _direct_metrics(spark, str(first), by)
     assert any(r[0] is None for r in got1)  # the NULL partition is measured
@@ -198,6 +212,7 @@ def test_written_metrics_equal_direct_rule_metrics(spark, tmp_path, by):
     done = completed_partitions(out)
     assert "None" in done
     _run(["--input", str(full), "--run-id", "m2", "--resume", *base])
+    _manifest_matches_written_rows(spark, out, "m2")
     got2 = _written_metrics(spark, met, "m2")
     assert got2 == _direct_metrics(spark, str(full), by, done=done)
     assert any(r[0] is None for r in got2)

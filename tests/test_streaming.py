@@ -219,6 +219,52 @@ def test_incremental_validate_rejects_out_of_order_batches(spark, tmp_path):
         q.awaitTermination()
 
 
+def test_incremental_validate_rejects_unknown_state_kind(spark, tmp_path):
+    """A state table holding rows of an older fingerprint format (v1's
+    kind='exact', whose k2 was length(text)) must fail the stream loudly:
+    its rows would otherwise never match and every twin of an earlier
+    epoch would silently survive. Epoch 0 writes real state; a v1 row is
+    then appended to it, and epoch 1, resumed from the same checkpoint,
+    must refuse."""
+    import glob
+    import os
+    import shutil
+
+    from pyspark.sql.utils import StreamingQueryException
+
+    from wikidataquality_spark.datagen import write_pages_parquet
+    from wikidataquality_spark.streaming.windows import incremental_validate
+
+    corpus = write_pages_parquet(str(tmp_path / "pages.parquet"), 40, seed=31)
+    split = str(tmp_path / "split")
+    spark.read.parquet(corpus).repartitionByRange(2, "url").write.parquet(split)
+    parts = sorted(glob.glob(os.path.join(split, "part-*")))
+    assert len(parts) == 2
+    src = str(tmp_path / "src")
+    os.makedirs(src)
+    sink, ckpt, state = (str(tmp_path / d) for d in ("sink", "ckpt", "state"))
+    schema = spark.read.parquet(split).schema
+
+    def run() -> None:
+        stream = spark.readStream.schema(schema).parquet(src)
+        q = incremental_validate(spark, stream, sink, ckpt, state_dir=state)
+        try:
+            q.awaitTermination()
+        finally:
+            q.stop()
+
+    shutil.copy2(parts[0], os.path.join(src, os.path.basename(parts[0])))
+    run()
+    spark.createDataFrame(
+        [("http://", "exact", 1, 17, 0)],
+        "url string, kind string, k1 long, k2 long, _epoch long",
+    ).write.mode("append").partitionBy("_epoch").parquet(state)
+
+    shutil.copy2(parts[1], os.path.join(src, os.path.basename(parts[1])))
+    with pytest.raises(StreamingQueryException, match="unknown fingerprint kind 'exact'"):
+        run()
+
+
 def test_incremental_validate_recovers_from_empty_state_dir(spark, tmp_path):
     """An existing-but-empty state_dir (epoch 0 crashed before committing any
     _epoch= partition, or an operator pre-created the directory) must behave

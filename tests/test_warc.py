@@ -491,6 +491,46 @@ def test_encode_warc_partitions_round_trips(spark):
     assert by_url[None]["warc_ts"] == datetime(1970, 1, 1)
 
 
+def test_encoded_partitions_reingest_through_spark(spark, tmp_path):
+    """Re-ingest gate on the Spark path: encode_warc_partitions → segment
+    files → read_warc → warc_to_documents gives back every source row with
+    a url, url/warc_ts/html byte for byte — a whitespace-bearing url as its
+    documented %XX serialization (build_warc_record's _WS_RE contract),
+    percent-encoded and unicode (IRI) urls verbatim — and filters the
+    NULL-url row. Timestamps are whole seconds: WARC-Date has no finer
+    resolution."""
+    import re
+
+    rows = [
+        ("http://e.x/a%20b", TS1, HTML_A),
+        ("http://e.x/p?q=100%25+done", TS2, HTML_C),
+        ("http://e.x/%E4%B8%AD%E6%96%87/path", TS1, b"<p>encoded</p>"),
+        ("http://e.x/a b\tc", TS2, b"<p>whitespace</p>"),
+        ("http://example.com/中文/ß?q=naïve", TS1, HTML_A),
+        ("http://e.x/empty", TS2, HTML_B),
+        (None, TS1, HTML_C),
+    ]
+    docs = spark.createDataFrame(rows, "url string, warc_ts timestamp, html binary")
+    docs = docs.repartition(3)
+    d = tmp_path / "reingest"
+    d.mkdir()
+    for i, r in enumerate(encode_warc_partitions(docs).collect()):
+        (d / f"seg-{i:05d}.warc.gz").write_bytes(bytes(r["warc_blob"]))
+    back = warc_to_documents(read_warc(spark, str(d))).collect()
+
+    def ws_escaped(url: str) -> str:
+        return re.sub(r"[ \t\r\n\x0b\x0c]", lambda m: f"%{ord(m.group(0)):02X}", url)
+
+    expect = sorted(
+        (ws_escaped(r["url"]), r["warc_ts"], bytes(r["html"]))
+        for r in docs.collect()
+        if r["url"] is not None
+    )
+    got = sorted((r["url"], r["warc_ts"], bytes(r["html"])) for r in back)
+    assert got == expect
+    assert ("http://e.x/a%20b%09c", TS2, b"<p>whitespace</p>") in got
+
+
 def test_wet_wrap_inversion_property():
     """Hypothesis: the extractor-canonical wrap is inverted by the REAL
     extractor for arbitrary unicode text — entities, angle brackets,

@@ -12,14 +12,15 @@ Local sandbox run (same code path, local master):
 
 Flow (BASELINE.json:6/14): read pages (WARC/WET: parse each segment once
 into a sealed projection → drop recrawl captures) → validate (enrich,
-sealed in its own cache, after which the parse is released → dedup marks →
-rules → scrub → decide) → write results partitioned by warc_ts date (or
-url-host) with a manifest snapshot → read this run's written partitions
-back and append per-partition rule metrics (and, with --url-sketches,
-distinct-url sketches) from them → on --resume, partitions already
-recorded in the output manifest are skipped (checkpoint-resume contract).
-Every sealed frame is released by the call's end at the latest
-(operators/barrier.owned_caches).
+sealed in its own cache → dedup marks → rules → scrub → decide) → an
+emptiness check over validate()'s output, which reads only the enrich
+seal, after which the parse is released → write results partitioned by
+warc_ts date (or url-host) with a manifest snapshot → read this run's
+written partitions back and append per-partition rule metrics (and, with
+--url-sketches, distinct-url sketches) from them → on --resume,
+partitions already recorded in the output manifest are skipped
+(checkpoint-resume contract). Every sealed frame is released by the
+call's end at the latest (operators/barrier.owned_caches).
 """
 
 from __future__ import annotations
@@ -108,10 +109,10 @@ def _run(spark, args: argparse.Namespace, owner: list) -> int:
     from wikidataquality_spark.pipeline import results, validate
 
     t0 = time.perf_counter()
-    # the parse has no reader once validate() has sealed its enrich cache
-    # (dup_marks reads that and the sealed resume state), so it is released
-    # when this inner block exits, before the write; the resume state and
-    # the enrich cache belong to the call-wide owner
+    # the parse has no reader once validate()'s enrich cache and the resume
+    # state are sealed (dup_marks reads those two), so it is released when
+    # this inner block exits, before the write; the resume state and the
+    # enrich cache belong to the call-wide owner
     with owned_caches() as parse_owner:
         if args.input_format in ("warc", "wet"):
             from wikidataquality_spark.io.warc import (
@@ -123,10 +124,10 @@ def _run(spark, args: argparse.Namespace, owner: list) -> int:
 
             project = warc_to_documents if args.input_format == "warc" else wet_to_documents
             # one parse per call: the recrawl drop below reads its input twice
-            # (narrow drop-key side + fat anti-join side), and the emptiness
-            # probe, the resume fingerprints and validate()'s enrich seal each
-            # evaluate the plan again — without the seal every one of them
-            # decompresses and parses every segment.
+            # (narrow drop-key side + fat anti-join side), and the resume
+            # fingerprints and validate()'s enrich seal each evaluate the
+            # plan again — without the seal every one of them decompresses
+            # and parses every segment.
             parsed = seal(project(read_warc(spark, args.input)), parse_owner)
             # a real crawl captures the same url repeatedly (recrawls, http/https
             # and www variants) — but the DAG's dedup anchors key on url, so two
@@ -206,24 +207,26 @@ def _run(spark, args: argparse.Namespace, owner: list) -> int:
 
             pages = repartition_by_host_salted(pages, args.salt_hot)
 
-        # limit-1 probe, not count(): a full count() here cost one EXTRA scan of
-        # the whole input before validation — at corpus scale that scan is a
-        # second 100 TB read. The docs total comes back from the write manifest
-        # (validate() annotates every input row, so written rows == input rows).
-        if pages.isEmpty():
-            print(json.dumps({"status": "nothing_to_do", "input": args.input}))
-            return 0
-        if dedup_state is not None:
-            # sealed: dup_marks reads the state twice, and each read would
-            # otherwise re-extract and re-sign every completed document
-            dedup_state = seal(dedup_state, owner)
-
         validated = validate(
             pages,
             normalize=args.normalize,
             dedup_state=dedup_state,
             persist_registry=owner,
         )
+        # limit-1 check, not count(): Catalyst prunes it to validate()'s
+        # enrich seal (dup_marks' flag join is eliminated), so it costs no
+        # scan of its own. The docs total comes back from the write manifest
+        # (validate() annotates every input row, so written rows == input rows).
+        if validated.isEmpty():
+            print(json.dumps({"status": "nothing_to_do", "input": args.input}))
+            return 0
+        if dedup_state is not None:
+            # sealed after the check, so a resumed run with nothing left
+            # fingerprints nothing: dup_marks reads the state twice, and each
+            # read would otherwise re-extract and re-sign every completed
+            # document. The write still reads this cache — Spark substitutes
+            # cached plans into `validated` when an action runs.
+            seal(dedup_state, owner)
     out = validated.select(*results(validated).columns, "partition")
     entry = write_partitioned(
         out, args.output, partition_col="partition", run_id=args.run_id,

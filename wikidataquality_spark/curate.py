@@ -225,9 +225,9 @@ def curate(
         flagged = flagged.withColumn("_url_drop", F.lit(False))
 
     scored = with_quality_score(flagged, text_col=text_c, art=load_quality_model())
-    scored = scored.withColumn("_ql6", F.round("quality_logit", 6))
     scored = with_ppl_bucket(
-        scored, lang_col=cfg.lang_col, value_col="_ql6", out_col="quality_bucket"
+        scored, lang_col=cfg.lang_col, value_col="quality_logit", round_to=6,
+        out_col="quality_bucket",
     )
     # NULL bucket (NULL lang/score) is NOT a quality drop — eligibility and
     # decontamination own the NULL cases; quality drops only what it scored.
@@ -335,7 +335,7 @@ def curate(
 
     # --- curated output: ONE filter (+ optional tokenize/pack) ----------
     curated = scored.filter(F.col("_stage") == "kept").drop(
-        *[flag for _, flag in CASCADE], "_stage", "_ql6"
+        *[flag for _, flag in CASCADE], "_stage"
     )
     if cfg.pack:
         from wikidataquality_spark.operators.bpe import load_bpe, with_bpe_tokens

@@ -86,37 +86,41 @@ def write_partitioned(
     (a re-run of the same partition replaces it, the idempotent-resume
     semantic; untouched partitions are left alone) — and record completed
     partitions in the manifest. Returns the manifest entry (the 'snapshot').
-    df is persisted around the two actions (partition listing + write) so
-    its lineage computes once."""
+
+    The partition listing and the write are two evaluations of df, and
+    nothing is cached here: df must be deterministic (every caller's is),
+    and a caller whose lineage has several consumers seals it itself
+    (operators/barrier.seal). For validate() output the listing is cheap —
+    Catalyst prunes a groupBy(partition).count() over it down to the
+    sealed enrich cache (dup_marks' flag join is eliminated: the flags are
+    unique per url and none of their columns is read) — so dedup, rules
+    and scrub run once, in the write. Persisting df instead would stage
+    the whole output in executor storage before writing it."""
     run_id = run_id or uuid.uuid4().hex[:12]
-    df = df.persist()
-    try:
-        # Driver-side partition listing is bounded: partitions are
-        # date/host-grained (thousands at most), never row-grained. The cap
-        # turns an accidental high-cardinality partition column (e.g. doc_id)
-        # into a loud error instead of an OOM-ing collect at 100 TB.
-        # groupBy().count() instead of distinct(): the exchange is identical
-        # (hash on partition_col, map-side partial agg) but the same single
-        # action also yields per-partition row counts for the manifest —
-        # which lets callers report row totals WITHOUT a second full pass
-        # over the input (run_pipeline.py previously paid a whole extra
-        # corpus scan just for docs-in; at 100 TB that scan IS the cost).
-        parts_df = df.groupBy(partition_col).count().limit(MAX_PARTITIONS_PER_RUN + 1)
-        counted = parts_df.collect()
-        parts = [r[0] for r in counted]
-        if len(parts) > MAX_PARTITIONS_PER_RUN:
-            raise ValueError(
-                f"write_partitioned: >{MAX_PARTITIONS_PER_RUN} distinct values in "
-                f"partition column {partition_col!r} — choose a coarser partition key"
-            )
-        (
-            df.write.mode("overwrite")
-            .partitionBy(partition_col)
-            .option("partitionOverwriteMode", "dynamic")
-            .parquet(table_dir)
+    # Driver-side partition listing is bounded: partitions are
+    # date/host-grained (thousands at most), never row-grained. The cap
+    # turns an accidental high-cardinality partition column (e.g. doc_id)
+    # into a loud error instead of an OOM-ing collect at 100 TB.
+    # groupBy().count() instead of distinct(): the exchange is identical
+    # (hash on partition_col, map-side partial agg) but the same single
+    # action also yields per-partition row counts for the manifest —
+    # which lets callers report row totals WITHOUT a second full pass
+    # over the input (run_pipeline.py previously paid a whole extra
+    # corpus scan just for docs-in; at 100 TB that scan IS the cost).
+    parts_df = df.groupBy(partition_col).count().limit(MAX_PARTITIONS_PER_RUN + 1)
+    counted = parts_df.collect()
+    parts = [r[0] for r in counted]
+    if len(parts) > MAX_PARTITIONS_PER_RUN:
+        raise ValueError(
+            f"write_partitioned: >{MAX_PARTITIONS_PER_RUN} distinct values in "
+            f"partition column {partition_col!r} — choose a coarser partition key"
         )
-    finally:
-        df.unpersist()
+    (
+        df.write.mode("overwrite")
+        .partitionBy(partition_col)
+        .option("partitionOverwriteMode", "dynamic")
+        .parquet(table_dir)
+    )
     entry = {
         "run_id": run_id,
         "partitions": sorted(map(str, parts)),

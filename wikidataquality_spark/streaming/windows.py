@@ -199,7 +199,7 @@ def incremental_validate(
     from pyspark.sql import types as ST
 
     from wikidataquality_spark.operators.barrier import owned_caches
-    from wikidataquality_spark.operators.dedup import dup_fingerprints
+    from wikidataquality_spark.operators.dedup import STATE_KINDS, dup_fingerprints
     from wikidataquality_spark.pipeline import results, validate
 
     state_schema = ST.StructType.fromDDL(
@@ -219,35 +219,24 @@ def incremental_validate(
 
     def _process(batch_df: DataFrame, epoch_id: int) -> None:
         state = None
+        smax = None
         if state_dir is not None:
+            # a RETRIED epoch must not see its own partial fingerprint write
+            # as "prior" state (every doc would flag dup); dynamic overwrite
+            # below replaces that partition anyway
+            prior = SF.col("_epoch") < SF.lit(epoch_id)
             try:
                 raw_state = spark.read.schema(state_read_schema).parquet(state_dir)
-                # checkpoint/state divergence check: epoch ids come from the
-                # CHECKPOINT, so a fresh/relocated checkpoint against a
-                # reused state_dir restarts at epoch 0 — the _epoch < 0
-                # filter would then hide ALL accumulated state (silently
-                # breaking incremental == batch) and the epoch-0 write would
-                # dynamic-overwrite the old epoch-0 fingerprints. Any state
-                # epoch AHEAD of the current one can only mean the two dirs
-                # belong to different streams; fail loudly (r04 review).
-                # (== epoch_id is legitimate: a retried epoch's own partial.)
-                max_seen = raw_state.agg(SF.max("_epoch")).first()[0]
-                if max_seen is not None and max_seen > epoch_id:
-                    raise ValueError(
-                        f"incremental_validate: state table at {state_dir} has "
-                        f"epoch {max_seen} but the checkpoint says this batch is "
-                        f"epoch {epoch_id} — checkpoint_dir and state_dir belong "
-                        "to different streams (fresh checkpoint against reused "
-                        "state?); refusing to silently drop accumulated state"
-                    )
-                state = (
-                    raw_state
-                    # a RETRIED epoch must not see its own partial fingerprint
-                    # write as "prior" state (every doc would flag dup);
-                    # dynamic overwrite below replaces that partition anyway
-                    .filter(SF.col("_epoch") < SF.lit(epoch_id))
-                    .drop("_epoch")
-                )
+                # ONE column-pruned scan of the state table answers all
+                # three epoch checks (a 10^12-doc deployment would keep a
+                # per-epoch watermark file instead): the newest epoch, the
+                # prior state's max url, and any prior row of a fingerprint
+                # kind this format does not know
+                max_seen, smax, bad_kind = raw_state.agg(
+                    SF.max("_epoch"),
+                    SF.max(SF.when(prior, SF.col("url"))),
+                    SF.max(SF.when(prior & ~SF.col("kind").isin(*STATE_KINDS), SF.col("kind"))),
+                ).first()
             except Exception as e:
                 # ONLY a missing state table means "first batch"; any other
                 # failure (permissions, state_dir is a file, transient FS)
@@ -268,38 +257,36 @@ def incremental_validate(
                     raise
                 state = spark.createDataFrame([], state_schema)
             else:
-                # survivor-order precondition (docstring): every prior-state
-                # url must precede every batch url, else the per-batch min-id
-                # window picks a different survivor than the global batch
-                # computation. Fail loudly instead of silently diverging.
-                # Cost: two column-pruned min/max scans per epoch; a 10^12-doc
-                # deployment would keep a per-epoch watermark file instead.
-                # The same action also piggybacks a state-FORMAT check: a
-                # state table written by an older fingerprint format (e.g.
-                # v1's kind='exact' rows, whose k2 was length(text)) must
-                # fail loudly — its rows would otherwise silently never match.
-                from wikidataquality_spark.operators.dedup import STATE_KINDS
-
-                kinds_sql = ", ".join(f"'{k}'" for k in STATE_KINDS)
-                smax, bad_kind = state.agg(
-                    SF.max("url"),
-                    SF.max(SF.when(~SF.col("kind").isin(*STATE_KINDS), SF.col("kind"))),
-                ).first()
+                # checkpoint/state divergence check: epoch ids come from the
+                # CHECKPOINT, so a fresh/relocated checkpoint against a
+                # reused state_dir restarts at epoch 0 — the _epoch < 0
+                # filter would then hide ALL accumulated state (silently
+                # breaking incremental == batch) and the epoch-0 write would
+                # dynamic-overwrite the old epoch-0 fingerprints. Any state
+                # epoch AHEAD of the current one can only mean the two dirs
+                # belong to different streams; fail loudly (r04 review).
+                # (== epoch_id is legitimate: a retried epoch's own partial.)
+                if max_seen is not None and max_seen > epoch_id:
+                    raise ValueError(
+                        f"incremental_validate: state table at {state_dir} has "
+                        f"epoch {max_seen} but the checkpoint says this batch is "
+                        f"epoch {epoch_id} — checkpoint_dir and state_dir belong "
+                        "to different streams (fresh checkpoint against reused "
+                        "state?); refusing to silently drop accumulated state"
+                    )
+                # state-FORMAT check: a state table written by an older
+                # fingerprint format (e.g. v1's kind='exact' rows, whose k2
+                # was length(text)) must fail loudly — its rows would
+                # otherwise silently never match.
                 if bad_kind is not None:
+                    kinds_sql = ", ".join(f"'{k}'" for k in STATE_KINDS)
                     raise ValueError(
                         f"incremental_validate: state table contains rows of "
                         f"unknown fingerprint kind {bad_kind!r} (expected one "
                         f"of {kinds_sql}) — likely written by an older "
                         "fingerprint format; rebuild the state table"
                     )
-                bmin = batch_df.agg(SF.min("url")).first()[0]
-                if smax is not None and bmin is not None and bmin <= smax:
-                    raise ValueError(
-                        f"incremental_validate: micro-batch (min url {bmin!r}) "
-                        f"is not after accumulated state (max url {smax!r}) — "
-                        "out-of-order batches break the incremental == batch "
-                        "dedup contract; feed batches in ascending url ranges"
-                    )
+                state = raw_state.filter(prior).drop("_epoch")
         # THIS epoch's enrich cache is released once both writes land — a
         # long-running stream otherwise leaks one cached intermediate per
         # epoch until storage-memory eviction starts thrashing the live
@@ -309,6 +296,21 @@ def incremental_validate(
         # caches this exists to prevent.
         with owned_caches() as owner:
             validated = validate(batch_df, dedup_state=state, persist_registry=owner)
+            if smax is not None:
+                # survivor-order precondition (docstring): every prior-state
+                # url must precede every batch url, else the per-batch min-id
+                # window picks a different survivor than the global batch
+                # computation. Fail loudly, before either write, instead of
+                # silently diverging. The min reads only the enrich seal
+                # (dup_marks' flag join is eliminated), not the batch again.
+                bmin = validated.agg(SF.min("url")).first()[0]
+                if bmin is not None and bmin <= smax:
+                    raise ValueError(
+                        f"incremental_validate: micro-batch (min url {bmin!r}) "
+                        f"is not after accumulated state (max url {smax!r}) — "
+                        "out-of-order batches break the incremental == batch "
+                        "dedup contract; feed batches in ascending url ranges"
+                    )
             out = results(validated).withColumn("_epoch", SF.lit(epoch_id))
             (
                 out.write.mode("overwrite")
