@@ -59,14 +59,45 @@ def test_frozen_corpus_stage_drops_and_conserves(docs, spark):
     the `frozen` stage (zero false negatives), leave every EARLIER stage's
     count unchanged (cascade order), and keep conservation. The ~fp_rate
     false-positive drops are part of the contract — only inequality
-    directions are asserted for the other stages."""
+    directions are asserted for the other stages. 200 texts no doc carries
+    fill the filter, so its recorded false-positive budget is not ~0: the
+    false positives measured on clean docs must stay within it."""
+    import math
+
+    from wikidataquality_spark.curate import frozen_fp_budget
+    from wikidataquality_spark.operators.bloom import bloom_size
+
     frozen_rows = docs.orderBy("doc_id").limit(2).select("text").collect()
+    frozen_texts = [r["text"] for r in frozen_rows]
+    filler = [f"frozen-only filler text {i}" for i in range(200)]
     frozen = spark.createDataFrame(
-        [(r["text"],) for r in frozen_rows], "text string"
+        [(t,) for t in frozen_texts + filler], "text string"
     )
-    c, f = _run(docs, CurateConfig(pack=False, frozen_corpus=frozen))
-    _, f0 = _run(docs, CurateConfig(pack=False))
+    report: dict = {}
+    with owned_caches() as owner:
+        curated, funnel = curate(
+            docs, CurateConfig(pack=False, frozen_corpus=frozen),
+            persist_registry=owner, report=report,
+        )
+        c = curated.collect()
+        f = {r["stage"]: r["n"] for r in funnel.collect()}
+    c0, f0 = _run(docs, CurateConfig(pack=False))
     assert sum(f.values()) == docs.count()
+    # the sizing reuses the stage's own corpus count
+    m_bits, k = bloom_size(202, 0.01)
+    assert report["frozen_bloom"] == {"m_bits": m_bits, "k": k, "n_keys": 202}
+    budget = frozen_fp_budget(report["frozen_bloom"], f)
+    # with no later stage active, the docs reaching `frozen` are the ones
+    # the frozen-less run keeps
+    assert budget["docs_reaching"] == len(c0)
+    assert 0.1 < budget["expected_fp_docs"] < 5, budget
+    kept_ids = {r["doc_id"] for r in c}
+    members = {r["doc_id"] for r in c0 if r["text"] in frozen_texts}
+    clean_fp = {r["doc_id"] for r in c0 if r["text"] not in frozen_texts} - kept_ids
+    assert not (members & kept_ids)  # zero false negatives
+    assert f.get("frozen", 0) == len(members) + len(clean_fp)
+    fp_budget = budget["expected_fp_docs"]
+    assert len(clean_fp) <= fp_budget + 3 * math.sqrt(fp_budget), (clean_fp, budget)
     planted = {r["doc_id"] for r in docs.orderBy("doc_id").limit(2).collect()}
     assert not (planted & {r["doc_id"] for r in c})
     # cascade: stages before `frozen` are untouched by the new stage
@@ -112,6 +143,94 @@ def test_pack_columns_consistent(docs):
         pos[key] = p + r["n_tokens"]
 
 
+# the curated parquet's columns, in order: the quality columns sit between
+# the input's and dedup's wherever the bucket is computed
+CURATED_COLUMNS = [
+    "doc_id", "text", "lang", "source", "n_chars",
+    "quality_logit", "quality_score", "quality_class", "quality_bucket",
+    "is_exact_dup", "is_near_dup",
+]
+
+
+@pytest.mark.parametrize(
+    "kw, extra",
+    [
+        ({"pack": False}, []),
+        ({}, ["bpe_tokens", "bpe_token_count", "n_tokens", "pack_id", "pack_offset"]),
+        (
+            {"pack": False, "frozen": True, "benchmark": True, "rates": {"src1": 0.5}},
+            ["in_corpus_maybe", "contaminated", "sample_u", "sampled"],
+        ),
+    ],
+    ids=["no_pack", "pack", "frozen_benchmark_rates"],
+)
+def test_curated_schema_pinned(docs, spark, kw, extra):
+    kw = dict(kw)
+    texts = spark.createDataFrame(
+        [(r["text"],) for r in docs.orderBy("doc_id").limit(2).collect()], "text string"
+    )
+    if kw.pop("frozen", False):
+        kw["frozen_corpus"] = texts
+    if kw.pop("benchmark", False):
+        kw["benchmark"] = texts
+    with owned_caches() as owner:
+        curated, _ = curate(docs, CurateConfig(**kw), persist_registry=owner)
+        assert curated.columns == CURATED_COLUMNS + extra
+
+
+def _plan_nodes(plan: str) -> list[str]:
+    """A plan string's node lines with the tree prefix stripped."""
+    return [line.lstrip(" :+-") for line in plan.splitlines()]
+
+
+def test_quality_logit_evaluated_once_and_cutoffs_collected(docs, spark):
+    """The sealed frame's optimized plan evaluates the nine-feature logit in
+    exactly one Project, with no Aggregate or Window over it and no join
+    against a cutoff table: the CCNet bucket is applied after the seal.
+    Above the seal the funnel and curated plans read the cached frame
+    alone: no Exchange, Window or Join over it fetches the cutoffs (they
+    arrive as one collected literal); the funnel's shuffle by stage is the
+    only exchange allowed."""
+    from wikidataquality_spark.operators.quality_model import load_quality_model
+
+    # the fold starts from the artifact's bias, so this text marks each
+    # place the plan evaluates the logit
+    logit_mark = f"{float(load_quality_model()['bias'])!r} + ("
+    with owned_caches() as owner:
+        curated, funnel = curate(docs, CurateConfig(pack=False), persist_registry=owner)
+        sealed = owner[0]
+        # optimize without the cache substitution, to see what the seal holds
+        plan = (
+            spark._jsparkSession.sessionState()
+            .optimizer()
+            .execute(sealed._jdf.queryExecution().analyzed())
+            .toString()
+        )
+        nodes = _plan_nodes(plan)
+        evals = [n for n in nodes if logit_mark in n]
+        assert len(evals) == 1, plan
+        assert evals[0].startswith("Project") and " AS quality_logit#" in evals[0], plan
+        for n in nodes:
+            if n.startswith(("Aggregate", "Window")):
+                assert "quality_logit" not in n and logit_mark not in n, n
+        assert "cut1" not in plan and "quality_bucket" not in plan, plan
+
+        for frame, aggs in ((curated, 0), (funnel, 2)):
+            phys = frame._jdf.queryExecution().executedPlan().toString()
+            # the part of the plan above the seal's cached relation
+            above = _plan_nodes(phys.split("InMemoryRelation", 1)[0])
+            assert sum(n.startswith("InMemoryTableScan") for n in above) == 1, phys
+            # the funnel's own count by stage is the only aggregation, and
+            # the only shuffle it may need
+            for n in above:
+                assert not n.startswith(("BroadcastExchange", "Window")), phys
+                assert "Join" not in n.split(" ", 1)[0], phys
+                if n.startswith("Exchange"):
+                    assert n.startswith("Exchange hashpartitioning(_stage#"), phys
+            agg_nodes = [n for n in above if n.startswith("HashAggregate")]
+            assert len(agg_nodes) == aggs and all("keys=[_stage#" in n for n in agg_nodes), phys
+
+
 def test_cli_end_to_end(spark, tmp_path):
     import json as json_mod
     import sys
@@ -146,6 +265,13 @@ def test_cli_end_to_end(spark, tmp_path):
     assert rc == 0
     res = json_mod.loads([l for l in buf.getvalue().splitlines() if l.startswith("{")][-1])
     assert res["funnel"].get("frozen", 0) >= 1  # the Bloom stage in the manifest
+    # ... with its false-positive budget, sized from the 10-row corpus
+    from wikidataquality_spark.curate import frozen_fp_budget
+    from wikidataquality_spark.operators.bloom import bloom_size
+
+    m_bits, k = bloom_size(10, 0.01)
+    bloom = {"m_bits": m_bits, "k": k, "n_keys": 10}
+    assert res["frozen_bloom"] == frozen_fp_budget(bloom, res["funnel"])
     assert res["docs_kept"] > 0
     assert res["docs_in"] == sum(res["funnel"].values())
     back = spark.read.parquet(out_dir)

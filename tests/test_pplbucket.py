@@ -1,6 +1,8 @@
 """CCNet perplexity-bucketing gates: DuckDB-twin byte parity on a no-UDF
 column (full cross-engine, cutoffs included) and on real perplexity scores
-round-tripped through parquet; hand-derived tercile semantics incl. ties;
+round-tripped through parquet, for both ways of applying the cutoffs (the
+broadcast join and the collected-cutoffs projection); hand-derived tercile
+semantics incl. ties;
 NULL policy; repartition invariance; and the scale contract — the document
 table is never sorted/windowed, the cutoff join is broadcast."""
 
@@ -19,6 +21,7 @@ from wikidataquality_spark.operators.pplbucket import (
     ppl_bucket_sql,
     ppl_cutoffs,
     with_ppl_bucket,
+    with_ppl_bucket_collected,
 )
 
 SF001 = "/root/testdata/sf0.01"
@@ -172,3 +175,92 @@ def test_caller_cut_columns_survive(spark):
     rows = {r["doc_id"]: r for r in out.collect()}
     assert rows[1]["cut1"] == 99.0  # the CALLER's column, untouched
     assert rows[1]["ppl_bucket"] == "head"
+
+
+def _collected_twin_parity(spark, base, value_col, path):
+    """Bucket `base` (doc_id, lang, value_col) plus NULL-lang, NULL-value
+    and unseen-language rows, written once to parquet, three ways: the
+    collected-cutoffs projection, the broadcast join, and the DuckDB twin.
+    Returns the collected path's buckets, the bucketed table and its
+    cutoff rows."""
+    # `zz_unseen` carries only a NULL value, so it has no cutoffs row
+    lang = base.select("lang").dropna().first()["lang"]
+    value = base.select(value_col).dropna().first()[value_col]
+    edge = spark.createDataFrame(
+        [(-1, None, value), (-2, "zz_unseen", None), (-3, lang, None)], base.schema
+    )
+    base.unionByName(edge).write.mode("overwrite").parquet(path)
+    t = spark.read.parquet(path)  # both engines read THE SAME bytes
+    cuts = ppl_cutoffs(t, value_col=value_col)
+    got = _bucket_map(with_ppl_bucket_collected(t, cuts, value_col=value_col))
+    joined = _bucket_map(with_ppl_bucket(t, cutoffs=cuts, value_col=value_col))
+    want = dict(
+        duckdb.connect()
+        .execute(ppl_bucket_sql(f"'{path}/*.parquet'", value_expr=value_col))
+        .fetchall()
+    )
+    assert got == joined == want
+    assert got[-1] is None and got[-2] is None and got[-3] is None
+    return got, t, cuts.collect()
+
+
+def _assert_ties_take_lower_bucket(got, t, cut_rows, value_col):
+    """Every language has docs sitting exactly on cut1 and cut2 (cutoffs are
+    data values); each is bucketed at or below the cut it equals."""
+    by_lang = {r["lang"]: (r["cut1"], r["cut2"]) for r in cut_rows}
+    on_cut1 = on_cut2 = 0
+    for r in t.select("doc_id", "lang", value_col).collect():
+        cut1, cut2 = by_lang.get(r["lang"], (None, None))
+        if r[value_col] is None or cut1 is None:
+            continue
+        if r[value_col] == cut1:
+            on_cut1 += 1
+            assert got[r["doc_id"]] == "head", r
+        elif r[value_col] == cut2:
+            on_cut2 += 1
+            assert got[r["doc_id"]] == "middle", r
+    assert on_cut1 >= len(by_lang) and on_cut2 > 0
+
+
+def test_collected_cutoffs_twin_parity_no_udf_column(spark, docs, tmp_path):
+    """The collected-cutoffs projection on the no-UDF column equals the
+    DuckDB twin and the join form byte for byte, with NULL and unseen
+    languages, NULL values and ties at cut1/cut2."""
+    base = docs.select("doc_id", "lang", "n_chars")
+    got, t, cut_rows = _collected_twin_parity(
+        spark, base, "n_chars", str(tmp_path / "n_chars.parquet")
+    )
+    _assert_ties_take_lower_bucket(got, t, cut_rows, "n_chars")
+
+
+def test_collected_cutoffs_twin_parity_real_perplexity(spark, docs, tmp_path):
+    """The same three-way parity on real perplexity scores round-tripped
+    through parquet."""
+    from wikidataquality_spark.operators.perplexity import with_perplexity
+
+    scored = with_perplexity(docs.select("doc_id", "lang", "text")).select(
+        "doc_id", "lang", "perplexity"
+    )
+    path = str(tmp_path / "scored.parquet")
+    scored.write.mode("overwrite").parquet(path)
+    got, t, cut_rows = _collected_twin_parity(
+        spark, spark.read.parquet(path), "perplexity", str(tmp_path / "edges.parquet")
+    )
+    _assert_ties_take_lower_bucket(got, t, cut_rows, "perplexity")
+
+
+def test_collected_cutoffs_plan_is_one_projection(spark, docs):
+    """The collected form leaves no join, exchange or window in the
+    document's plan: the cutoffs are one literal lookup. An empty cutoff
+    table buckets every doc NULL."""
+    cuts = ppl_cutoffs(docs, value_col="n_chars")
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        with_ppl_bucket_collected(docs, cuts, value_col="n_chars").explain("formatted")
+    plan = buf.getvalue()
+    for node in ("Join", "Exchange", "Window", "Aggregate", "Sort"):
+        assert node not in plan, plan
+    none = with_ppl_bucket_collected(
+        docs, cuts.filter(F.lit(False)), value_col="n_chars"
+    )
+    assert none.filter(F.col("ppl_bucket").isNotNull()).count() == 0

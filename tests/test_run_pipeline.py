@@ -86,9 +86,9 @@ def _parses_per_segment(spark, group: str, seg_dir) -> dict[str, int]:
 
 def test_warc_run_parses_each_segment_once(spark, tmp_path):
     """One --input-format warc call decompresses every segment exactly once
-    — the recrawl drop's two sides, the emptiness probe and the enrich seal
-    share one parse — and so does a --resume call, whose dedup state is
-    fingerprinted from the same parse."""
+    — the recrawl drop's two sides and the enrich seal share one parse —
+    and so does a --resume call, whose dedup state is fingerprinted from
+    the same parse."""
     first, full = tmp_path / "first", tmp_path / "full"
     first.mkdir()
     full.mkdir()

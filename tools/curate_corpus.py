@@ -9,7 +9,10 @@
 Writes the curated corpus (quality columns + BPE token counts + pack
 assignment) as parquet and prints ONE JSON line with the attrition funnel;
 the same funnel is saved inside the output dir as _funnel.json (underscore-
-prefixed so parquet readers skip it).
+prefixed so parquet readers skip it). With --frozen-corpus the record also
+carries `frozen_bloom`: the filter's m_bits, k and n_keys, its expected
+false-positive rate, and the expected false-positive docs among those that
+reach the frozen stage (curate.frozen_fp_budget).
 """
 
 from __future__ import annotations
@@ -64,7 +67,7 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--cpus", type=int, default=None)
     args = ap.parse_args(argv)
 
-    from wikidataquality_spark.curate import CurateConfig, curate
+    from wikidataquality_spark.curate import CurateConfig, curate, frozen_fp_budget
     from wikidataquality_spark.deploy import ensure_shipped
     from wikidataquality_spark.operators.barrier import owned_caches
     from wikidataquality_spark.session import get_spark
@@ -109,8 +112,9 @@ def main(argv: list[str] | None = None) -> int:
     if args.export_shards and args.no_pack:
         raise ValueError("--export-shards needs the packing stage (drop --no-pack)")
     t0 = time.perf_counter()
+    report: dict = {}
     with owned_caches() as owner:
-        curated, funnel = curate(docs, cfg, persist_registry=owner)
+        curated, funnel = curate(docs, cfg, persist_registry=owner, report=report)
         curated.write.mode("overwrite").parquet(args.output)
         rows = funnel.collect()
     n_shard_blocks = None
@@ -194,6 +198,8 @@ def main(argv: list[str] | None = None) -> int:
         out["shard_blocks"] = n_shard_blocks
     if detail is not None:
         out["funnel_by"] = {args.funnel_by: detail}
+    if "frozen_bloom" in report:
+        out["frozen_bloom"] = frozen_fp_budget(report["frozen_bloom"], stages)
     # underscore prefix: Spark/Hadoop readers ignore _-prefixed files, so
     # the manifest can live inside the dataset dir without breaking
     # read.parquet(output)

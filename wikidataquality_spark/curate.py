@@ -132,11 +132,34 @@ def results_to_documents(results: DataFrame) -> DataFrame:
     )
 
 
+def frozen_fp_budget(bloom: dict, funnel: dict[str, int]) -> dict:
+    """The frozen stage's false-positive budget for one call, from the
+    filter's sizing (`report["frozen_bloom"]` of curate) and the funnel's
+    stage counts: the expected false-positive rate (1 − e^(−k·n/m))^k and
+    that rate times the docs that reach the stage (those no earlier stage
+    dropped). n_keys counts the corpus's rows, so a corpus that repeats
+    texts gets a budget above its true rate; so does the doc count, which
+    includes the true members, none of which can be a false positive."""
+    from wikidataquality_spark.operators.bloom import bloom_fp_rate
+
+    stages = [stage for stage, _ in CASCADE]
+    earlier = stages[: stages.index("frozen")]
+    reaching = sum(funnel.values()) - sum(funnel.get(s, 0) for s in earlier)
+    rate = bloom_fp_rate(bloom["m_bits"], bloom["k"], bloom["n_keys"])
+    return {
+        **bloom,
+        "expected_fp_rate": rate,
+        "docs_reaching": reaching,
+        "expected_fp_docs": rate * reaching,
+    }
+
+
 def curate(
     docs: DataFrame,
     cfg: CurateConfig | None = None,
     *,
     persist_registry: list,
+    report: dict | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """Returns (curated, funnel).
 
@@ -149,16 +172,28 @@ def curate(
     aggregation, the curated filter, and the DSIR top-k are separate
     consumers that would otherwise each recompute the enrich/normalize/
     dedup work. At 10¹²-doc scale the equivalent is writing the flagged
-    frame to a stage table. With cfg.pack the BPE-encoded curated frame is
-    sealed too. `persist_registry` is the owner list of an
-    `operators.barrier.owned_caches` block; both seals go into it, and the
-    caller's block releases them once its own actions on `curated` and
-    `funnel` are done."""
+    frame to a stage table. The seal holds every stage flag up to
+    decontamination plus the quality logit, but no CCNet bucket: the
+    bucket and `_quality_drop` are applied after it, from per-language
+    cutoffs aggregated over the cached logit and collected ONCE per call
+    (one row per language), as a projection the consumers share — so the
+    nine-feature logit is evaluated once per document. With cfg.pack the
+    BPE-encoded curated frame is sealed too. `persist_registry` is the
+    owner list of an `operators.barrier.owned_caches` block; both seals go
+    into it, and the caller's block releases them once its own actions on
+    `curated` and `funnel` are done.
+
+    `report`, when given, receives what building the DAG learned without
+    an extra action: with cfg.frozen_corpus, `report["frozen_bloom"]`
+    holds the filter's m_bits, k and n_keys (see frozen_fp_budget)."""
     cfg = cfg or CurateConfig()
     if cfg.rates is not None and cfg.dsir_k is not None:
         raise ValueError("rates and dsir_k are mutually exclusive selection modes")
 
-    from wikidataquality_spark.operators.pplbucket import with_ppl_bucket
+    from wikidataquality_spark.operators.pplbucket import (
+        ppl_cutoffs,
+        with_ppl_bucket_collected,
+    )
     from wikidataquality_spark.operators.quality_model import (
         load_quality_model,
         with_quality_score,
@@ -225,15 +260,9 @@ def curate(
         flagged = flagged.withColumn("_url_drop", F.lit(False))
 
     scored = with_quality_score(flagged, text_col=text_c, art=load_quality_model())
-    scored = with_ppl_bucket(
-        scored, lang_col=cfg.lang_col, value_col="quality_logit", round_to=6,
-        out_col="quality_bucket",
-    )
-    # NULL bucket (NULL lang/score) is NOT a quality drop — eligibility and
-    # decontamination own the NULL cases; quality drops only what it scored.
-    scored = scored.withColumn(
-        "_quality_drop", F.coalesce(F.col("quality_bucket").isin(*cfg.drop_buckets), F.lit(False))
-    )
+    # the quality bucket and its flag are placed right after these columns
+    # once the seal below has filled quality_logit
+    scored_cols = scored.columns
 
     if cfg.dedup:
         from wikidataquality_spark.operators.dedup import dup_marks
@@ -257,6 +286,7 @@ def curate(
             text_col=text_c,
             id_col=id_c,
             fp_rate=cfg.frozen_fp_rate,
+            sizing=None if report is None else report.setdefault("frozen_bloom", {}),
         )
         fmarks = fmarks.select(id_c, "in_corpus_maybe").dropDuplicates([id_c])
         scored = scored.join(fmarks, id_c, "left")
@@ -286,10 +316,36 @@ def curate(
     else:
         scored = scored.withColumn("_contam_drop", F.lit(False))
 
-    # Seal the heavy flags (UDF enrich + dedup shuffles + gram join) before
-    # the multi-consumer tail: selection, funnel agg, and curated filter
-    # all read the cache instead of racing to recompute the DAG.
+    # Seal the heavy flags (UDF enrich + dedup shuffles + gram join) and the
+    # quality logit before the multi-consumer tail: the cutoffs, selection,
+    # funnel agg and curated filter all read the cache instead of racing to
+    # recompute the DAG. The seal holds no bucket: its cutoff aggregation
+    # would evaluate the logit again beside the document side.
     scored = seal(scored, persist_registry)
+
+    # CCNet bucket from ONE collect of the per-language cutoffs over the
+    # cached logit, applied as a projection (no join, nothing to recompute
+    # per consumer).
+    cutoffs = ppl_cutoffs(
+        scored, lang_col=cfg.lang_col, value_col="quality_logit", round_to=6
+    )
+    bucketed = with_ppl_bucket_collected(
+        scored, cutoffs, lang_col=cfg.lang_col, value_col="quality_logit",
+        round_to=6, out_col="quality_bucket",
+    )
+    # NULL bucket (NULL lang/score) is NOT a quality drop — eligibility and
+    # decontamination own the NULL cases; quality drops only what it scored.
+    bucketed = bucketed.withColumn(
+        "_quality_drop", F.coalesce(F.col("quality_bucket").isin(*cfg.drop_buckets), F.lit(False))
+    )
+    # back into the stage order, so the curated schema does not depend on
+    # where the bucket is computed
+    scored = bucketed.select(
+        *scored_cols,
+        "quality_bucket",
+        "_quality_drop",
+        *[c for c in scored.columns if c not in scored_cols],
+    )
 
     if cfg.rates is not None:
         from wikidataquality_spark.operators.sampling import stratified_sample_marks

@@ -70,6 +70,12 @@ def bloom_size(n_keys: int, fp_rate: float = 0.01) -> tuple[int, int]:
     return m, k
 
 
+def bloom_fp_rate(m_bits: int, k: int, n_keys: int) -> float:
+    """Expected false-positive rate of an m_bits / k filter holding n_keys
+    keys: (1 − e^(−k·n/m))^k."""
+    return (1.0 - math.exp(-k * n_keys / m_bits)) ** k
+
+
 def _check_m(m_bits: int) -> None:
     if m_bits < 64 or (m_bits & (m_bits - 1)) != 0 or m_bits > (1 << _MAX_LOG2_M):
         raise ValueError(
@@ -183,6 +189,8 @@ def cross_corpus_dedup_marks(
     text_col: str = "text",
     id_col: str = "doc_id",
     fp_rate: float = 0.01,
+    *,
+    sizing: dict | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """Convenience composition: build the filter over the corpus's exact
     text keys, probe the batch. Returns (marks, bloom) so callers persist
@@ -191,8 +199,14 @@ def cross_corpus_dedup_marks(
 
     Sizing needs n_keys up front (the filter's ONE structural parameter),
     so this pays one count() of the corpus — acceptable for a build that
-    runs once per frozen corpus, not per batch."""
-    m_bits, k = bloom_size(max(corpus.count(), 1), fp_rate)
+    runs once per frozen corpus, not per batch. `sizing`, when given,
+    receives the filter's m_bits, k and that n_keys (what bloom_fp_rate
+    needs), so a caller can report the false-positive budget without
+    counting the corpus again."""
+    n_keys = max(corpus.count(), 1)
+    m_bits, k = bloom_size(n_keys, fp_rate)
+    if sizing is not None:
+        sizing.update(m_bits=m_bits, k=k, n_keys=n_keys)
     bloom = build_bloom(corpus, F.col(text_col), m_bits, k)
     marks = bloom_member_marks(batch, bloom, F.col(text_col), m_bits, k, id_col)
     return marks, bloom

@@ -14,10 +14,20 @@ is a single-machine sort. This module never ranks the document table:
      count ≥ ceil(q·n). This is the discrete quantile (type-1), chosen over
      interpolated percentiles because it is pure integer logic + comparisons
      on existing doubles — bit-identical cross-engine, no FMA/ulp hazard.
-  2. **assign** — broadcast the (lang, cut1, cut2) table (one row per
-     language — trivially broadcastable) and bucket by two comparisons.
-     Zero sort, zero skew: ties share a bucket by construction, so the
-     result is partition- and retry-independent.
+  2. **assign** — bucket by two comparisons against the language's
+     (cut1, cut2). Zero sort, zero skew: ties share a bucket by
+     construction, so the result is partition- and retry-independent. The
+     cutoffs reach the documents one of two ways, both through the one
+     head/middle/tail CASE (`_bucket`, with one NULL policy):
+     - `with_ppl_bucket` broadcast-joins the (lang, cut1, cut2) table (one
+       row per language). It stays lazy, so a query builder that must not
+       execute can use it; but the cutoff aggregation and the document side
+       are two evaluations of the value column.
+     - `with_ppl_bucket_collected` collects that table once (its rows are
+       bounded by the number of languages) and looks the cutoffs up in a
+       literal map: a projection with no join and no exchange. Over a
+       cached frame the value column is then evaluated once per document,
+       where the frame was filled (curate.curate does this after its seal).
 
 At production scale step 1's distinct-value table can itself be bounded by
 pre-rounding the value column (CCNet buckets on integer-rounded perplexity);
@@ -30,13 +40,14 @@ Checker/RangeChecker.php:~30-100) with corpus-derived, per-group bounds.
 DuckDB twin: `ppl_bucket_sql` replays the identical algorithm (same ceil
 arithmetic, same MIN-over-CASE cutoff, same tie semantics) — gated bytewise
 in tests/test_pplbucket.py on both a no-UDF column and real perplexity
-scores round-tripped through parquet.
+scores round-tripped through parquet, for both assign forms.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import MapType, StructType
 
 BUCKETS = ("head", "middle", "tail")
 
@@ -94,6 +105,19 @@ def _as_fraction(q: float, max_den: int = 1000) -> tuple[int, int] | None:
     return (f.numerator, f.denominator) if float(f) == q else None
 
 
+def _bucket(value_col: str, round_to: int | None, cuts: Column, cut1: Column, cut2: Column) -> Column:
+    """The head/middle/tail CASE both assign forms share: `cuts` is NULL for
+    a NULL or unseen language. NULL value or NULL/unseen lang → NULL bucket;
+    a value equal to a cutoff falls in the lower bucket."""
+    v = _rounded(F.col(value_col), round_to)
+    return (
+        F.when(F.col(value_col).isNull() | cuts.isNull(), F.lit(None))
+        .when(v <= cut1, F.lit("head"))
+        .when(v <= cut2, F.lit("middle"))
+        .otherwise(F.lit("tail"))
+    )
+
+
 def with_ppl_bucket(
     df: DataFrame,
     cutoffs: DataFrame | None = None,
@@ -108,7 +132,6 @@ def with_ppl_bucket(
     NULL value or NULL/unseen lang → NULL bucket."""
     if cutoffs is None:
         cutoffs = ppl_cutoffs(df, lang_col, value_col, qs, round_to)
-    v = _rounded(F.col(value_col), round_to)
     # every cutoff column gets the __ prefix before the join: a caller frame
     # that already carries cut1/cut2 would otherwise be clobbered by the
     # unconditional drop below (r04 review)
@@ -120,13 +143,41 @@ def with_ppl_bucket(
     joined = df.join(
         F.broadcast(cuts), F.col(lang_col) == F.col("__cut_lang"), "left"
     )
-    bucket = (
-        F.when(F.col(value_col).isNull() | F.col("__cut_lang").isNull(), F.lit(None))
-        .when(v <= F.col("__cut1"), F.lit("head"))
-        .when(v <= F.col("__cut2"), F.lit("middle"))
-        .otherwise(F.lit("tail"))
+    bucket = _bucket(
+        value_col, round_to, F.col("__cut_lang"), F.col("__cut1"), F.col("__cut2")
     )
     return joined.withColumn(out_col, bucket).drop("__cut_lang", "__cut1", "__cut2")
+
+
+def with_ppl_bucket_collected(
+    df: DataFrame,
+    cutoffs: DataFrame,
+    lang_col: str = "lang",
+    value_col: str = "perplexity",
+    round_to: int | None = None,
+    out_col: str = "ppl_bucket",
+) -> DataFrame:
+    """with_ppl_bucket's result from ONE collect() of `cutoffs` (rows =
+    languages): the cutoffs become a literal lang → (cut1, cut2) map, so
+    the assignment is a projection over `df` — no join, no exchange, and
+    nothing of the cutoffs' lineage left in `df`'s plan. Same CASE, same
+    NULL and tie semantics, same output type."""
+    cut_t = StructType([cutoffs.schema["cut1"], cutoffs.schema["cut2"]])
+    entries = [
+        x
+        for r in cutoffs.collect()
+        for x in (
+            F.lit(r["lang"]),
+            F.struct(F.lit(r["cut1"]).alias("cut1"), F.lit(r["cut2"]).alias("cut2")),
+        )
+    ]
+    # the cast pins each literal to the cutoff table's own types (and gives
+    # an empty table a typed empty map)
+    lookup = F.create_map(*entries).cast(MapType(cutoffs.schema["lang"].dataType, cut_t))
+    cuts = lookup[F.col(lang_col)]
+    return df.withColumn(
+        out_col, _bucket(value_col, round_to, cuts, cuts["cut1"], cuts["cut2"])
+    )
 
 
 def ppl_bucket_ctes(
