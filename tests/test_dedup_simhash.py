@@ -6,6 +6,8 @@ from collections.abc import Iterator
 
 import pandas as pd
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from wikidataquality_spark.operators.dedup import (
@@ -232,8 +234,8 @@ def test_minhash_verify_rejects_planted_low_jaccard_collision(spark):
     This pair was FOUND by deterministic search over the library's own
     hashing (60 synthetic tokens, 7 replaced): true shingle Jaccard 0.487,
     yet one full band collides, and only 61/128 signature components agree.
-    Collision-only dedup (verify=False) wrongly drops the twin; the
-    default-on component-agreement verify (matches ≥ 80) keeps it. A
+    Collision-only dedup (dup_marks' near flag) wrongly marks the twin;
+    minhash_dedup's component-agreement verify (matches ≥ 80) keeps it. A
     genuine near-dup in the same frame must still drop either way."""
     import numpy as np
 
@@ -243,6 +245,7 @@ def test_minhash_verify_rejects_planted_low_jaccard_collision(spark):
         MINHASH_VERIFY_MIN_EQ,
         _minhash_sig,
         _shingle_hashes,
+        dup_marks,
         minhash_dedup,
         minhash_params,
     )
@@ -281,8 +284,10 @@ def test_minhash_verify_rejects_planted_low_jaccard_collision(spark):
     df = spark.createDataFrame(rows, "url string, text string")
     kept_verified = {r["url"] for r in minhash_dedup(df).collect()}
     assert kept_verified == {"u1", "u2", "u3"}  # low-J twin SAVED, real dup dropped
-    kept_collision = {r["url"] for r in minhash_dedup(df, verify=False).collect()}
-    assert kept_collision == {"u1", "u3"}  # the old semantics wrongly dropped u2
+    kept_collision = {
+        r["url"] for r in dup_marks(df).filter("NOT is_near_dup").collect()
+    }
+    assert kept_collision == {"u1", "u3"}  # collision-only wrongly drops u2
 
 
 def test_minhash_verify_plan_shape(spark):
@@ -385,3 +390,134 @@ def test_duplicate_ids_do_not_drop_survivor(spark):
         by_url.setdefault(r["url"], []).append(r["is_exact_dup"])
     assert by_url["a"] == [False, False]  # survivor id never self-flagged
     assert by_url["b"] == [False]
+
+
+def _plan_nodes(plan) -> list[str]:
+    """Pre-order node names of a JVM logical plan."""
+    names = [plan.nodeName()]
+    kids = plan.children()
+    for i in range(kids.size()):
+        names += _plan_nodes(kids.apply(i))
+    return names
+
+
+def test_dup_marks_builds_both_flags_in_one_aggregate(spark):
+    """dup_marks decides exact and near flags in ONE groupBy(id) over the
+    union of the exact window's instance rows and the band candidates: the
+    optimized plan holds one Aggregate, directly over a Union, and no join
+    but the broadcast rejoin of the flags."""
+    from wikidataquality_spark.operators.dedup import dup_marks
+
+    rows = [(f"u{i}", f"alpha{i % 7} beta gamma {i % 5} " * 4) for i in range(20)]
+    df = spark.createDataFrame(rows, "url string, text string")
+    nodes = _plan_nodes(dup_marks(df)._jdf.queryExecution().optimizedPlan())
+    assert nodes.count("Aggregate") == 1, nodes
+    assert nodes[nodes.index("Aggregate") + 1] == "Union", nodes
+    assert nodes.count("Join") == 1, nodes
+
+
+# exact copies, one- and two-token variants (near dups), a word-order pair,
+# and the exempt population: NULL and token-less text (ASCII and NBSP)
+_BASE_DOC = " ".join(f"tok{i}" for i in range(40))
+_DOC_POOL = [
+    _BASE_DOC,
+    _BASE_DOC.replace("tok7 ", "alt7 "),
+    _BASE_DOC.replace("tok7 ", "alt7 ").replace("tok30 ", "alt30 "),
+    " ".join(f"other{i}" for i in range(40)),
+    "river bank",
+    "bank river",
+    None,
+    "",
+    "   ",
+    "\u00a0\u00a0",
+]
+_IDS = [f"u{i}" for i in range(12)]
+
+
+def _exact_near_join_reference(df, state):
+    """dup_marks' flag build as a join of two aggregations: exact flags from
+    groupBy(id) over the exact window, near flags from a distinct over the
+    band candidates, left-joined and coalesced, then rejoined."""
+    from wikidataquality_spark.operators.dedup import (
+        STATE_EXACT_KIND,
+        _band_candidates,
+        _keyed,
+    )
+
+    keyed = _keyed(df, "text", "url", None)
+    if state is not None:
+        state = state.join(keyed.select("url"), "url", "left_anti")
+    exact_in = keyed.selectExpr("url", "_h", "_h2", "FALSE AS _from_state")
+    if state is not None:
+        exact_in = exact_in.unionByName(
+            state.filter(F.col("kind") == STATE_EXACT_KIND).selectExpr(
+                "url", "k1 AS _h", "k2 AS _h2", "TRUE AS _from_state"
+            )
+        )
+    exact = (
+        exact_in.selectExpr(
+            "url",
+            "_from_state",
+            "(row_number() OVER (PARTITION BY _h, _h2 "
+            "ORDER BY _from_state DESC, url)) > 1 AS _inst_dup",
+        )
+        .filter("NOT _from_state")
+        .groupBy("url")
+        .agg(F.expr("bool_and(_inst_dup)").alias("is_exact_dup"))
+    )
+    near = (
+        _band_candidates(keyed, "url", state)
+        .select("url")
+        .distinct()
+        .selectExpr("url", "TRUE AS is_near_dup")
+    )
+    flags = (
+        exact.join(near, "url", "left")
+        .selectExpr(
+            "url", "is_exact_dup", "coalesce(is_near_dup, FALSE) AS is_near_dup"
+        )
+        .filter("is_exact_dup OR is_near_dup")
+    )
+    return df.join(F.broadcast(flags), "url", "left").selectExpr(
+        "*",
+        "coalesce(is_exact_dup, FALSE) AS _e",
+        "coalesce(is_near_dup, FALSE) AS _n",
+    )
+
+
+@given(
+    batch=st.lists(
+        st.tuples(st.sampled_from(_IDS[:8]), st.sampled_from(_DOC_POOL)),
+        min_size=1,
+        max_size=14,
+    ),
+    prior=st.one_of(
+        st.none(),
+        st.lists(
+            st.tuples(st.sampled_from(_IDS[4:]), st.sampled_from(_DOC_POOL)),
+            min_size=1,
+            max_size=6,
+        ),
+    ),
+)
+@settings(max_examples=8, deadline=None)
+def test_dup_marks_matches_exact_near_join_reference(spark, batch, prior):
+    """On generated corpora with repeated ids, exact and near dups, NULL and
+    token-less text, with and without a fingerprint state whose ids overlap
+    the batch, the one-aggregate flags equal the exact⋈near reference row
+    for row."""
+    from wikidataquality_spark.operators.dedup import dup_fingerprints, dup_marks
+
+    schema = "url string, text string"
+    df = spark.createDataFrame(batch, schema)
+    state = None if prior is None else dup_fingerprints(spark.createDataFrame(prior, schema))
+
+    def rows(frame, exact, near):
+        return sorted(
+            (r["url"], repr(r["text"]), r[exact], r[near])
+            for r in frame.select("url", "text", exact, near).collect()
+        )
+
+    got = rows(dup_marks(df, state=state), "is_exact_dup", "is_near_dup")
+    want = rows(_exact_near_join_reference(df, state), "_e", "_n")
+    assert got == want

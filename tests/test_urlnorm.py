@@ -6,6 +6,8 @@ from __future__ import annotations
 import datetime
 
 import duckdb
+from hypothesis import given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 import pandas as pd
 
@@ -202,3 +204,89 @@ def test_url_dup_marks_null_ts_never_beats_dated_crawl(spark):
     out = {r["url"]: r["url_dup"] for r in url_dup_marks(df).collect()}
     assert out["https://www.site.com/x"] is False  # dated crawl survives
     assert out["https://site.com/x"] is True
+
+
+def test_drop_url_dups_narrow_plan_is_one_window_exchange(spark):
+    """The recrawl drop decides in ONE exchange: the executed plan holds a
+    single shuffle Exchange (the recrawl window's) besides the broadcast of
+    the drop keys, and no Aggregate — tied captures share a rank(), so no
+    re-aggregation by (url, ts) is needed to keep them whole."""
+    from wikidataquality_spark.operators.dedup import drop_url_dups_narrow
+
+    t0 = datetime.datetime(2025, 1, 1)
+    rows = [
+        ("https://site.com/a", t0, b"a"),
+        ("https://www.site.com/a", t0, b"b"),
+        ("https://site.com/c", None, b"c"),
+    ]
+    df = spark.createDataFrame(rows, "url string, warc_ts timestamp, html binary")
+    out = drop_url_dups_narrow(df)
+    assert len(out.collect()) == 2  # the www capture drops
+    fmt = spark._jvm.PythonSQLUtils.explainString(
+        out._jdf.queryExecution(), "formatted"
+    )
+    final = fmt.split("== Initial Plan ==")[0]
+    assert "isFinalPlan=true" in fmt
+    assert final.count(" Exchange (") == 1, final
+    assert final.count("BroadcastExchange (") == 1, final
+    assert "Aggregate" not in final, final
+
+
+def _marks_min_reference(df):
+    """The recrawl drop as url_dup_marks plus a re-aggregation: a (url, ts)
+    key drops only when every one of its captures is flagged."""
+    marks = url_dup_marks(df.select("url", "warc_ts"))
+    drop_keys = (
+        marks.groupBy("url", "warc_ts")
+        .agg(F.min(F.col("url_dup").cast("int")).alias("_all_dup"))
+        .filter("_all_dup = 1")
+        .selectExpr("url AS _du", "warc_ts AS _dt")
+    )
+    cond = F.col("url").eqNullSafe(F.col("_du")) & F.col("warc_ts").eqNullSafe(
+        F.col("_dt")
+    )
+    return df.join(F.broadcast(drop_keys), cond, "left_anti")
+
+
+# one canonical page under www / default-port / tracking-param / slash /
+# param-order / fragment variants, a second page, a scheme-less string
+_URL_POOL = [
+    "https://site.com/a?b=1&a=2",
+    "https://www.site.com/a?a=2&b=1&utm_source=feed",
+    "https://site.com:443/a/?a=2&b=1#top",
+    "http://site.com:80/a?a=2&b=1",
+    "http://site.com/a?gclid=x&a=2&b=1",
+    "https://SITE.com/b",
+    "https://site.com/b/",
+    "site.com/b",
+    None,
+]
+_TS_POOL = [
+    datetime.datetime(2025, 1, 1),
+    datetime.datetime(2025, 2, 1),
+    datetime.datetime(2025, 3, 1),
+    None,
+]
+
+
+@given(
+    captures=st.lists(
+        st.tuples(st.sampled_from(_URL_POOL), st.sampled_from(_TS_POOL)),
+        min_size=1,
+        max_size=14,
+    ),
+    n_tied=st.integers(0, 4),
+)
+@settings(max_examples=10, deadline=None)
+def test_drop_url_dups_narrow_matches_marks_min_reference(spark, captures, n_tied):
+    """On generated crawls of url variants, NULL urls, NULL timestamps and
+    fully tied captures (the first `n_tied` captures repeated), the rank()
+    drop keeps exactly the rows the url_dup_marks + min(url_dup) reference
+    keeps."""
+    from wikidataquality_spark.operators.dedup import drop_url_dups_narrow
+
+    rows = [(i, u, t) for i, (u, t) in enumerate(captures + captures[:n_tied])]
+    df = spark.createDataFrame(rows, "rid int, url string, warc_ts timestamp")
+    got = sorted(r["rid"] for r in drop_url_dups_narrow(df).select("rid").collect())
+    want = sorted(r["rid"] for r in _marks_min_reference(df).select("rid").collect())
+    assert got == want

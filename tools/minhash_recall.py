@@ -3,7 +3,7 @@
 Companion evidence to tools/ivf_recall.py and tools/pq_recall.py for the
 lexical near-dup path (operators/dedup.py): the banding (16 bands × 8 rows
 over 128 minhashes of k=3 word shingles) CANDIDATES duplicates on bucket
-collision, then the default-on verify stage (r04 VERDICT #2) confirms each
+collision, then the verify stage (r04 VERDICT #2) confirms each
 candidate pair by signature component agreement (matches ≥
 MINHASH_VERIFY_MIN_EQ of 128 — the unbiased Jaccard estimator). This tool
 replays the SAME signature code the Spark UDF runs (_shingle_hashes/

@@ -402,7 +402,7 @@ def main() -> int:
             "\n## MinHash banding recall + verify (tools/minhash_recall.py)\n\n"
             f"Band-collision rate vs EXACT shingle Jaccard, {rec['n_docs']} docs "
             f"({rec['sf_dir']}), {rec['bands']} bands × {rec['rows']} rows. The "
-            "operator CANDIDATES dups on bucket collision, then the default-on "
+            "operator CANDIDATES dups on bucket collision, then the "
             "verify stage (r04 VERDICT #2) confirms each pair by signature "
             "component agreement (matches ≥ "
             f"{rec.get('verify_min_eq', 80)}/128 — the unbiased Jaccard "
@@ -509,7 +509,7 @@ def main() -> int:
             )
         out += (
             "\n## Measured shuffle volumes (tools/shuffle_audit.py)\n\n"
-            f"Per-query task metrics from the Spark event log at "
+            f"Per-query task metrics from the Spark status store at "
             f"{rec['sf_dir']} (steady-state run, one-time session costs "
             "excluded via an ungrouped warm-up). These are the quantitative "
             "twin of the plan-shape gates: bytes/records are deterministic "

@@ -17,11 +17,12 @@ compression-free and host-free:
     a width jump to hundreds of bytes means a fat column leaked into an
     exchange.
 
-Protocol: fresh SparkSession with event logging on; each headline query
-runs once UNGROUPED (warm-up: parquet footers, python workers, train-once
-artifact caches) and once inside a named job group, materialized through
-the same noop-format write as bench.py; the event log is parsed after
-spark.stop() — job-group id → stage ids → summed task metrics.
+Protocol: each headline query runs once UNGROUPED (warm-up: parquet
+footers, python workers, train-once artifact caches) and once inside its
+own job group, materialized through the same noop-format write as bench.py;
+the group's task metrics are then read from the live status store (job
+group → stage ids → the stages' summed task metrics), as
+perfbench/probes.group_task_metrics reads them.
 
     python tools/shuffle_audit.py [sf_dir] [--write]
 
@@ -31,43 +32,59 @@ renders into PLANS.md on its next run.
 
 from __future__ import annotations
 
-import glob
 import json
 import os
 import sys
-import tempfile
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 for p in (REPO, os.path.dirname(os.path.abspath(__file__))):
     if p not in sys.path:
         sys.path.insert(0, p)
 
+# status-store StageData getter per summed field
+_STAGE_FIELDS = {
+    "input_bytes": "inputBytes",
+    "input_records": "inputRecords",
+    "shuffle_write_bytes": "shuffleWriteBytes",
+    "shuffle_read_bytes": "shuffleReadBytes",
+    "shuffle_write_records": "shuffleWriteRecords",
+    "n_tasks": "numCompleteTasks",
+}
 
-def run_queries(sf_dir: str) -> str:
-    """Run the bench headline set under job groups with event logging on;
-    return the event-log directory."""
-    from pyspark.sql import SparkSession
 
-    assert SparkSession.getActiveSession() is None, (
-        "shuffle_audit needs to OWN the session (event logging is a "
-        "start-time config) — run it standalone"
-    )
+def group_metrics(spark, group: str) -> dict[str, int]:
+    """Task metrics summed over the stages of every job in `group`, read
+    from the live status store after the listener bus drains. A stage
+    shared by two jobs is counted once; skipped stages report zeros."""
+    sc = spark.sparkContext._jsc.sc()
+    sc.listenerBus().waitUntilEmpty()
+    store = sc.statusStore()
+    jobs = store.jobsList(None)
+    out = dict.fromkeys(_STAGE_FIELDS, 0)
+    seen: set[int] = set()
+    for i in range(jobs.size()):
+        job = jobs.apply(i)
+        g = job.jobGroup()
+        if not g.isDefined() or g.get() != group:
+            continue
+        for sid in (int(s) for s in job.stageIds().mkString(",").split(",") if s):
+            if sid in seen:
+                continue
+            seen.add(sid)
+            stage = store.lastStageAttempt(sid)
+            for k, getter in _STAGE_FIELDS.items():
+                out[k] += int(getattr(stage, getter)())
+    return out
+
+
+def run_queries(spark, sf_dir: str) -> dict[str, dict]:
+    """Run the bench headline set, each measured run under its own job
+    group; return each query's summed task metrics."""
     from bench import HEADLINE
-    from wikidataquality_spark.session import get_spark
-
-    log_dir = tempfile.mkdtemp(prefix="wdq_eventlog_")
-    spark = get_spark(
-        app_name="shuffle_audit",
-        extra_conf={
-            "spark.eventLog.enabled": "true",
-            "spark.eventLog.dir": log_dir,
-            # plain-text JSON lines (default zstd needs a codec python lacks)
-            "spark.eventLog.compress": "false",
-        },
-    )
     from wikidataquality_spark.plans.driver_queries import QUERIES
 
     sc = spark.sparkContext
+    agg = {}
     for name in HEADLINE:
         # warm-up pass, ungrouped: excludes one-time session costs (python
         # worker spawn, fixture/artifact builds) from the measured group —
@@ -81,79 +98,7 @@ def run_queries(sf_dir: str) -> str:
         sc.setJobGroup(name, name)
         QUERIES[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
         sc.setJobGroup(None, None)
-    spark.stop()
-    return log_dir
-
-
-def parse_event_log(log_dir: str) -> dict[str, dict]:
-    """Event-log JSON → per-job-group summed task metrics."""
-    stage_group: dict[int, str] = {}
-    agg: dict[str, dict] = {}
-
-    def bucket(group: str) -> dict:
-        return agg.setdefault(
-            group,
-            {
-                "input_bytes": 0,
-                "input_records": 0,
-                "shuffle_write_bytes": 0,
-                "shuffle_read_bytes": 0,
-                "shuffle_write_records": 0,
-                "n_tasks": 0,
-            },
-        )
-
-    # Spark 4 writes an eventlog_v2_* DIRECTORY (rolling files + appstatus
-    # marker) per app — walk every regular file under the log dir
-    paths = [
-        os.path.join(root, name)
-        for root, _dirs, files in os.walk(log_dir)
-        for name in files
-        if not name.startswith("appstatus")
-    ]
-
-    def events():
-        for path in sorted(paths):
-            with open(path) as f:
-                for line in f:
-                    try:
-                        yield json.loads(line)
-                    except json.JSONDecodeError:
-                        continue
-
-    # TWO passes: all JobStarts populate stage_group before any TaskEnd is
-    # attributed. Rolling logs split at arbitrary points and lexicographic
-    # file order misorders events_10_ before events_2_ — a single ordered
-    # pass would drop (or misattribute) every task whose JobStart lives in
-    # a later-sorted file (r04 session review).
-    for e in events():
-        if e.get("Event") == "SparkListenerJobStart":
-            group = (e.get("Properties") or {}).get("spark.jobGroup.id")
-            if group:
-                for si in e.get("Stage Infos", []):
-                    # first-listed group wins; only a stage REUSED across
-                    # two grouped jobs is ambiguous, and each query here
-                    # builds a fresh plan, so reuse doesn't arise
-                    stage_group.setdefault(si["Stage ID"], group)
-    for e in events():
-        if e.get("Event") != "SparkListenerTaskEnd":
-            continue
-        group = stage_group.get(e.get("Stage ID"))
-        tm = e.get("Task Metrics")
-        if group is None or tm is None:
-            continue
-        b = bucket(group)
-        b["n_tasks"] += 1
-        im = tm.get("Input Metrics") or {}
-        b["input_bytes"] += im.get("Bytes Read", 0)
-        b["input_records"] += im.get("Records Read", 0)
-        sw = tm.get("Shuffle Write Metrics") or {}
-        b["shuffle_write_bytes"] += sw.get("Shuffle Bytes Written", 0)
-        b["shuffle_write_records"] += sw.get("Shuffle Records Written", 0)
-        sr = tm.get("Shuffle Read Metrics") or {}
-        b["shuffle_read_bytes"] += sr.get("Remote Bytes Read", 0) + sr.get(
-            "Local Bytes Read", 0
-        )
+        agg[name] = group_metrics(spark, name)
     return agg
 
 
@@ -165,15 +110,15 @@ def main() -> int:
             write = True
         else:
             sf_dir = a
-    log_dir = run_queries(sf_dir)
-    agg = parse_event_log(log_dir)
+    from wikidataquality_spark.session import get_spark
 
-    from bench import HEADLINE
+    spark = get_spark(app_name="shuffle_audit")
+    agg = run_queries(spark, sf_dir)
+    spark.stop()
 
     out = {"sf_dir": sf_dir, "queries": {}}
-    for name in HEADLINE:
-        b = agg.get(name)
-        if b is None:
+    for name, b in agg.items():
+        if not b["n_tasks"]:
             out["queries"][name] = {"error": "no tasks attributed"}
             continue
         swb, swr = b["shuffle_write_bytes"], b["shuffle_write_records"]

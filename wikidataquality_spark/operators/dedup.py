@@ -28,7 +28,7 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame, Window as W
+from pyspark.sql import Column, DataFrame, Window as W, WindowSpec
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -329,18 +329,15 @@ def _band_candidates(
 
 
 def minhash_dedup(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "url",
-    verify: bool = True,
+    df: DataFrame, text_col: str = "text", id_col: str = "url"
 ) -> DataFrame:
     """Drop near-duplicates: a row is dropped when an LSH band bucket
     contains a row with a smaller id (deterministic min-id survivor per
-    bucket) AND — with verify=True, the default — the pair's signature
-    component agreement confirms the similarity (≥ MINHASH_VERIFY_MIN_EQ of
-    H=128 components equal; see its derivation).
+    bucket) AND the pair's signature component agreement confirms the
+    similarity (≥ MINHASH_VERIFY_MIN_EQ of H=128 components equal; see its
+    derivation).
 
-    Why verify is default-ON for THIS operator (r04 VERDICT #2): dropping is
+    Why THIS operator verifies (r04 VERDICT #2): dropping is
     unrecoverable, and the measured planted sweep showed band collisions at
     J 0.3–0.5 admitting ~2.5% of pairs — at 10¹² docs that is wrongly
     deleted documents. SimHash (simhash_dedup) and the media hashes already
@@ -353,17 +350,16 @@ def minhash_dedup(
 
     Plan shape: one pandas-UDF projection (signatures), the band window
     shared with dup_marks (_band_candidates) — ONE narrow exchange, single
-    UDF consumer (r04 review) — then, for verify, candidate PAIRS
-    (id, keep_id) re-fetch their signatures through a broadcast-semi-joined
-    re-run of the UDF over candidate rows only (candidates are the dup-ish
-    fraction of the corpus, so the second UDF pass touches few docs and both
-    sig joins broadcast; a corpus that is MOSTLY duplicates should pass
-    verify=False — collision-only semantics, zero extra cost — or budget for
-    candidate-scale shuffles). Greedy min-anchor caveat shared with
-    simhash_dedup: verification is against the bucket's anchor
-    specifically, so a chain A<B<C where C resembles B but not A keeps C
-    when A anchors every shared bucket — collision-only dedup dropped C on
-    B's bucket alone.
+    UDF consumer (r04 review) — then candidate PAIRS (id, keep_id) re-fetch
+    their signatures through a broadcast-semi-joined re-run of the UDF over
+    candidate rows only (candidates are the dup-ish fraction of the corpus,
+    so the second UDF pass touches few docs and both sig joins broadcast; a
+    corpus that is MOSTLY duplicates should budget for candidate-scale
+    shuffles, or take collision-only flags from dup_marks). Greedy
+    min-anchor caveat shared with simhash_dedup: verification is against
+    the bucket's anchor specifically, so a chain A<B<C where C resembles B
+    but not A keeps C when A anchors every shared bucket — collision-only
+    flags mark C on B's bucket alone.
     """
     # contentless docs (NULL or token-less text) are exempt: the rlike is a
     # cheap sound pre-filter, the NULL-signature band explode is the
@@ -376,9 +372,6 @@ def minhash_dedup(
         .filter(F.col(id_col) != F.col("_keep_id"))
         .distinct()
     )
-    if not verify:
-        dropped = cand.select(id_col).distinct()
-        return df.join(dropped, id_col, "left_anti")
     # candidate ids (both pair sides) → second, candidate-only UDF pass.
     # All verify frames are candidate-scale and broadcast: the fat corpus
     # frame never shuffles for verification.
@@ -432,7 +425,8 @@ def dup_marks(
     stage runs here at all.
 
     Plan shape: one shuffle for the exact window, one for the band window
-    (_band_candidates, shared with minhash_dedup), one small distinct.
+    (_band_candidates, shared with minhash_dedup), and one groupBy(id) over
+    the union of both windows' rows that builds the two flags together.
 
     `state` (optional) makes the operator INCREMENTAL: a fingerprint table of
     previously-processed documents (schema of `dup_fingerprints`: id, kind
@@ -482,7 +476,9 @@ def dup_marks(
     # instance is a non-survivor. With unique ids (the data-model contract)
     # this is the plain per-row flag; with a re-crawled id appearing twice,
     # the per-instance flags would otherwise rejoin onto BOTH instances and
-    # drop the survivor itself.
+    # drop the survivor itself. The band candidates join the same groupBy
+    # with a NULL _inst_dup, which bool_and skips: every candidate id also
+    # has exact rows, so its exact flag is unchanged.
     # Survivor order: state rows sort FIRST (`_from_state DESC` — an
     # already-written copy always wins), THEN min id. Under the streaming
     # survivor-order precondition (every state id < every batch id) this is
@@ -498,22 +494,17 @@ def dup_marks(
             f"ORDER BY _from_state DESC, {qid})) > 1 AS _inst_dup",
         )
         .filter("NOT _from_state")
-        .groupBy(id_col)
-        .agg(F.expr("bool_and(_inst_dup)").alias("is_exact_dup"))
+        .selectExpr(qid, "_inst_dup", "FALSE AS _near")
     )
-    near = (
-        _band_candidates(keyed, id_col, state)
-        .select(id_col)
-        .distinct()
-        .selectExpr(qid, "TRUE AS is_near_dup")
+    near = _band_candidates(keyed, id_col, state).selectExpr(
+        qid, "CAST(NULL AS BOOLEAN) AS _inst_dup", "TRUE AS _near"
     )
     flags = (
-        exact
-        .join(near, id_col, "left")
-        .selectExpr(
-            qid,
-            "is_exact_dup",
-            "coalesce(is_near_dup, FALSE) AS is_near_dup",
+        exact.unionByName(near)
+        .groupBy(id_col)
+        .agg(
+            F.expr("bool_and(_inst_dup)").alias("is_exact_dup"),
+            F.expr("bool_or(_near)").alias("is_near_dup"),
         )
         .filter("is_exact_dup OR is_near_dup")
     )
@@ -766,6 +757,18 @@ def canonical_url_sql(expr: str = "url") -> str:
     )
 
 
+def _recrawl_window(canon_col: str, url_col: str, ts_col: str) -> WindowSpec:
+    """The recrawl order: captures of one canonical url, earliest (ts, url)
+    first. The window partitions on TWO independently-seeded 64-bit hashes
+    of the canonical string (16-byte key, false-merge ~2⁻¹²⁸/pair). NULLS
+    LAST: Spark sorts NULL first ascending, so an undated capture would
+    otherwise silently beat the genuinely earliest DATED crawl as the
+    survivor — "earliest" must mean earliest known time (r04 review)."""
+    return W.partitionBy(
+        F.xxhash64(F.col(canon_col)), F.xxhash64(F.lit(1), F.col(canon_col))
+    ).orderBy(F.col(ts_col).asc_nulls_last(), url_col)
+
+
 def url_dup_marks(
     df: DataFrame, url_col: str = "url", ts_col: str = "warc_ts"
 ) -> DataFrame:
@@ -778,23 +781,15 @@ def url_dup_marks(
     if tied rows can differ in payload, order on a finer capture id instead.
     Adds `url_canonical` and boolean `url_dup`; scrub-not-drop like dup_marks.
 
-    Same shuffle discipline as exact_dedup: the window partitions on TWO
-    independently-seeded 64-bit hashes of the canonical string (16-byte key,
-    false-merge ~2⁻¹²⁸/pair), and NULL urls are exempted BEFORE the window
-    (xxhash64(NULL) is a constant — a corpus of NULL urls would otherwise
-    pile into one straggler partition)."""
-    canon = canonical_url(url_col)
+    Same shuffle discipline as exact_dedup: the window (_recrawl_window)
+    partitions on a 16-byte hash key, and NULL urls are exempted BEFORE the
+    window (xxhash64(NULL) is a constant — a corpus of NULL urls would
+    otherwise pile into one straggler partition)."""
     nn = F.col(url_col).isNotNull()
-    # NULLS LAST: Spark sorts NULL first ascending, so an undated capture
-    # would otherwise silently beat the genuinely earliest DATED crawl as
-    # the survivor — "earliest" must mean earliest known time (r04 review)
-    w = W.partitionBy(
-        F.xxhash64(F.col("url_canonical")),
-        F.xxhash64(F.lit(1), F.col("url_canonical")),
-    ).orderBy(F.col(ts_col).asc_nulls_last(), url_col)
+    w = _recrawl_window("url_canonical", url_col, ts_col)
     flagged = (
         df.filter(nn)
-        .withColumn("url_canonical", canon)
+        .withColumn("url_canonical", canonical_url(url_col))
         .withColumn("url_dup", F.row_number().over(w) > 1)
     )
     exempt = (
@@ -817,27 +812,27 @@ def drop_url_dups_narrow(
     contradicting io/warc.py's contract that fat payloads never shuffle and
     making the ingest path's first exchange corpus-sized (r04 ADVICE).
 
-    Shape: marks are computed on a ~24 B (url, ts) projection; the fat frame
-    then LEFT-ANTI joins the broadcast DROP-key set (the hint is needed: a
-    fresh aggregate has no stats, so the planner picks a sort-merge join
-    that would shuffle the fat side — verified live). The drop side is
-    recrawl duplicates only, a small fraction of any real crawl batch, so
-    the fat side never exchanges at all.
+    Shape: the recrawl window (_recrawl_window, shared with url_dup_marks)
+    runs on a ~24 B (url, ts) projection of the non-NULL urls; the fat frame
+    then LEFT-ANTI joins the broadcast DROP-key set (the hint is needed:
+    without it the planner may pick a sort-merge join that shuffles the fat
+    side). The drop side is recrawl duplicates only, a small fraction of
+    any real crawl batch, so the fat side never exchanges at all.
 
-    Tie semantics (vs url_dup_marks' arbitrary-survivor caveat): a key whose
-    captures are FULLY tied on (canonical, ts, url) appears as both survivor
-    and dup, and an anti join on the key would drop the whole group — losing
-    the document. Those keys are therefore excluded from the drop set
-    (min(url_dup) over the key must be true): tied groups are KEPT WHOLE
-    (over-keep, recoverable by text dedup downstream) rather than lost
-    (unrecoverable). eqNullSafe on ts so an undated dup still matches its
-    drop key."""
-    narrow = df.select(url_col, ts_col)
-    marks = url_dup_marks(narrow, url_col=url_col, ts_col=ts_col)
+    Tie semantics (vs url_dup_marks' arbitrary-survivor caveat): the drop
+    keys are the (url, ts) rows with rank() > 1. Captures FULLY tied on
+    (canonical, ts, url) share one rank, so a tied first key ranks 1 and is
+    KEPT WHOLE (over-keep, recoverable by text dedup downstream) rather
+    than lost to an anti join on a key that is both survivor and dup;
+    every later key ranks above 1 and drops. eqNullSafe on ts so an
+    undated dup still matches its drop key."""
+    w = _recrawl_window("_canon", url_col, ts_col)
     drop_keys = (
-        marks.groupBy(url_col, ts_col)
-        .agg(F.min(F.col("url_dup").cast("int")).alias("_all_dup"))
-        .filter(F.col("_all_dup") == 1)
+        df.select(url_col, ts_col)
+        .filter(F.col(url_col).isNotNull())
+        .withColumn("_canon", canonical_url(url_col))
+        .withColumn("_rank", F.rank().over(w))
+        .filter("_rank > 1")
         .select(F.col(url_col).alias("_du"), F.col(ts_col).alias("_dt"))
     )
     cond = F.col(url_col).eqNullSafe(F.col("_du")) & F.col(ts_col).eqNullSafe(
