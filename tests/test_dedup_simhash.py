@@ -296,8 +296,9 @@ def test_minhash_verify_plan_shape(spark):
     static plan duplicates the candidate lineage across consumers, but
     runtime exchange reuse collapses it (asserted via ReusedExchange in the
     final adaptive plan AND an accumulator counting actual UDF rows: corpus
-    + ≤2× the candidate set, never a second corpus pass). The candidate-id
-    restriction is a broadcast LeftSemi join preceding the re-sign.
+    + each candidate id once — both pair sides read one re-signed frame —
+    never a second corpus pass). The candidate-id restriction is a
+    broadcast LeftSemi join preceding the re-sign.
     (Iterator/pd are module-level imports: `from __future__ import
     annotations` stringifies the UDF type hints and PySpark resolves them
     in the module globals.)"""
@@ -329,13 +330,16 @@ def test_minhash_verify_plan_shape(spark):
     finally:
         D.minhash_udf = real
     assert len(got) == 60  # the 6 twins dropped (verified true dups)
-    # corpus pass (66) + both sides of ≤6 candidate pairs re-signed —
-    # a second corpus pass would show ≥ 132
-    assert 66 <= acc.value <= 66 + 4 * 6, acc.value
+    # corpus pass (66) + the ≤12 candidate ids of ≤6 pairs, each re-signed
+    # once — re-signing per pair side would show 90, a second corpus pass
+    # ≥ 132
+    assert 66 <= acc.value <= 66 + 2 * 6, acc.value
     fmt = spark._jvm.PythonSQLUtils.explainString(
         out._jdf.queryExecution(), "formatted"
     )
     assert "isFinalPlan=true" in fmt
+    # two Arrow stages run: the corpus pass and the candidate re-sign
+    assert fmt.split("== Initial Plan ==")[0].count("ArrowEvalPython") == 2
     assert "ReusedExchange" in fmt  # the collapse the row-count proves
     assert "LeftSemi" in fmt  # candidate-id restriction before the re-sign
     assert "CartesianProduct" not in fmt and "BatchEvalPython" not in fmt

@@ -234,6 +234,37 @@ def test_pq_screened_path_keeps_vectors_out_of_exchanges(spark, planted):
             assert "_unit" not in block and "_nvec" not in block, block
 
 
+def test_pq_verify_broadcasts_candidate_vectors_once(spark, planted):
+    """The screened path's exact verify builds its candidate-vector frame
+    (id, vector, norm) once: in the final adaptive plan exactly one
+    BroadcastExchange carries it, and the second pair side reads it through
+    a ReusedExchange instead of a second re-read and broadcast. (The wide
+    margin keeps the planted pairs on the shortlist; an empty one lets the
+    adaptive plan prune the verify altogether.)"""
+    out = semdedup_marks(
+        planted, CENTROIDS, threshold=0.9, dim=DIM, pq_art=_tiny_pq_art(),
+        adc_margin=0.5,
+    )
+    out.collect()
+    fmt = spark._jvm.PythonSQLUtils.explainString(
+        out._jdf.queryExecution(), "formatted"
+    )
+    tree, details = fmt.split("\n\n", 1)
+    final_ids = set(re.findall(r"\((\d+)\)", tree.split("== Initial Plan ==")[0]))
+    nodes = dict(re.findall(r"^\((\d+)\) (.*?)(?=^\(\d+\) |\Z)", details, re.M | re.S))
+    vector_bcasts = [
+        i for i in final_ids
+        if nodes[i].startswith("BroadcastExchange") and "Input [3]" in nodes[i]
+    ]
+    assert len(vector_bcasts) == 1, vector_bcasts
+    reused = [
+        re.search(r"Reuses operator id: (\d+)", nodes[i]).group(1)
+        for i in final_ids
+        if nodes[i].startswith("ReusedExchange")
+    ]
+    assert vector_bcasts[0] in reused, reused
+
+
 def test_sdc_score_exact_beside_null_code_row(spark):
     """A NULL-code row in the same Arrow batch as a valid pair must not
     touch the valid pair's score. pandas reads a long column holding a NULL

@@ -53,9 +53,10 @@ def freeze_signature_fixtures(spark) -> None:
     from pyspark.sql import functions as F
 
     from wikidataquality_spark.operators.dedup import (
+        SIMHASH_BANDS,
         band_keys_sql,
+        hamming_band_keys,
         minhash_udf,
-        simhash_band_keys,
         simhash_udf,
     )
     from wikidataquality_spark.operators.langid_ngram import ngram_langid
@@ -77,7 +78,11 @@ def freeze_signature_fixtures(spark) -> None:
     )
     sh = docs.select("doc_id", simhash_udf(F.col("text")).alias("simhash"))
     _freeze(
-        sh.select("doc_id", "simhash", F.explode(simhash_band_keys("simhash")).alias("band_key")),
+        sh.select(
+            "doc_id",
+            "simhash",
+            F.explode(hamming_band_keys("simhash", SIMHASH_BANDS)).alias("band_key"),
+        ),
         "simhash_bands_sf001.parquet",
     )
     res = ngram_langid("text")

@@ -45,10 +45,11 @@ ARROW_EXEMPT = {
     # the groupBy+verify-join-back became a single min(struct) window
     # (operators/dedup.py) — all three are now ENFORCED (r04 review).
     "minhash_neardup_docs": "verify stage (r04 VERDICT #2): the second UDF "
-    "pass re-signs CANDIDATE rows only — the broadcast LeftSemi join on "
-    "candidate ids precedes the UDF in the plan (gated by "
-    "test_minhash_verify_plan_shape), so the extra Arrow stage touches the "
-    "dup-candidate fraction, never the corpus",
+    "pass re-signs each CANDIDATE id once — the broadcast LeftSemi join on "
+    "candidate ids precedes the UDF in the plan, and both pair sides read "
+    "the one re-signed frame (gated by test_minhash_verify_plan_shape), so "
+    "the extra Arrow stage touches the dup-candidate fraction, never the "
+    "corpus",
 }
 
 # query → signals that MUST hold for the plan to be accepted

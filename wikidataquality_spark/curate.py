@@ -39,7 +39,7 @@ from dataclasses import dataclass
 from functools import reduce
 from operator import and_
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from wikidataquality_spark.operators.barrier import seal
@@ -154,6 +154,19 @@ def frozen_fp_budget(bloom: dict, funnel: dict[str, int]) -> dict:
     }
 
 
+def _verdict_join(
+    frame: DataFrame, marks: DataFrame, id_col: str, verdict: str
+) -> tuple[DataFrame, Column]:
+    """Attach one stage's id-keyed verdict column to `frame` (left join) and
+    return it with the stage's FAIL-CLOSED drop flag: a NULL verdict (a row
+    the stage could not judge or re-attach) drops. dropDuplicates on the
+    marks: ids sharing a value share one verdict (the marks operators'
+    id-keyed contract), and duplicate ids would otherwise MULTIPLY rows
+    through the join and break the funnel's conservation invariant."""
+    marks = marks.select(id_col, verdict).dropDuplicates([id_col])
+    return frame.join(marks, id_col, "left"), F.coalesce(F.col(verdict), F.lit(True))
+
+
 def curate(
     docs: DataFrame,
     cfg: CurateConfig | None = None,
@@ -224,37 +237,27 @@ def curate(
                 domain_blocklist_marks,
             )
 
-            # dropDuplicates: the marks operator emits one row per input
-            # row; duplicate input ids would otherwise MULTIPLY through
-            # this left join and break the funnel's conservation invariant
-            # (r04 review — ids sharing a value then share one verdict,
-            # the operator's documented id-keyed contract)
-            marks = (
-                domain_blocklist_marks(
-                    flagged, cfg.blocklist, id_col=id_c
-                )
-                .select(id_c, "blocked")
-                .dropDuplicates([id_c])
-            )
-            flagged = flagged.join(marks, id_c, "left")
             # NULL blocked = unparseable host → fail closed
-            url_drop = url_drop | F.coalesce(F.col("blocked"), F.lit(True))
+            flagged, blocked = _verdict_join(
+                flagged,
+                domain_blocklist_marks(flagged, cfg.blocklist, id_col=id_c),
+                id_c,
+                "blocked",
+            )
+            url_drop = url_drop | blocked
         if cfg.path_rules is not None:
             from wikidataquality_spark.operators.urlfilter import (
                 path_blocklist_marks,
             )
 
-            pmarks = (
-                path_blocklist_marks(
-                    url_base, cfg.path_rules, id_col=id_c
-                )
-                .select(id_c, "path_blocked")
-                .dropDuplicates([id_c])
+            # NULL path verdict (unparseable/NULL url or id) → fail closed
+            flagged, path_blocked = _verdict_join(
+                flagged,
+                path_blocklist_marks(url_base, cfg.path_rules, id_col=id_c),
+                id_c,
+                "path_blocked",
             )
-            flagged = flagged.join(pmarks, id_c, "left")
-            # NULL path verdict (unparseable/NULL url or id) → fail closed,
-            # same convention as the domain arm
-            url_drop = url_drop | F.coalesce(F.col("path_blocked"), F.lit(True))
+            url_drop = url_drop | path_blocked
         flagged = flagged.withColumn("_url_drop", url_drop)
     else:
         flagged = flagged.withColumn("_url_drop", F.lit(False))
@@ -267,11 +270,10 @@ def curate(
     if cfg.dedup:
         from wikidataquality_spark.operators.dedup import dup_marks
 
-        scored = dup_marks(scored, text_col=text_c, id_col=id_c)
-        scored = scored.withColumn(
-            "_dup_drop",
-            F.coalesce(F.col("is_exact_dup"), F.lit(False))
-            | F.coalesce(F.col("is_near_dup"), F.lit(False)),
+        # dup_marks' flags are never NULL (a row outside the flag set is
+        # filled FALSE)
+        scored = dup_marks(scored, text_col=text_c, id_col=id_c).withColumn(
+            "_dup_drop", F.col("is_exact_dup") | F.col("is_near_dup")
         )
     else:
         scored = scored.withColumn("_dup_drop", F.lit(False))
@@ -279,7 +281,6 @@ def curate(
     if cfg.frozen_corpus is not None:
         from wikidataquality_spark.operators.bloom import cross_corpus_dedup_marks
 
-        # dropDuplicates: same conservation guard as the blocklist join
         fmarks, _bloom = cross_corpus_dedup_marks(
             scored,
             cfg.frozen_corpus,
@@ -288,31 +289,25 @@ def curate(
             fp_rate=cfg.frozen_fp_rate,
             sizing=None if report is None else report.setdefault("frozen_bloom", {}),
         )
-        fmarks = fmarks.select(id_c, "in_corpus_maybe").dropDuplicates([id_c])
-        scored = scored.join(fmarks, id_c, "left")
         # NULL verdict (NULL text/id — membership undefined or hits can't
-        # re-attach) → fail closed, the decontaminate convention; in the
-        # cascade those rows are owned by eligibility anyway
-        scored = scored.withColumn(
-            "_frozen_drop", F.coalesce(F.col("in_corpus_maybe"), F.lit(True))
-        )
+        # re-attach) → fail closed; in the cascade those rows are owned by
+        # eligibility anyway
+        scored, frozen = _verdict_join(scored, fmarks, id_c, "in_corpus_maybe")
+        scored = scored.withColumn("_frozen_drop", frozen)
     else:
         scored = scored.withColumn("_frozen_drop", F.lit(False))
 
     if cfg.benchmark is not None:
         from wikidataquality_spark.operators.decontaminate import contamination_marks
 
-        # dropDuplicates: same conservation guard as the blocklist join
-        marks = (
-            contamination_marks(scored, cfg.benchmark, id_col=id_c, text_col=text_c)
-            .select(id_c, "contaminated")
-            .dropDuplicates([id_c])
-        )
-        scored = scored.join(marks, id_c, "left")
         # NULL contaminated = unverifiable → fail closed (drop here)
-        scored = scored.withColumn(
-            "_contam_drop", F.coalesce(F.col("contaminated"), F.lit(True))
+        scored, contaminated = _verdict_join(
+            scored,
+            contamination_marks(scored, cfg.benchmark, id_col=id_c, text_col=text_c),
+            id_c,
+            "contaminated",
         )
+        scored = scored.withColumn("_contam_drop", contaminated)
     else:
         scored = scored.withColumn("_contam_drop", F.lit(False))
 

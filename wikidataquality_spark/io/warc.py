@@ -231,6 +231,15 @@ def _parse_http_response(block: bytes) -> tuple[int, str | None, bytes]:
     return status, headers.get("content-type"), body
 
 
+_NULL_RECORD = dict.fromkeys(WARC_SCHEMA.fieldNames())
+
+
+def _record_row(warc_file: str | None, **fields) -> dict:
+    """One record row in WARC_SCHEMA's column order: `warc_file` and
+    `fields` set, every other column NULL."""
+    return {**_NULL_RECORD, "warc_file": warc_file, **fields}
+
+
 def iter_warc_records(blob: bytes, warc_file: str | None = None) -> Iterator[dict]:
     """Tolerant WARC record iterator: yields one dict per record in
     WARC_SCHEMA's column order. Corruption yields an error row (err set,
@@ -244,18 +253,7 @@ def iter_warc_records(blob: bytes, warc_file: str | None = None) -> Iterator[dic
     try:
         stream = _gunzip_members(blob) if bytes(blob[:2]) == _GZIP_MAGIC else bytes(blob)
     except Exception as e:  # noqa: BLE001 — totality on purpose
-        yield {
-            "warc_file": warc_file,
-            "record_offset": None,
-            "record_id": None,
-            "warc_type": None,
-            "url": None,
-            "warc_ts": None,
-            "http_status": None,
-            "content_type": None,
-            "html": None,
-            "err": _err_str(e),
-        }
+        yield _record_row(warc_file, err=_err_str(e))
         return
 
     pos = 0
@@ -267,18 +265,7 @@ def iter_warc_records(blob: bytes, warc_file: str | None = None) -> Iterator[dic
         if pos >= n:
             break
         offset = pos
-        row = {
-            "warc_file": warc_file,
-            "record_offset": offset,
-            "record_id": None,
-            "warc_type": None,
-            "url": None,
-            "warc_ts": None,
-            "http_status": None,
-            "content_type": None,
-            "html": None,
-            "err": None,
-        }
+        row = _record_row(warc_file, record_offset=offset)
         try:
             head_end = stream.find(b"\r\n\r\n", pos)
             if head_end < 0:
@@ -326,18 +313,9 @@ def iter_warc_records(blob: bytes, warc_file: str | None = None) -> Iterator[dic
         yield row
 
     if not yielded:
-        yield {
-            "warc_file": warc_file,
-            "record_offset": None,
-            "record_id": None,
-            "warc_type": None,
-            "url": None,
-            "warc_ts": None,
-            "http_status": None,
-            "content_type": None,
-            "html": None,
-            "err": "warc: empty file" if len(blob) == 0 else "warc: no records",
-        }
+        yield _record_row(
+            warc_file, err="warc: empty file" if len(blob) == 0 else "warc: no records"
+        )
 
 
 def read_warc(spark: SparkSession, path: str, glob: str | None = "*.warc*") -> DataFrame:

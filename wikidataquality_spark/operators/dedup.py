@@ -24,7 +24,7 @@ Scale notes (10^12 docs / 1000 executors):
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Iterator, Sequence
 
 import numpy as np
 import pandas as pd
@@ -328,6 +328,48 @@ def _band_candidates(
     )
 
 
+def _pair_payloads(
+    pairs: DataFrame,
+    rows: DataFrame,
+    id_col: str,
+    other_col: str,
+    payload: dict[str, Column],
+) -> DataFrame:
+    """The verify re-fetch shared by minhash_dedup and semdedup_marks:
+    candidate pairs (id_col, other_col) → the same pairs with each side's
+    payload, `_a<name>` for id_col's row and `_b<name>` for other_col's.
+
+    The id union of both pair sides broadcast-semi-joins `rows`, so only
+    candidate rows are re-read and the payload (a signature UDF, a vector
+    and its norm) is computed ONCE per candidate id; that one payload frame
+    is broadcast and joined, aliased, to both pair sides, so the second join
+    reuses the first join's broadcast exchange. Both frames are
+    candidate-scale, so neither join moves the corpus — but a corpus that is
+    MOSTLY duplicates makes them corpus-scale, and the broadcast hints (kept
+    here, in one place) are then the thing to revisit."""
+    ids = (
+        pairs.select(id_col)
+        .unionByName(pairs.select(F.col(other_col).alias(id_col)))
+        .distinct()
+    )
+    fetched = F.broadcast(
+        rows.join(F.broadcast(ids), id_col, "left_semi").select(
+            F.col(id_col), *[c.alias(n) for n, c in payload.items()]
+        )
+    )
+    a, b = fetched.alias("_a"), fetched.alias("_b")
+    return (
+        pairs.alias("_p")
+        .join(a, F.col(f"_p.{id_col}") == F.col(f"_a.{id_col}"))
+        .join(b, F.col(f"_p.{other_col}") == F.col(f"_b.{id_col}"))
+        .select(
+            F.col(f"_p.{id_col}"),
+            F.col(f"_p.{other_col}"),
+            *[F.col(f"{s}.{n}").alias(f"{s}{n}") for s in ("_a", "_b") for n in payload],
+        )
+    )
+
+
 def minhash_dedup(
     df: DataFrame, text_col: str = "text", id_col: str = "url"
 ) -> DataFrame:
@@ -351,55 +393,34 @@ def minhash_dedup(
     Plan shape: one pandas-UDF projection (signatures), the band window
     shared with dup_marks (_band_candidates) — ONE narrow exchange, single
     UDF consumer (r04 review) — then candidate PAIRS (id, keep_id) re-fetch
-    their signatures through a broadcast-semi-joined re-run of the UDF over
-    candidate rows only (candidates are the dup-ish fraction of the corpus,
-    so the second UDF pass touches few docs and both sig joins broadcast; a
-    corpus that is MOSTLY duplicates should budget for candidate-scale
-    shuffles, or take collision-only flags from dup_marks). Greedy
-    min-anchor caveat shared with simhash_dedup: verification is against
-    the bucket's anchor specifically, so a chain A<B<C where C resembles B
-    but not A keeps C when A anchors every shared bucket — collision-only
-    flags mark C on B's bucket alone.
+    their signatures through _pair_payloads: one re-run of the UDF over
+    candidate rows only, each candidate id signed once (candidates are the
+    dup-ish fraction of the corpus, so the second UDF pass touches few docs
+    and the sig frame broadcasts; a corpus that is MOSTLY duplicates should
+    budget for candidate-scale shuffles, or take collision-only flags from
+    dup_marks). Greedy min-anchor caveat shared with simhash_dedup:
+    verification is against the bucket's anchor specifically, so a chain
+    A<B<C where C resembles B but not A keeps C when A anchors every shared
+    bucket — collision-only flags mark C on B's bucket alone.
     """
     # contentless docs (NULL or token-less text) are exempt: the rlike is a
     # cheap sound pre-filter, the NULL-signature band explode is the
     # tokenizer-defined authority — see has_dedupable_content
-    sigs = df.filter(has_dedupable_content(text_col)).select(
-        F.col(id_col), minhash_udf(F.col(text_col)).alias("_sig")
-    )
+    content = df.filter(has_dedupable_content(text_col))
+    sigs = content.select(F.col(id_col), minhash_udf(F.col(text_col)).alias("_sig"))
     cand = (
         _band_candidates(sigs, id_col)
         .filter(F.col(id_col) != F.col("_keep_id"))
         .distinct()
     )
-    # candidate ids (both pair sides) → second, candidate-only UDF pass.
-    # All verify frames are candidate-scale and broadcast: the fat corpus
-    # frame never shuffles for verification.
-    cand_ids = (
-        cand.select(id_col)
-        .unionByName(cand.select(F.col("_keep_id").alias(id_col)))
-        .distinct()
-    )
-    vsigs = (
-        df.join(F.broadcast(cand_ids), id_col, "left_semi")
-        .filter(has_dedupable_content(text_col))
-        .select(F.col(id_col), minhash_udf(F.col(text_col)).alias("_vsig"))
-    )
+    # candidates re-sign once each (one candidate-only UDF pass), then both
+    # pair sides read that one broadcast frame
     dropped = (
-        cand.join(
-            F.broadcast(vsigs.select(F.col(id_col), F.col("_vsig").alias("_sig_a"))),
-            id_col,
-        )
-        .join(
-            F.broadcast(
-                vsigs.select(
-                    F.col(id_col).alias("_keep_id"), F.col("_vsig").alias("_sig_b")
-                )
-            ),
-            "_keep_id",
+        _pair_payloads(
+            cand, content, id_col, "_keep_id", {"sig": minhash_udf(F.col(text_col))}
         )
         .filter(
-            sig_match_count(F.col("_sig_a"), F.col("_sig_b"))
+            sig_match_count(F.col("_asig"), F.col("_bsig"))
             >= F.lit(MINHASH_VERIFY_MIN_EQ)
         )
         .select(id_col)
@@ -591,16 +612,80 @@ def simhash_udf(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
         yield s
 
 
-def simhash_band_keys(sig_col: str | Column = "simhash") -> Column:
-    """SIMHASH_BANDS keys of 16 bits each, tagged by band index so different
-    bands never collide into the same bucket."""
-    sig = F.col(sig_col) if isinstance(sig_col, str) else sig_col
-    width = SIMHASH_BITS // SIMHASH_BANDS
-    keys = [
-        F.xxhash64(F.lit(i), F.shiftrightunsigned(sig, i * width).bitwiseAND(F.lit((1 << width) - 1)))
-        for i in range(SIMHASH_BANDS)
-    ]
-    return F.array(*keys)
+def hamming_band_keys(sig: str | Column, n_bands: int) -> Column:
+    """n_bands keys of a 64-bit hash, 64/n_bands bits each, tagged by band
+    index so different bands never collide into the same bucket. Any pair
+    within Hamming distance n_bands − 1 shares at least one key
+    (pigeonhole) — the candidate bound of SimHash and the media hashes."""
+    sig = F.col(sig) if isinstance(sig, str) else sig
+    width = 64 // n_bands
+    return F.array(
+        *[
+            F.xxhash64(
+                F.lit(i),
+                F.shiftrightunsigned(sig, i * width).bitwiseAND(F.lit((1 << width) - 1)),
+            )
+            for i in range(n_bands)
+        ]
+    )
+
+
+def _verified_anchor_rows(
+    hashed: DataFrame,
+    id_col: str,
+    hash_col: str,
+    n_bands: int,
+    max_hamming: int,
+    guards: Sequence[tuple[str, int]] = (),
+    bucket_extra: tuple[str, ...] = (),
+) -> DataFrame:
+    """The Hamming anchor-verify window behind simhash_dedup and every
+    media-fingerprint marks operator: band-explode → ONE min(struct) anchor
+    window per bucket → inline Hamming + guard verify. Returns verified
+    candidate rows (id_col, *bucket_extra, _anchor_id) — one per (row,
+    bucket) that verified, pre-deduplication.
+
+    The anchor id AND its hash and guards come from the one window: ids are
+    unique, so the struct ordering never reaches the later fields and the
+    winner is exactly the bucket's min-id row (no groupBy + verify-join-back,
+    which would be a second exchange). Each (column, tolerance) guard adds
+    |guard − anchor guard| ≤ tolerance to the verify. bucket_extra columns
+    join the bucket key (e.g. frame_index, so video frames only ever bucket
+    with the same position in other videos).
+
+    Explode of the CASE: a NULL hash (token-less text, undecodable media)
+    emits no band rows without a filter on the hash column, which for a
+    UDF-computed hash would re-extract the UDF into a second Arrow stage
+    (filter + projection each evaluate it) — the CASE keeps ONE consumer."""
+    h = F.col(hash_col)
+    bands = hashed.select(
+        id_col,
+        hash_col,
+        *[g for g, _ in guards],
+        *bucket_extra,
+        F.explode(F.when(h.isNotNull(), hamming_band_keys(h, n_bands))).alias("_bk"),
+    )
+    if bucket_extra:
+        bands = bands.withColumn("_bk", F.xxhash64("_bk", *bucket_extra))
+    anchor = F.col("_anchor")
+    verified = F.bit_count(h.bitwiseXOR(anchor["s"])) <= max_hamming
+    for k, (g, tol) in enumerate(guards):
+        verified = verified & (F.abs(F.col(g) - anchor[f"g{k}"]) <= tol)
+    return (
+        bands.withColumn(
+            "_anchor",
+            F.min(
+                F.struct(
+                    F.col(id_col).alias("i"),
+                    h.alias("s"),
+                    *[F.col(g).alias(f"g{k}") for k, (g, _) in enumerate(guards)],
+                )
+            ).over(W.partitionBy("_bk")),
+        )
+        .filter(F.col(id_col) != anchor["i"])
+        .filter(verified)
+        .select(id_col, *bucket_extra, anchor["i"].alias("_anchor_id"))
+    )
 
 
 def simhash_dedup(
@@ -623,15 +708,9 @@ def simhash_dedup(
     scale.
 
     Plan shape (narrow end-to-end): signatures are one pandas-UDF projection
-    of (id, 8-byte sig); banding explodes to 4 key rows/doc; the anchor id
-    AND its signature come from ONE min(struct(id, sig)) OVER (PARTITION BY
-    bucket) — ids are unique, so the struct ordering never reaches the sig
-    field and the winner is exactly the bucket's min-id row. That window
-    replaces the old groupBy + verify-join-back, which (a) was a second
-    exchange and (b) consumed the signature-UDF lineage from two different
-    exchange subtrees, recomputing the UDF over the full corpus twice
-    (r04 review). Hamming verification is inline; everything after the UDF
-    moves ≤16-byte rows."""
+    of (id, 8-byte sig); the anchor window (_verified_anchor_rows, shared
+    with the media hashes) explodes 4 key rows/doc and verifies inline;
+    everything after the UDF moves ≤16-byte rows."""
     # contentless docs (NULL or token-less text) are exempt: simhash of no
     # tokens is the constant 0, so every such doc would share all 4 band
     # buckets, verify at hamming 0, and be dropped as a "near-dup" of
@@ -639,24 +718,8 @@ def simhash_dedup(
     sigs = df.filter(has_dedupable_content(text_col)).select(
         F.col(id_col), simhash_udf(F.col(text_col)).alias("_sh")
     )
-    # explode-of-NULL drops token-less rows without a UDF-output filter
-    # (which would re-extract the UDF into a second Arrow stage)
-    bands = sigs.select(
-        id_col,
-        "_sh",
-        F.explode(
-            F.when(F.col("_sh").isNotNull(), simhash_band_keys("_sh"))
-        ).alias("_bk"),
-    )
-    anchor = F.min(F.struct(F.col(id_col).alias("i"), F.col("_sh").alias("s"))).over(
-        W.partitionBy("_bk")
-    )
     dropped = (
-        bands.withColumn("_anchor", anchor)
-        .filter(F.col(id_col) != F.col("_anchor")["i"])
-        .filter(
-            F.bit_count(F.col("_sh").bitwiseXOR(F.col("_anchor")["s"])) <= max_hamming
-        )
+        _verified_anchor_rows(sigs, id_col, "_sh", SIMHASH_BANDS, max_hamming)
         .select(id_col)
         .distinct()
     )

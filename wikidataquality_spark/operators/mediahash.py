@@ -10,12 +10,12 @@ misses all of it. dHash (difference hash, the standard perceptual baseline):
 decode → 8×9 block-mean luma grid → 64 horizontal-gradient sign bits. Small
 retouches flip few bits, so near-dup = small Hamming distance.
 
-Scale design (identical shape to dedup.simhash_dedup, same pigeonhole
-banding): hashes are one mapInPandas decode pass (TOTAL — corrupt blobs
-become error rows, never dead tasks); banding explodes to B key rows per
-image; the bucket anchor comes from ONE min(struct) window; verification is
-inline bit_count(xor). Everything after the decode moves ≤24-byte rows —
-blobs never shuffle.
+Scale design (dedup.simhash_dedup's anchor-verify window,
+dedup._verified_anchor_rows, with denser banding): hashes are one
+mapInPandas decode pass (TOTAL — corrupt blobs become error rows, never
+dead tasks); banding explodes to B key rows per image; the bucket anchor
+comes from ONE min(struct) window; verification is inline bit_count(xor).
+Everything after the decode moves ≤24-byte rows — blobs never shuffle.
 
 dHash is gradient-based, so EVERY flat image (any solid color) hashes to 0:
 without a guard, all-black and all-white would verify at Hamming 0 and
@@ -34,12 +34,12 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.window import Window as W
 
 from wikidataquality_spark.errors import err_str as _err_str
+from wikidataquality_spark.operators.dedup import _verified_anchor_rows
 from wikidataquality_spark.operators.multimodal import decode_ppm
 
 DHASH_GRID_H = 8
@@ -142,70 +142,6 @@ def dhash_features(media: DataFrame) -> DataFrame:
     return _fingerprint_features(media, DHASH_SCHEMA, _dhash_of_blob)
 
 
-def dhash_band_keys(sig_col: str | Column = "dhash") -> Column:
-    """DHASH_BANDS keys of 8 bits each, tagged by band index (same
-    construction as dedup.simhash_band_keys)."""
-    sig = F.col(sig_col) if isinstance(sig_col, str) else sig_col
-    width = 64 // DHASH_BANDS
-    keys = [
-        F.xxhash64(
-            F.lit(i),
-            F.shiftrightunsigned(sig, i * width).bitwiseAND(F.lit((1 << width) - 1)),
-        )
-        for i in range(DHASH_BANDS)
-    ]
-    return F.array(*keys)
-
-
-def _verified_anchor_rows(
-    hashed: DataFrame,
-    id_col: str,
-    hash_col: str,
-    guard_col: str,
-    max_hamming: int,
-    guard_tol: int,
-    bucket_extra: tuple[str, ...] = (),
-) -> DataFrame:
-    """The shared LSH core behind every media-fingerprint marks operator:
-    band-explode → ONE min(struct) anchor window per bucket → inline
-    Hamming + guard verify. Returns verified candidate rows
-    (id_col, *bucket_extra, _anchor_id) — one per (row, bucket) that
-    verified, pre-deduplication. bucket_extra columns join the bucket key
-    (e.g. frame_index, so video frames only ever bucket with the same
-    position in other videos)."""
-    bands = hashed.select(
-        id_col,
-        hash_col,
-        guard_col,
-        *bucket_extra,
-        F.explode(dhash_band_keys(hash_col)).alias("_bandk"),
-    ).withColumn(
-        "_bk",
-        F.xxhash64(F.col("_bandk"), *[F.col(c) for c in bucket_extra])
-        if bucket_extra
-        else F.col("_bandk"),
-    )
-    anchor = F.min(
-        F.struct(
-            F.col(id_col).alias("i"),
-            F.col(hash_col).alias("s"),
-            F.col(guard_col).alias("l"),
-        )
-    ).over(W.partitionBy("_bk"))
-    return (
-        bands.withColumn("_anchor", anchor)
-        .filter(F.col(id_col) != F.col("_anchor")["i"])
-        .filter(
-            (
-                F.bit_count(F.col(hash_col).bitwiseXOR(F.col("_anchor")["s"]))
-                <= max_hamming
-            )
-            & (F.abs(F.col(guard_col) - F.col("_anchor")["l"]) <= guard_tol)
-        )
-        .select(id_col, *bucket_extra, F.col("_anchor")["i"].alias("_anchor_id"))
-    )
-
-
 def image_neardup_marks(
     features: DataFrame,
     id_col: str = "media_id",
@@ -219,9 +155,11 @@ def image_neardup_marks(
     exact Hamming + luma distance). neardup_of is the smallest verified
     anchor id; the anchor itself (and every error/hashless row) is never
     flagged, so at least one copy always survives."""
-    hashed = features.filter(F.col("dhash").isNotNull())
     flagged = (
-        _verified_anchor_rows(hashed, id_col, "dhash", "grid_luma", max_hamming, luma_tol)
+        _verified_anchor_rows(
+            features, id_col, "dhash", DHASH_BANDS, max_hamming,
+            [("grid_luma", luma_tol)],
+        )
         .groupBy(id_col)
         .agg(F.min("_anchor_id").alias("neardup_of"))
     )
@@ -294,9 +232,11 @@ def audio_neardup_marks(
 ) -> DataFrame:
     """(is_audio_neardup, neardup_of) over audio_fingerprints output — the
     audio twin of image_neardup_marks, same anchor semantics and plan."""
-    hashed = features.filter(F.col("afp").isNotNull())
     flagged = (
-        _verified_anchor_rows(hashed, id_col, "afp", "log_rms", max_hamming, guard_tol)
+        _verified_anchor_rows(
+            features, id_col, "afp", DHASH_BANDS, max_hamming,
+            [("log_rms", guard_tol)],
+        )
         .groupBy(id_col)
         .agg(F.min("_anchor_id").alias("neardup_of"))
     )
@@ -376,7 +316,6 @@ def video_neardup_marks(
     per-(frame_index, band) bucket min — recall bounded by anchor choice,
     precision by exact per-frame verification; ties across several anchor
     videos resolve to the smallest anchor id."""
-    hashed = frame_features.filter(F.col("dhash").isNotNull())
     # totals over ALL videos present in the features (count(dhash) skips
     # NULLs): an all-corrupt video keeps a row with total_frames 0 and
     # is_video_neardup false instead of vanishing — the same totality
@@ -386,8 +325,8 @@ def video_neardup_marks(
     )
     pair_frames = (
         _verified_anchor_rows(
-            hashed, id_col, "dhash", "grid_luma", max_hamming, luma_tol,
-            bucket_extra=("frame_index",),
+            frame_features, id_col, "dhash", DHASH_BANDS, max_hamming,
+            [("grid_luma", luma_tol)], bucket_extra=("frame_index",),
         )
         # a frame can verify against the same anchor via several bands —
         # count each (video, anchor, frame position) once

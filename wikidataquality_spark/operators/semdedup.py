@@ -67,6 +67,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from wikidataquality_spark.operators.barrier import barrier
+from wikidataquality_spark.operators.dedup import _pair_payloads
 from wikidataquality_spark.operators.simsearch import (
     _cell_scores,
     dot,
@@ -460,9 +461,9 @@ def semdedup_marks(
         screen = (
             F.col("_pc0").isNull() | F.col("_npc0").isNull() | (sdc >= F.lit(cut))
         )
-        # the quadratic screen runs ONCE: the shortlist feeds four
-        # downstream consumers (both ver_ids arms, both vsigs broadcast
-        # subtrees, the dropped join), and without a hard boundary each
+        # the quadratic screen runs ONCE: the shortlist feeds three
+        # downstream consumers (both arms of the re-fetch's id union and its
+        # pair join), and without a hard boundary each
         # would replay the |cell|² candidate join + screen — measured 69 s
         # vs ~3 s at sf0.1 (r05 session). barrier() materializes the
         # candidate-scale pair list eagerly (reliable checkpoint on a real
@@ -470,47 +471,23 @@ def semdedup_marks(
         shortlist = barrier(
             candidates.filter(priority).filter(screen).select(id_col, "_nid")
         )
-        # exact verify on the shortlist only: candidate ids broadcast into a
-        # semi join against the embeddings SCAN (point re-read of the vector
-        # column — it never enters an exchange), then both pair sides join
-        # the (small) candidate-vector frame broadcast
-        ver_ids = (
-            shortlist.select(id_col)
-            .unionByName(shortlist.select(F.col("_nid").alias(id_col)))
-            .distinct()
-        )
-        vv = (
-            _valid_vectors(embeddings, vec_col, dim)
-            .join(F.broadcast(ver_ids), id_col, "left_semi")
-            .select(
-                F.col(id_col), F.col(vec_col), l2_norm(F.col(vec_col)).alias("_vnrm")
-            )
-        )
-        exact_cos = dot(F.col("_nvec"), F.col("_avec")) / (
-            F.col("_nnrm") * F.col("_anrm")
-        )
+        # exact verify on the shortlist only (dedup._pair_payloads): the
+        # shortlist's ids point-re-read the embeddings SCAN through a
+        # broadcast semi join — the vector column never enters an exchange
+        # — and both pair sides join the one broadcast candidate-vector
+        # frame. Operand order is the all-pairs arm's: neighbor first.
         losers = (
-            shortlist.join(
-                F.broadcast(
-                    vv.select(
-                        F.col(id_col),
-                        F.col(vec_col).alias("_avec"),
-                        F.col("_vnrm").alias("_anrm"),
-                    )
-                ),
+            _pair_payloads(
+                shortlist,
+                _valid_vectors(embeddings, vec_col, dim),
                 id_col,
-            )
-            .join(
-                F.broadcast(
-                    vv.select(
-                        F.col(id_col).alias("_nid"),
-                        F.col(vec_col).alias("_nvec"),
-                        F.col("_vnrm").alias("_nnrm"),
-                    )
-                ),
                 "_nid",
+                {"vec": F.col(vec_col), "nrm": l2_norm(F.col(vec_col))},
             )
-            .filter(exact_cos >= threshold)
+            .filter(
+                dot(F.col("_bvec"), F.col("_avec")) / (F.col("_bnrm") * F.col("_anrm"))
+                >= threshold
+            )
             .select(F.col(id_col).alias("_dup_id"))
             .distinct()
         )
