@@ -517,10 +517,13 @@ def main() -> int:
             "per code+data version, so a regression shows as an exact delta "
             "no matter the host window. `row expansion` is shuffled rows "
             "per input row (banding ops expand by DESIGN — 16 band rows/doc "
-            "for MinHash); `row width` is avg shuffled bytes/row — the "
-            "narrow-shuffle contract (doc bodies and blobs never enter an "
-            "exchange) shows as ~12-25 B rows; hundreds of bytes means a "
-            "fat column leaked into an exchange.\n\n"
+            "for MinHash); `row width` is avg shuffle write bytes/row as "
+            "written, i.e. compressed with the session codec "
+            f"(`spark.io.compression.codec={rec['codec']}`), so a "
+            "codec change moves every width — the narrow-shuffle contract "
+            "(doc bodies and blobs never enter an exchange) shows as ~10-25 B "
+            "rows; hundreds of bytes means a fat column leaked into an "
+            "exchange.\n\n"
             "| query | input rows | shuffled rows | row expansion | "
             "shuffle MB | row width B |\n"
             "| --- | --- | --- | --- | --- | --- |\n" + "\n".join(rows) + "\n\n"

@@ -47,14 +47,11 @@ from pyspark.sql import functions as F
 
 cpus = int(sys.argv[1])
 path = sys.argv[2]
-master = sys.argv[3] if len(sys.argv) > 3 and sys.argv[3] else None
-extra = json.loads(sys.argv[4]) if len(sys.argv) > 4 else {{}}
 # 4MB split target so the 64-file corpus scans as ≥64 parallel tasks in both
 # configs (identical physical work; only thread count varies).
 conf = {{"spark.sql.files.maxPartitionBytes": str(4 * 1024 * 1024)}}
-conf.update(extra)
 spark = get_spark(cpus=cpus, shuffle_partitions=32, app_name=f"scal{{cpus}}",
-                  master=master, extra_conf=conf)
+                  extra_conf=conf)
 from wikidataquality_spark.deploy import ensure_shipped
 ensure_shipped(spark)  # the --py-files story: workers import by reference
 pages = spark.read.parquet(path)
@@ -72,12 +69,7 @@ def one_run():
     # full DAG from the scan; then force a full GC (untimed)
     # so heap state from run k never bleeds into run k+1's timing — resident
     # JVMs otherwise accumulate old-gen churn across runs. System.gc() only
-    # reaches THIS (driver) JVM: complete coverage under local[N] (driver and
-    # executors share one JVM — the graded protocol), but under cluster_bench's
-    # local-cluster master the separate executor JVMs rely on their own GC;
-    # that experiment's runs are sized so old-gen churn stays far below the
-    # 16 GB executor heaps, and its numbers are recorded as evidence, not
-    # graded (BASELINE.md local-cluster section).
+    # reaches THIS (driver) JVM, which under local[N] is every executor too.
     spark.catalog.clearCache()
     spark._jvm.System.gc()
     return dt, kept
@@ -111,25 +103,13 @@ class ResidentWorker:
 
     One warm-up run happens at spawn (untimed); after that every `run()` is a
     steady-state execution of the identical job. The parent must never have
-    two workers executing at once — `run()` blocks until the result line.
+    two workers executing at once — `run()` blocks until the result line."""
 
-    `master`/`extra_conf` parameterize the same worker script for
-    non-local[N] configs (tools/cluster_bench.py passes a local-cluster
-    master + executor memory); `label` names the config in errors."""
-
-    def __init__(
-        self,
-        cpus: int,
-        path: str,
-        master: str | None = None,
-        extra_conf: dict | None = None,
-        label: str | None = None,
-    ):
+    def __init__(self, cpus: int, path: str):
         script = WORKER.format(repo=REPO)
-        self.label = label or (master or f"local[{cpus}]")
+        self.label = f"local[{cpus}]"
         self.proc = subprocess.Popen(
-            [sys.executable, "-c", script, str(cpus), path,
-             master or "", json.dumps(extra_conf or {})],
+            [sys.executable, "-c", script, str(cpus), path],
             stdin=subprocess.PIPE,
             stdout=subprocess.PIPE,
             stderr=subprocess.DEVNULL,
@@ -295,7 +275,7 @@ def pair_ceilings(n: int) -> dict:
 def replace_section(content: str, marker: str, section: str) -> str:
     """Replace the markdown section starting at `marker` (through the next
     '## ' heading) with `section`, preserving anything after it — so
-    scaling_bench and cluster_bench can each own a BASELINE.md section
+    scaling_bench and skew_bench can each own a BASELINE.md section
     without truncating the other's."""
     if marker in content:
         head, rest = content.split(marker, 1)
@@ -337,8 +317,7 @@ def gen_corpus(n_pages: int) -> str:
 
 
 def run_pair_rounds(make_low, make_high, rounds: int) -> dict:
-    """The alternating-resident-rounds core shared by this tool and
-    tools/cluster_bench.py (same protocol, different worker construction):
+    """The alternating-resident-rounds core of measure_pair:
     spawn low then high, run back-to-back timed rounds with the order
     flipped each round, and return medians + per-round ratios. Workers are
     closed even when the HIGH spawn fails (a warmed multi-GB resident JVM

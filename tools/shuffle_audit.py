@@ -8,14 +8,16 @@ metrics. Bytes are deterministic per code+data version (unlike seconds on
 this drifting host), so regressions show as exact deltas — a query whose
 shuffle write jumps from 3 MB to 300 MB broke its narrow-projection
 contract no matter what the wall clock says. Two headline metrics, both
-compression-free and host-free:
+host-free:
   - rows_shuffled_per_input_row — row expansion through every exchange of
     the DAG (banding ops expand by design: 16 band rows/doc for MinHash;
     what matters is the factor is the DESIGNED one, not N²);
-  - avg_shuffled_row_bytes — the width of what actually moved. The narrow-
-    shuffle contract ("doc bodies/blobs never shuffle") is ~12-25 B rows;
-    a width jump to hundreds of bytes means a fat column leaked into an
-    exchange.
+  - avg_shuffled_row_bytes — the width of what actually moved: shuffle
+    write bytes per shuffled row, as written, i.e. COMPRESSED with the
+    session's spark.io.compression.codec (recorded as `codec` in the JSON;
+    a codec change moves every width). The narrow-shuffle contract ("doc
+    bodies/blobs never shuffle") is ~10-25 B rows; a width jump to
+    hundreds of bytes means a fat column leaked into an exchange.
 
 Protocol: each headline query runs once UNGROUPED (warm-up: parquet
 footers, python workers, train-once artifact caches) and once inside its
@@ -52,28 +54,30 @@ _STAGE_FIELDS = {
 }
 
 
-def group_metrics(spark, group: str) -> dict[str, int]:
-    """Task metrics summed over the stages of every job in `group`, read
-    from the live status store after the listener bus drains. A stage
-    shared by two jobs is counted once; skipped stages report zeros."""
+def group_stages(spark, group: str) -> list:
+    """The last attempt (status-store StageData) of every stage of every job
+    in `group`, each stage once, read from the live status store after the
+    listener bus drains. Skipped stages report zeros."""
     sc = spark.sparkContext._jsc.sc()
     sc.listenerBus().waitUntilEmpty()
     store = sc.statusStore()
     jobs = store.jobsList(None)
-    out = dict.fromkeys(_STAGE_FIELDS, 0)
     seen: set[int] = set()
     for i in range(jobs.size()):
         job = jobs.apply(i)
         g = job.jobGroup()
-        if not g.isDefined() or g.get() != group:
-            continue
-        for sid in (int(s) for s in job.stageIds().mkString(",").split(",") if s):
-            if sid in seen:
-                continue
-            seen.add(sid)
-            stage = store.lastStageAttempt(sid)
-            for k, getter in _STAGE_FIELDS.items():
-                out[k] += int(getattr(stage, getter)())
+        if g.isDefined() and g.get() == group:
+            seen.update(int(s) for s in job.stageIds().mkString(",").split(",") if s)
+    return [store.lastStageAttempt(sid) for sid in sorted(seen)]
+
+
+def group_metrics(spark, group: str) -> dict[str, int]:
+    """Task metrics summed over the stages of `group` (group_stages): a
+    stage shared by two jobs is counted once."""
+    out = dict.fromkeys(_STAGE_FIELDS, 0)
+    for stage in group_stages(spark, group):
+        for k, getter in _STAGE_FIELDS.items():
+            out[k] += int(getattr(stage, getter)())
     return out
 
 
@@ -113,10 +117,11 @@ def main() -> int:
     from wikidataquality_spark.session import get_spark
 
     spark = get_spark(app_name="shuffle_audit")
+    codec = spark.sparkContext.getConf().get("spark.io.compression.codec", "lz4")
     agg = run_queries(spark, sf_dir)
     spark.stop()
 
-    out = {"sf_dir": sf_dir, "queries": {}}
+    out = {"sf_dir": sf_dir, "codec": codec, "queries": {}}
     for name, b in agg.items():
         if not b["n_tasks"]:
             out["queries"][name] = {"error": "no tasks attributed"}
@@ -128,9 +133,9 @@ def main() -> int:
             "shuffle_write_mb": round(swb / 1e6, 3),
             "shuffle_read_mb": round(b["shuffle_read_bytes"] / 1e6, 3),
             "shuffle_write_records": swr,
-            # the two scale metrics (compression-free, host-free):
-            # row expansion through every exchange of the DAG, and the
-            # average width of what actually moved (narrow-shuffle proof)
+            # the two scale metrics (host-free): row expansion through
+            # every exchange of the DAG, and the average compressed width
+            # of what actually moved (narrow-shuffle proof)
             "rows_shuffled_per_input_row": round(swr / b["input_records"], 3)
             if b["input_records"]
             else None,

@@ -334,8 +334,7 @@ def read_warc(spark: SparkSession, path: str, glob: str | None = "*.warc*") -> D
     spark.sql.files.maxPartitionBytes per input partition. Production
     segments (~1 GB) each exceed the 128 MB default and get their own
     task; a corpus of miniature segments needs the knob lowered to the
-    segment size or the parse runs nearly serially (tools/ingest_bench.py
-    measures with the knob sized for exactly this reason)."""
+    segment size or the parse runs nearly serially."""
     from wikidataquality_spark.io.formats import read_binary_files
 
     files = read_binary_files(spark, path, glob)

@@ -16,10 +16,14 @@ Scale notes (10^12 docs / 1000 executors):
     dedup keys are projected before the shuffle, bodies rejoin via the kept
     urls (left_semi), which AQE plans as a broadcast when the survivor set is
     partition-local.
-  - MinHash banding emits B rows per doc (B band keys); band-bucket skew is
-    bounded because identical signatures collapse into the same bucket — the
-    pathological case (boilerplate cluster of millions) is exactly the case
-    AQE skew-split + the salted groupBy below are for.
+  - MinHash banding emits B rows per doc (B band keys). Nothing bounds
+    the skew of the dedup windows yet: every survivor choice (exact
+    `(_h, _h2)`, `_band_key`, recrawl canonical url) is a window, AQE splits
+    skewed joins but not windows, and identical signatures land in the same
+    band bucket. So the largest task grows with the largest duplicate
+    cluster (a boilerplate page crawled millions of times is one task), not
+    with N/P. `repartition_by_host_salted` salts hot hosts for host-keyed
+    repartitions only; the dedup windows do not use it (ROADMAP item 6).
 """
 
 from __future__ import annotations
@@ -384,11 +388,13 @@ def minhash_dedup(
     J 0.3–0.5 admitting ~2.5% of pairs — at 10¹² docs that is wrongly
     deleted documents. SimHash (simhash_dedup) and the media hashes already
     verify inline; this closes the one dedup family that marked on bucket
-    collision alone. The non-destructive flag variant (dup_marks) keeps
-    collision semantics: its flags feed the rule layer (scrub-not-drop,
-    recoverable) and its incremental state rows (STATE_BAND_KIND) carry
-    band keys only — verified flags against state would need a
-    signature-bearing state kind, the documented v3 upgrade path.
+    collision alone. The flag variant (dup_marks) keeps collision
+    semantics, and its flags DROP too: validate()'s HARD rule
+    `unique_value.near_dup` and curate()'s `_dup_drop` delete every flagged
+    row, unverified (ROADMAP item 3). Its incremental state rows
+    (STATE_BAND_KIND) carry band keys only — verified flags against state
+    would need a signature-bearing state kind, the documented v3 upgrade
+    path.
 
     Plan shape: one pandas-UDF projection (signatures), the band window
     shared with dup_marks (_band_candidates) — ONE narrow exchange, single
@@ -842,7 +848,9 @@ def url_dup_marks(
     with coarse timestamps — get an ARBITRARY survivor, the same caveat
     Spark's dropDuplicates carries (streaming/windows.py spells it out):
     if tied rows can differ in payload, order on a finer capture id instead.
-    Adds `url_canonical` and boolean `url_dup`; scrub-not-drop like dup_marks.
+    Adds `url_canonical` and boolean `url_dup` and keeps every row; what a
+    flag costs is the caller's rule (dup_marks' flags, by contrast, drop
+    through validate()'s HARD unique_value rules).
 
     Same shuffle discipline as exact_dedup: the window (_recrawl_window)
     partitions on a 16-byte hash key, and NULL urls are exempted BEFORE the

@@ -61,10 +61,10 @@ def pii_hit_count(text: str | Column = "text") -> Column:
     exactly one per replaced span. The r04 sequential formulation (count on
     progressively-scrubbed text) had identical semantics but re-ran every
     pattern's regex a second time over partially-scrubbed text — measured
-    2.04× the pre-fix cost (tools/ab_bench.py); this one costs the scrub's
-    own single regex pass per pattern plus literal \\Q…\\E splits (1.19×),
-    and tools/ab_bench.py verified row-identical counts on the sf0.1
-    corpus. Equivalence rests on two invariants of the frozen pattern set:
+    2.04× the pre-fix cost; this one costs the scrub's own single regex
+    pass per pattern plus literal \\Q…\\E splits (1.19×), with
+    row-identical counts on the sf0.1 corpus (BASELINE.md §r04-regression
+    A/B). Equivalence rests on two invariants of the frozen pattern set:
       - idempotence: no marker (or part of one) matches any pattern, so
         pre-existing markers in the input survive scrubbing and cancel in
         the subtraction (property-tested in tests/test_properties.py;

@@ -11,13 +11,17 @@ import os
 
 from pyspark.sql import SparkSession
 
-# Defaults chosen for the sandbox (single JVM, 32 threads, 128 GiB).
-# On a real cluster the same spark.sql.* settings apply; memory knobs
-# move to executor-level flags in spark-submit.
+# Confs every session gets, whatever the host. The host-dependent sizing
+# lives in get_spark: local[cpus] threads, shuffle partitions from the core
+# count, and the JVM heap from the host's memory (_default_driver_mem).
+# On a real cluster the same spark.* settings apply; memory knobs move to
+# executor-level flags in spark-submit.
 _DEFAULTS = {
     # AQE: runtime coalescing of shuffle partitions + skew-join splitting.
-    # BASELINE.json:6 demands explicit skew handling; AQE is the safety net
-    # on top of our manual hot-host salting (operators/dedup.py).
+    # BASELINE.json:6 demands explicit skew handling; AQE splits skewed
+    # joins on top of the manual hot-host salting
+    # (operators/dedup.repartition_by_host_salted). It does not split the
+    # dedup windows (ROADMAP item 6).
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
@@ -31,6 +35,28 @@ _DEFAULTS = {
     "spark.ui.enabled": "false",
     "spark.ui.showConsoleProgress": "false",
     "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
+    # zstd (level 1, Spark's default level) for every shuffle block, shuffle
+    # spill and broadcast; Spark's default codec is lz4. Parquet output has
+    # its own codec, so output bytes do not change. Shuffle write per
+    # exchange, steady-state call 2 of one perfbench session (seed 7,
+    # 4 vCPU, local[4]), from the status store:
+    #
+    #   exchange                              rows      lz4          zstd
+    #   crawl-warc recrawl rank() window      4,620   193,834 B   158,473 B
+    #   crawl-warc exact window (_h, _h2)     4,200   139,424 B   109,582 B
+    #   crawl-warc band window (16 rows/doc) 67,200 1,364,489 B   938,585 B
+    #   crawl-warc flag groupBy(id)           5,727    85,792 B    42,260 B
+    #   crawl-warc metrics tail                 337    25,420 B    17,515 B
+    #   crawl-warc total                              391.5 B/doc 274.1 B/doc
+    #   curate-funnel band window           128,000 1,810,218 B 1,245,722 B
+    #   curate-funnel total                           288.3 B/doc 197.9 B/doc
+    #
+    # docs/s stays within the run-to-run spread. zstd's native stream state
+    # does not show in peak RSS: the JVM's RSS beyond its committed
+    # heap is the same under both codecs. This is a SparkContext-level conf:
+    # like the master and the heap size, get_spark cannot apply it to a
+    # session that is already running.
+    "spark.io.compression.codec": "zstd",
     # saveAsTable target for bucketed tables (io/bucketed.py) — keep the
     # metastore/warehouse out of the repo tree, per-uid so two local users'
     # warehouses (and derby metastores) never collide on one shared path.
@@ -55,17 +81,12 @@ def get_spark(
     shuffle_partitions: int | None = None,
     app_name: str = "wikidataquality_spark",
     extra_conf: dict[str, str] | None = None,
-    master: str | None = None,
 ) -> SparkSession:
     """Build (or fetch) a SparkSession.
 
     cpus: thread count for local[N]; defaults to $SPARK_GRAFT_CPUS or all cores.
     shuffle_partitions: defaults to max(cpus, 32) — sized so sf0.1 partitions
     fit comfortably in memory while still exercising multi-partition plans.
-    master: overrides the local[cpus] master — e.g. "local-cluster[4,8,16384]"
-    for the multi-executor-JVM scaling experiment (tools/cluster_bench.py),
-    or a real cluster URL under spark-submit; cpus then only sizes the
-    shuffle-partition default.
     """
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
@@ -80,7 +101,8 @@ def get_spark(
     # the hard way: a pipeline CLI invoked in-process bumped the test
     # session's shuffle.partitions 8→32, changing every later plan). Only
     # confs the caller EXPLICITLY requested are applied to an existing
-    # session; masters/memory are immutable post-start anyway.
+    # session; masters, memory and the compression codec are immutable
+    # post-start anyway.
     existing = SparkSession.getActiveSession()
     if existing is not None:
         if explicit_shuffle:
@@ -90,7 +112,7 @@ def get_spark(
         return existing
 
     builder = (
-        SparkSession.builder.master(master or f"local[{cpus}]")
+        SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config(
