@@ -72,6 +72,20 @@ def test_violated_rules_stable(result_pdf, golden_pdf):
     assert (a == b).all()
 
 
+def test_every_enrich_field_is_read_and_reaches_the_output(validated):
+    """Each fused enrich output has a production reader — a PIPELINE_RULES
+    column, a results() column, or a dedup/scrub input — so the UDF computes
+    nothing the DAG drops; and validate() carries every one of them."""
+    from wikidataquality_spark.operators.enrich import ENRICH_TYPE
+    from wikidataquality_spark.pipeline import PIPELINE_RULES
+
+    fields = set(ENRICH_TYPE.fieldNames())
+    read = {r.param("column") for r in PIPELINE_RULES}
+    read |= set(results(validated).columns) | {"text_extracted", "minhash_sig"}
+    assert not fields - read, sorted(fields - read)
+    assert not fields - set(validated.columns), sorted(fields - set(validated.columns))
+
+
 def test_extract_is_byte_identical_inverse(validated):
     """extract(html) must reproduce `text` exactly (datagen renders html from
     text; the extractor must invert it byte-for-byte)."""

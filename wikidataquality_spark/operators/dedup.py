@@ -5,17 +5,26 @@ UniqueValueChecker.php:~30-80) — the one reference rule that is cross-row.
 The reference answered it with per-value SQL point lookups; at 10^12 docs the
 Spark-native answer is a shuffle:
 
-  exact:   hash(text) → window(row_number) → keep first        (1 shuffle)
-  near:    MinHash signatures → LSH band buckets → min-url      (1 UDF + 1 shuffle)
+  exact_dedup:   two text hashes → window(row_number) → keep first
+                 (1 corpus shuffle)
+  minhash_dedup: MinHash UDF → band window → candidate pairs re-fetched
+                 through a broadcast left_semi (_pair_payloads) → verify →
+                 left_anti drop of the verified ids (planned as a
+                 sort-merge join, so it shuffles the input rows unless AQE
+                 broadcasts the dropped-id side)
+  dup_marks:     exact window + band window + one flag groupBy(id); the
+                 flag rows rejoin through a broadcast (3 shuffles)
 
 Survivor choice is a deterministic TOTAL order (min url, SURVEY §7 hard-#3),
 so results are invariant under repartitioning — verified by property test.
 
 Scale notes (10^12 docs / 1000 executors):
-  - The exact-dedup shuffle moves (hash8B, url) pairs, never document bodies:
-    dedup keys are projected before the shuffle, bodies rejoin via the kept
-    urls (left_semi), which AQE plans as a broadcast when the survivor set is
-    partition-local.
+  - dup_marks (what validate() and curate() run) never shuffles a document
+    body: its three exchanges read the narrow keyed projection (_keyed: id,
+    the 16-byte hash pair, the signature), and only the sparse flag rows
+    come back, through a broadcast hash join. exact_dedup DROPS rows, so its
+    window partitions the whole rows, bodies included; a caller that only
+    needs the decision should use dup_marks.
   - MinHash banding emits B rows per doc (B band keys). Nothing bounds
     the skew of the dedup windows yet: every survivor choice (exact
     `(_h, _h2)`, `_band_key`, recrawl canonical url) is a window, AQE splits

@@ -1,5 +1,5 @@
-"""Fused model+stats stage: extract, langid, perplexity, and every per-doc
-heuristic statistic in ONE pandas UDF pass.
+"""Fused model+stats stage: extract, langid, perplexity, MinHash, and the
+per-doc heuristic statistics validate()'s rules read, in ONE pandas UDF pass.
 
 Why fused (measured on local[32], 100k docs):
   - each extra ArrowEvalPython node = its own Python-worker pool + a JVM↔Py
@@ -12,22 +12,24 @@ Why fused (measured on local[32], 100k docs):
 The standalone Column-expression operators (operators/heuristics.py) remain
 the relational/query surface (they are what the DuckDB oracle checks, and the
 right choice when stats feed further Catalyst logic); the pipeline hot path
-uses this fused stage. The two surfaces INTENTIONALLY tokenize differently
-and their stats diverge on real text — each is internally consistent with
-its own oracle (DuckDB resp. golden fixtures + planted-defect tests), and
-neither is a drop-in replica of the other:
-  - fused stats run over tokenize()'s NORMALIZED tokens — lowercased
-    (stopword_ratio counts "The"; the quality-filter semantics Gopher/C4
-    use), CJK split to char unigrams (a zh line gets a real word count and
-    mean_word_len≈1 instead of one giant 'word'), Python unicode whitespace
-    (NBSP splits);
-  - the Column surface splits raw text on Java ASCII \\s+, case-sensitive —
-    the shape a SQL user writes and DuckDB can mirror exactly;
+uses this fused stage. The fused stage emits only the stats PIPELINE_RULES
+reads (n_chars, mean_word_len, symbol_ratio, distinct_line_ratio, and the
+blockword/email flags); the Column surface's other five (n_words,
+stopword_ratio, distinct_word_ratio, dup_line_char_ratio, alpha_ratio) have
+no fused twin. The two surfaces INTENTIONALLY tokenize differently and their
+stats diverge on real text — each is internally consistent with its own
+oracle (DuckDB resp. golden fixtures + planted-defect tests), and neither is
+a drop-in replica of the other:
+  - mean_word_len: fused runs over tokenize()'s NORMALIZED tokens — CJK
+    split to char unigrams (a zh line gets mean_word_len≈1 instead of one
+    giant 'word'), Python unicode whitespace (NBSP splits); the Column
+    surface splits raw text on Java ASCII \\s+ — the shape a SQL user
+    writes and DuckDB can mirror exactly;
   - symbol_ratio: fused strips Python [^\\w\\s] (underscore is a word char),
     Column strips Java [\\p{L}\\p{N}\\s] (underscore counts as a symbol);
   - empty/whitespace-only text: Column split(trim(''), '\\s+') yields ['']
-    (n_words=1, ratios defined) while tokenize() yields zero tokens
-    (n_words=0, NULL ratios); both surfaces drop such docs via doc-length.
+    (mean_word_len 0.0) while tokenize() yields zero tokens (NULL
+    mean_word_len); both surfaces drop such docs via doc-length.
 
 Parity: this one operator implements SURVEY §2B stages Extract/LangID/
 Perplexity/Heuristics with the once-per-worker model lifecycle of
@@ -46,7 +48,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from wikidataquality_spark.operators.extract import extract_text_series
-from wikidataquality_spark.operators.heuristics import STOPWORDS
 from wikidataquality_spark.operators.langid import _CJK_RE, _load_model
 from wikidataquality_spark.operators.perplexity import _load_models
 from wikidataquality_spark.operators.scrub import PII_PATTERNS, TOXICITY_PATTERNS
@@ -59,14 +60,9 @@ ENRICH_TYPE = T.StructType(
         T.StructField("lang_conf", T.DoubleType(), True),
         T.StructField("perplexity", T.DoubleType(), True),
         T.StructField("n_chars_stat", T.LongType(), True),
-        T.StructField("n_words_stat", T.LongType(), True),
         T.StructField("mean_word_len_stat", T.DoubleType(), True),
-        T.StructField("stopword_ratio_stat", T.DoubleType(), True),
         T.StructField("symbol_ratio_stat", T.DoubleType(), True),
-        T.StructField("distinct_word_ratio_stat", T.DoubleType(), True),
         T.StructField("distinct_line_ratio_stat", T.DoubleType(), True),
-        T.StructField("dup_line_char_ratio_stat", T.DoubleType(), True),
-        T.StructField("alpha_ratio_stat", T.DoubleType(), True),
         T.StructField("has_blockword", T.BooleanType(), True),
         T.StructField("has_pii_email", T.BooleanType(), True),
         # MinHash signature computed in the SAME python pass: the dedup stage
@@ -81,7 +77,6 @@ ENRICH_TYPE = T.StructType(
 )
 
 _SYMBOL_RE = re.compile(r"[^\w\s]", re.UNICODE)  # non-letter/digit/underscore/ws
-_ALPHA_RE = re.compile(r"[A-Za-z]")
 # non-capturing group: identical matches, and pandas str.contains stays quiet
 # compiled from the ONE frozen pattern source (operators/scrub.py) so the
 # has_blockword/has_pii_email rule flags can never drift from what
@@ -96,30 +91,27 @@ _PII_EMAIL_RE = re.compile(dict((n, p) for n, p, _ in PII_PATTERNS)["email"])
 
 
 class _FusedScorer:
-    """One vocab index + lookup tables = langid, perplexity, and stopword
-    ratio from a single get_indexer pass over the exploded token frame."""
+    """One vocab index + lookup tables = langid and perplexity from a single
+    get_indexer pass over the exploded token frame, plus the per-doc stats
+    PIPELINE_RULES reads."""
 
     def __init__(self) -> None:
         self.lid = _load_model()
         self.lm = _load_models()
-        vocab = sorted(set(self.lid.vocab_ix) | set(self.lm.vocab_ix) | set(STOPWORDS))
+        vocab = sorted(set(self.lid.vocab_ix) | set(self.lm.vocab_ix))
         self.ix = pd.Index(vocab)
         n = len(vocab)
         self.langs = self.lid.langs
         self.membership = np.zeros((n + 1, len(self.langs)))
         # joint row -> LM token id (LM's V = <unk>, also the OOV sentinel row)
         self.lm_id = np.full(n + 1, self.lm.V, dtype=np.int64)
-        self.is_stopword = np.zeros(n + 1)
         lid_pos = self.lid.vocab_ix.get_indexer(vocab)
         lm_pos = self.lm.vocab_ix.get_indexer(vocab)
-        stop = set(STOPWORDS)
-        for i, w in enumerate(vocab):
+        for i in range(n):
             if lid_pos[i] >= 0:
                 self.membership[i] = self.lid.membership[lid_pos[i]]
             if lm_pos[i] >= 0:
                 self.lm_id[i] = lm_pos[i]
-            if w in stop:
-                self.is_stopword[i] = 1.0
 
     def score(self, texts: pd.Series) -> pd.DataFrame:
         n_rows = len(texts)
@@ -130,9 +122,9 @@ class _FusedScorer:
         tok = tokenize(texts)
         codes = tok.codes
         # one factorize over the exploded frame; every per-token lookup
-        # (vocab index, word length, distinct-word ids) then runs over the
-        # DISTINCT tokens only and gathers back — Zipf'd text makes the
-        # distinct set 5-20× smaller than the token stream
+        # (vocab index, word length) then runs over the DISTINCT tokens only
+        # and gathers back — Zipf'd text makes the distinct set 5-20×
+        # smaller than the token stream
         tcodes, uniques = pd.factorize(tok.exploded, sort=False)
         idx_u = self.ix.get_indexer(uniques)
         idx_u[idx_u < 0] = len(self.ix)  # OOV sentinel row
@@ -167,23 +159,10 @@ class _FusedScorer:
         uniq_lens = np.fromiter((len(w) for w in uniques), dtype=np.int64, count=len(uniques))
         word_lens = uniq_lens[tcodes] if len(tcodes) else np.empty(0, dtype=np.int64)
         mwl = np.where(empty, np.nan, np.bincount(codes, weights=word_lens, minlength=n_rows) / safe_counts)
-        swr = np.where(empty, np.nan, np.bincount(codes, weights=self.is_stopword[idx], minlength=n_rows) / safe_counts)
-
-        # distinct words per doc: unique (doc, token-id) pairs over the same
-        # factorized codes
-        pair = codes.astype(np.int64) * (tcodes.max() + 2 if len(tcodes) else 1) + tcodes
-        uniq_docs = np.bincount(
-            codes[np.unique(pair, return_index=True)[1]], minlength=n_rows
-        )
-        dwr = np.where(empty, np.nan, uniq_docs / safe_counts)
 
         n_chars = filled.str.len().to_numpy().astype(np.int64)
-        safe_chars = np.maximum(n_chars, 1)
         sym = filled.str.count(_SYMBOL_RE).to_numpy()
-        alpha = filled.str.count(_ALPHA_RE).to_numpy()
-        zero_chars = n_chars == 0
-        symbol_ratio = np.where(zero_chars, np.nan, sym / safe_chars)
-        alpha_ratio = np.where(zero_chars, np.nan, alpha / safe_chars)
+        symbol_ratio = np.where(n_chars == 0, np.nan, sym / np.maximum(n_chars, 1))
 
         # distinct-line ratio: explode lines once
         lines = filled.str.split("\n")
@@ -193,28 +172,10 @@ class _FusedScorer:
         line_vals = line_vals[line_vals.notna()]
         lcodes_tok, _ = pd.factorize(line_vals, sort=False)
         lpair = line_codes.astype(np.int64) * (lcodes_tok.max() + 2 if len(lcodes_tok) else 1) + lcodes_tok
-        first_line_idx = np.unique(lpair, return_index=True)[1]
-        uniq_lines = np.bincount(line_codes[first_line_idx], minlength=n_rows)
+        uniq_lines = np.bincount(
+            line_codes[np.unique(lpair, return_index=True)[1]], minlength=n_rows
+        )
         dlr = np.where(line_lens == 0, np.nan, uniq_lines / np.maximum(line_lens, 1))
-        # duplicate-line CHAR fraction (heuristics.dup_line_char_ratio):
-        # (total line chars − first-occurrence line chars) / total. bincount
-        # float64 weight sums are exact for integer lens < 2^53, so the value
-        # is bit-identical to the Column version's long-sum-then-divide.
-        line_char_lens = (
-            line_vals.str.len().to_numpy().astype(np.int64)
-            if len(line_vals)
-            else np.empty(0, dtype=np.int64)
-        )
-        total_lchars = np.bincount(line_codes, weights=line_char_lens, minlength=n_rows)
-        uniq_lchars = np.bincount(
-            line_codes[first_line_idx], weights=line_char_lens[first_line_idx],
-            minlength=n_rows,
-        )
-        dlcr = np.where(
-            total_lchars == 0,
-            np.nan,
-            (total_lchars - uniq_lchars) / np.maximum(total_lchars, 1),
-        )
 
         has_block = filled.str.contains(_BLOCKWORD_RE).to_numpy()
         has_pii = filled.str.contains(_PII_EMAIL_RE).to_numpy()
@@ -228,14 +189,9 @@ class _FusedScorer:
                 "lang_conf": _nullable(conf),
                 "perplexity": _nullable(ppl),
                 "n_chars_stat": pd.Series(n_chars, index=texts.index).where(notna, pd.NA).astype("Int64"),
-                "n_words_stat": pd.Series(counts, index=texts.index).where(notna, pd.NA).astype("Int64"),
                 "mean_word_len_stat": _nullable(mwl),
-                "stopword_ratio_stat": _nullable(swr),
                 "symbol_ratio_stat": _nullable(symbol_ratio),
-                "distinct_word_ratio_stat": _nullable(dwr),
                 "distinct_line_ratio_stat": _nullable(dlr),
-                "dup_line_char_ratio_stat": _nullable(dlcr),
-                "alpha_ratio_stat": _nullable(alpha_ratio),
                 "has_blockword": pd.Series(has_block, index=texts.index).where(notna, pd.NA).astype("boolean"),
                 "has_pii_email": pd.Series(has_pii, index=texts.index).where(notna, pd.NA).astype("boolean"),
             }

@@ -10,9 +10,14 @@ BASELINE.json:6/14/15 as:
   dup marks (exact + MinHash) → rule checks → violations array →
   keep/drop + scrubbed text → metrics per partition
 
-Stage order is cost-ordered: pure-SQL heuristics run in the same codegen'd
-projection as the scan; the two pandas-UDF stages (langid, perplexity) share
-one Python-worker pass; the only shuffles are the two dedup aggregations.
+Plan shape: extract, langid, perplexity, the per-doc stats PIPELINE_RULES
+reads, the regex flags and the MinHash signatures all run in ONE fused Arrow
+stage (operators/enrich.py), sealed (cached) right after it. Dedup reads
+only the seal (operators/dedup.dup_marks): the exact window over the two
+text hashes (_h, _h2), the MinHash band window over _band_key, and one
+groupBy(id) that builds both flags — three exchanges, none carrying a
+document body — whose sparse flag rows rejoin the input through a
+broadcast. Rules and scrub are codegen'd projections over that.
 
 Output schema (FIXTURES.md "expected outputs"):
   result(url, warc_ts, lang, lang_pred, lang_conf, perplexity, keep,
@@ -25,7 +30,7 @@ from pyspark.sql import DataFrame
 
 from wikidataquality_spark.operators.barrier import seal
 from wikidataquality_spark.operators.dedup import dup_marks
-from wikidataquality_spark.operators.enrich import enriched
+from wikidataquality_spark.operators.enrich import ENRICH_TYPE, enriched
 from wikidataquality_spark.operators.scrub import scrub_column
 from wikidataquality_spark.rules.builder import apply_rules
 from wikidataquality_spark.rules.model import Rule
@@ -64,8 +69,12 @@ def validate(
     persist_registry: list,
 ) -> DataFrame:
     """Full validation DAG over a pages DataFrame
-    (url, warc_ts, html, text, lang). Returns every input row annotated with
-    stats, model scores, dup flags, violations, keep, scrubbed_text.
+    (url, warc_ts, html, text, lang). Returns every input row, minus html,
+    annotated with every ENRICH_TYPE field (text_extracted; the model scores
+    lang_pred, lang_conf, perplexity; the stats n_chars_stat,
+    mean_word_len_stat, symbol_ratio_stat, distinct_line_ratio_stat; the
+    regex flags has_blockword, has_pii_email; minhash_sig), the dup flags,
+    violations, keep and scrubbed_text.
 
     `normalize`: OPT-IN ftfy-class pre-clean (mojibake repair → NFC →
     control strip) fused into the enrich pass, BEFORE any stat/model/
@@ -84,27 +93,21 @@ def validate(
     appended last; the caller's block releases it once the caller's actions
     are done, so repeated calls in one session (one foreachBatch epoch per
     call) never accumulate cached intermediates."""
-    # Stages 1+2 — fused: extract + langid + perplexity + every heuristic
-    # stat + the regex conditions, all in ONE pandas-UDF pass (one
-    # ArrowEvalPython node; operators/enrich.py documents why fusing beats
-    # chained UDFs and interpreted HOF stats by ~5-10× at batch scale).
+    # Stages 1+2 — fused: extract + langid + perplexity + the heuristic
+    # stats the rules read + the regex conditions + MinHash, all in ONE
+    # pandas-UDF pass (one ArrowEvalPython node; operators/enrich.py
+    # documents why fusing beats chained UDFs and interpreted HOF stats by
+    # ~5-10× at batch scale).
     # Everything expensive lands BEFORE the persist barrier: downstream rule
     # projections (violations array / keep / violated_rules) reference these
     # as plain cached attributes, so Catalyst's projection collapse can
     # inline them repeatedly at zero cost.
-    enrich_cols = [
-        "text_extracted", "lang_pred", "lang_conf", "perplexity",
-        "n_chars_stat", "n_words_stat", "mean_word_len_stat",
-        "stopword_ratio_stat", "symbol_ratio_stat", "distinct_word_ratio_stat",
-        "distinct_line_ratio_stat", "dup_line_char_ratio_stat",
-        "alpha_ratio_stat", "has_blockword", "has_pii_email", "minhash_sig",
-    ]
     # The fat html column goes once text is extracted (column pruning by
     # construction — html must never travel through the dedup shuffles).
     df = pages.withColumn(
         "_enriched", enriched("html", normalize=normalize)
     ).selectExpr(
-        "*", *[f"_enriched.{c} AS {c}" for c in enrich_cols]
+        "*", *[f"_enriched.{c} AS {c}" for c in ENRICH_TYPE.fieldNames()]
     ).drop("_enriched", "html")
     # Sealed (operators/barrier.py): the dedup stage fans out into several
     # consumers (flag branch, broadcast build, rejoin) that would otherwise
