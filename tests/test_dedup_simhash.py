@@ -525,3 +525,72 @@ def test_dup_marks_matches_exact_near_join_reference(spark, batch, prior):
     got = rows(dup_marks(df, state=state), "is_exact_dup", "is_near_dup")
     want = rows(_exact_near_join_reference(df, state), "_e", "_n")
     assert got == want
+
+
+def _map_sides(df) -> dict[str, list[str]]:
+    """Each shuffle Exchange of `df`'s physical plan (before adaptive
+    re-planning), as its one-line description, mapped to its map side: the
+    one-line descriptions of the nodes under it down to, not past, the next
+    Exchange."""
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        plan = plan.initialPlan()
+    out: dict[str, list[str]] = {}
+
+    def walk(node, side):
+        kids = node.children()
+        for i in range(kids.size()):
+            kid = kids.apply(i)
+            line = kid.simpleString(100)
+            if kid.nodeName() == "Exchange":
+                out[line] = []
+                walk(kid, out[line])
+            else:
+                side.append(line)
+                walk(kid, side)
+
+    walk(plan, [])
+    return out
+
+
+def test_recrawl_exchange_partitions_on_canonical_url(spark):
+    """The recrawl window's Exchange hash-partitions on the canonical url
+    itself, which compresses alongside the url the row carries, and no
+    xxhash64 key is computed below it."""
+    import datetime
+    import re
+
+    from wikidataquality_spark.operators.dedup import drop_url_dups_narrow
+
+    t0 = datetime.datetime(2025, 1, 1)
+    caps = spark.createDataFrame(
+        [("https://site.com/a", t0, b"a"), ("https://www.site.com/a", t0, b"b")],
+        "url string, warc_ts timestamp, html binary",
+    )
+    ((ex, side),) = _map_sides(drop_url_dups_narrow(caps)).items()
+    assert re.match(r"Exchange hashpartitioning\(_canon#\d+, \d+\)", ex), ex
+    assert not any("xxhash64" in s for s in side), side
+
+
+@pytest.mark.parametrize("id_type", ["string", "long"])
+def test_dup_marks_sorts_string_ids_under_both_windows(spark, id_type):
+    """dup_marks over string ids sorts its keyed rows by id under both the
+    exact-window and the band-window Exchange, so the map output is written
+    in url order; over long ids there is no such sort, since it would
+    shrink nothing."""
+    import re
+
+    from wikidataquality_spark.operators.dedup import dup_marks
+
+    ids = [f"u{i}" for i in range(20)] if id_type == "string" else list(range(20))
+    df = spark.createDataFrame(
+        [(u, f"alpha{i % 7} beta gamma {i % 5} " * 4) for i, u in enumerate(ids)],
+        f"url {id_type}, text string",
+    )
+    sides = _map_sides(dup_marks(df))
+    for key in ("_h", "_band_key"):
+        (side,) = [
+            s for ex, s in sides.items() if ex.startswith(f"Exchange hashpartitioning({key}#")
+        ]
+        id_sorts = [s for s in side if re.match(r"Sort \[url#\d+L? ASC NULLS FIRST\], false", s)]
+        assert len(id_sorts) == (id_type == "string"), (key, side)

@@ -121,6 +121,38 @@ def test_incremental_validate_foreachbatch(spark, tmp_path):
     assert {"url", "keep", "scrubbed_text"} <= set(out.columns)
 
 
+def test_incremental_validate_sinks_read_outside_spark(spark, tmp_path):
+    """Both epoch-partitioned sinks read back whole outside Spark through
+    the documented pyarrow recipe, while pyarrow's default reader, which
+    skips `_`-prefixed paths such as `_epoch=0`, sees none of their rows."""
+    import os
+
+    import pyarrow.dataset as ds
+    import pyarrow.parquet as pq
+
+    from wikidataquality_spark.datagen import write_pages_parquet
+    from wikidataquality_spark.streaming.windows import incremental_validate
+
+    src_dir = str(tmp_path / "pages_src")
+    os.makedirs(src_dir)
+    write_pages_parquet(os.path.join(src_dir, "pages.parquet"), 60, seed=5)
+    stream = spark.readStream.schema(spark.read.parquet(src_dir).schema).parquet(src_dir)
+    sink, ckpt, state = (str(tmp_path / d) for d in ("sink", "ckpt", "state"))
+    incremental_validate(spark, stream, sink, ckpt, state_dir=state).awaitTermination(120)
+
+    for path in (sink, state):
+        want = spark.read.parquet(path)
+        got = ds.dataset(
+            path, format="parquet", partitioning="hive", ignore_prefixes=[".", "_SUCCESS"]
+        ).to_table()
+        assert got.num_rows == want.count() > 0
+        assert set(got.column_names) == set(want.columns)
+        assert sorted(map(str, got.column("url").to_pylist())) == sorted(
+            str(r["url"]) for r in want.select("url").collect()
+        )
+        assert pq.read_table(path).num_rows == 0
+
+
 def test_stateful_dup_marks_equals_global(spark):
     """Incremental dedup parity: splitting a corpus into url-ordered batches
     and deduping each against the accumulated fingerprint state yields the

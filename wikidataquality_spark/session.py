@@ -38,8 +38,11 @@ _DEFAULTS = {
     # zstd (level 1, Spark's default level) for every shuffle block, shuffle
     # spill and broadcast; Spark's default codec is lz4. Parquet output has
     # its own codec, so output bytes do not change. Shuffle write per
-    # exchange, steady-state call 2 of one perfbench session (seed 7,
-    # 4 vCPU, local[4]), from the status store:
+    # exchange, lz4 versus zstd, as measured when zstd was adopted (the
+    # dedup exchanges of that time), steady-state call 2 of one perfbench
+    # session (seed 7, 4 vCPU, local[4]), from the status store. Later
+    # changes to what the exchanges carry moved the crawl-warc zstd
+    # figures; ROADMAP.md "Recent" has the current ones:
     #
     #   exchange                              rows      lz4          zstd
     #   crawl-warc recrawl rank() window      4,620   193,834 B   158,473 B

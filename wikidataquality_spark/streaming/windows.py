@@ -194,7 +194,20 @@ def incremental_validate(
     batch computation on the full corpus: the per-batch window over
     state ∪ batch sees exactly the docs that precede each url in the total
     order. Without state_dir each batch dedups only within itself (the old
-    behavior). At 10^12 docs the state table is Iceberg, ~(1+B)·24 B/doc."""
+    behavior). At 10^12 docs the state table is Iceberg, ~(1+B)·24 B/doc.
+
+    Reading either sink outside Spark: the partition directories are
+    `_epoch=N`, and pyarrow's dataset reader — so `pandas.read_parquet` and
+    `pyarrow.parquet.read_table` on the directory — skips every path that
+    starts with `_` as metadata, so a 200-row sink reads back as 0 rows.
+    Keep the `_epoch=` directories and skip only Spark's markers:
+
+        pyarrow.dataset.dataset(path, format="parquet", partitioning="hive",
+                                ignore_prefixes=[".", "_SUCCESS"])
+
+    A write that crashed before its commit can leave a `_temporary`
+    directory behind, which this recipe would read; Spark's own reader
+    skips it."""
     from pyspark.sql import functions as SF
     from pyspark.sql import types as ST
 
